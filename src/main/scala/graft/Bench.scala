@@ -38,11 +38,9 @@ object Bench {
     // SPARK_GRAFT_LAKE: unset → default /tmp lake; "off" → disabled;
     // anything else → that path
     val lakeRoot = Staging.lakeRootFromEnv(default = "/tmp/graft_lake")
-    val spark = SparkSession.builder()
+    val spark = Graft.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
       // same lake as Verify: the first run after a corpus change pays
       // the index/model/edge-table builds and publishes them; steady

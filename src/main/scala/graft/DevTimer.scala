@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage timing breakdown for the bench tail — the artifact that
   * separates "the plan regressed" from "the host was loaded": each
@@ -19,10 +18,8 @@ object DevTimer {
       taskMs: Long, shufReadMB: Double, shufWriteMB: Double, inputMB: Double)
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = Graft.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       // default NO lake (pure session staging); set SPARK_GRAFT_LAKE to
       // time the bench's lake-serving path (run 1 = serve, not build)
       .config(Staging.LakeConfKey, Staging.lakeRootFromEnv(default = ""))

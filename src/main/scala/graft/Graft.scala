@@ -4,19 +4,40 @@ import org.apache.spark.sql.SparkSession
 
 /** Library entry point: a SparkSession.Builder pre-configured the way
   * every graft deployment needs — the SQL extensions (native
-  * functions + the CIDR literal-folding optimizer rule) and a UTC
+  * functions + the CIDR literal-folding optimizer rule), a UTC
   * session timezone (flow timestamps are wall-clock; a host-local
-  * zone silently shifts every window/date bucket).
+  * zone silently shifts every window/date bucket) and a codegen cache
+  * that holds graft's working set. Every graft entry point (Bench,
+  * Verify, the specs, the tools) builds its session here.
   *
   * Everything else (master, shuffle partitions, memory) is the
   * caller's: `Graft.builder().master("local[8]").getOrCreate()`.
   */
 object Graft {
 
+  /** Spark's JVM-wide cache of compiled generated classes. */
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** [[CodegenCacheKey]] sized to graft's working set. Spark's default
+    * of 100 entries is below what the query surface cycles through:
+    * the 12 flow-dashboard panels alone need 143 distinct generated
+    * classes (sf0.01), and an LRU smaller than its working set misses
+    * on every lookup. Each miss is a Janino compile plus HotSpot JIT
+    * of a brand-new class: about 7.8 compiles per panel in steady
+    * state. A cached entry costs about 28 KB of driver heap (measured
+    * by invalidating the warm dashboard cache), so 1000 entries bound
+    * the cache near 28 MB while leaving room for the rest of the
+    * query surface.
+    */
+  val CodegenCacheEntries = 1000
+
+  /** The codegen cache size is a static conf: only a session CREATED
+    * through this builder gets it. */
   def builder(): SparkSession.Builder =
     SparkSession.builder()
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
+      .config(CodegenCacheKey, CodegenCacheEntries.toString)
 
   /** [[builder]] plus a RELIABLE checkpoint directory: the iterative
     * operators (cluster closure, ngram postings) truncate lineage via
@@ -43,6 +64,15 @@ object Graft {
     // longer match the oracle.
     register(spark)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    // the codegen cache size is static: a pre-existing session keeps
+    // whatever it was created with, so all that can be done is say so
+    val codegenEntries = spark.conf.get(CodegenCacheKey).toInt
+    if (codegenEntries < CodegenCacheEntries)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"$CodegenCacheKey is $codegenEntries on this already-running session, " +
+        s"below graft's $CodegenCacheEntries: generated code will be recompiled " +
+        "on every query once the cache cycles. Create the session through " +
+        "graft.Graft.builder() to size it.")
     spark
   }
 

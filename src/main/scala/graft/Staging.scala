@@ -436,11 +436,9 @@ object Staging {
     * posture with [[Staging.RequireDurableConfKey]], which makes
     * [[getOrBuild]] fail loudly rather than stage memory-only entries.
     */
-  private[graft] final class SessionCache {
+  private[graft] final class SessionCache extends SessionScoped {
     private val entries =
       new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-    private val cleanupInstalled =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
 
     /** Build-at-most-once. NOT `computeIfAbsent`: a build thunk may
       * itself stage a dependency (band_index → doc_sigs), and the JDK
@@ -507,24 +505,82 @@ object Staging {
       * going away with the app; reliable-checkpoint FILES are what
       * must not leak, and deleting those is a driver-side FS call.
       */
-    private def installCleanup(spark: SparkSession): Unit =
+    protected def drop(spark: SparkSession): Unit = {
+      val it = entries.entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        if (e.getKey._1 == spark) {
+          it.remove()
+          try release(e.getValue)
+          catch { case _: Exception => () } // context already down
+        }
+      }
+    }
+  }
+
+  /** The session-end half of every session-keyed map: the first time a
+    * map sees a session it installs one listener that calls [[drop]]
+    * when the session's application ends, so no map pins a stopped
+    * `SparkSession` (or what it holds) for the JVM's lifetime.
+    */
+  private[graft] abstract class SessionScoped {
+    private val cleanupInstalled =
+      java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
+
+    /** Evict everything held for `spark`; runs on the listener bus. */
+    protected def drop(spark: SparkSession): Unit
+
+    protected final def installCleanup(spark: SparkSession): Unit =
       if (cleanupInstalled.add(spark)) {
         spark.sparkContext.addSparkListener(
           new org.apache.spark.scheduler.SparkListener {
             override def onApplicationEnd(
                 end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
               cleanupInstalled.remove(spark)
-              val it = entries.entrySet().iterator()
-              while (it.hasNext) {
-                val e = it.next()
-                if (e.getKey._1 == spark) {
-                  it.remove()
-                  try release(e.getValue)
-                  catch { case _: Exception => () } // context already down
-                }
-              }
+              drop(spark)
             }
           })
       }
+  }
+
+  /** Per-session memo of a value resolved from one table snapshot:
+    * for each (session, path) it holds the value resolved at the
+    * path's current [[corpusFingerprint]]. Every lookup re-lists the
+    * path (metadata only, no data read); a moved fingerprint resolves
+    * again and replaces the stale entry, so a rewritten table is never
+    * served from the old snapshot. A path that does not exist is not
+    * memoized: `resolve` runs and reports it.
+    */
+  private[graft] final class SnapshotMemo[V] extends SessionScoped {
+    private val entries =
+      new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, V)]()
+
+    def apply(spark: SparkSession, path: String)(resolve: => V): V = {
+      val fp =
+        try Some(corpusFingerprint(spark, path))
+        catch { case _: java.io.FileNotFoundException => None }
+      fp match {
+        case None => resolve
+        case Some(f) =>
+          val hit = entries.get((spark, path))
+          if (hit != null && hit._1 == f) hit._2
+          else {
+            installCleanup(spark)
+            val v = resolve
+            entries.put((spark, path), (f, v))
+            v
+          }
+      }
+    }
+
+    /** Number of snapshots held for `spark`. */
+    def size(spark: SparkSession): Int = {
+      var n = 0
+      entries.keySet().forEach(k => if (k._1 == spark) n += 1)
+      n
+    }
+
+    protected def drop(spark: SparkSession): Unit =
+      entries.keySet().removeIf(_._1 == spark)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -19,8 +21,21 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Resolved plans per (session, table path, snapshot fingerprint).
+    * Resolving a parquet path lists its files and infers the schema
+    * from a footer — about 70 ms, paid by every query that reads the
+    * table. The memo pays it once per snapshot; each call still gets
+    * its own fresh-id instance of the plan ([[Bridge.freshInstance]]),
+    * so nothing is cached as data and results and plans are those of
+    * a fresh read.
+    */
+  private[graft] val loaded = new Staging.SnapshotMemo[LogicalPlan]
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    Bridge.freshInstance(spark,
+      loaded(spark, path)(spark.read.parquet(path).queryExecution.analyzed))
+  }
 
   /** `events.ts` has shipped in two physical shapes across testdata
     * generations: INT64 TIMESTAMP(NANOS) (which Spark 4's parquet

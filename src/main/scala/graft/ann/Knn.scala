@@ -951,13 +951,14 @@ object Knn {
     * CANDIDATE ROW (measured: 36 s of summed task time on a 1.1 MB
     * candidate shuffle, the entire ivfpq_res steady tail). The dense
     * array makes each lookup one O(1) index. Slots for (sub, cid)
-    * pairs absent from the trained codebook hold 0 and are
+    * pairs absent from the trained codebook stay NULL and are
     * unreachable: the encoder argmins over the SAME codebook rows, so
-    * a code never references a dropped entry. Values are the same
-    * quantized longs in the same fold order — scores are
-    * bit-identical.
+    * a code never references a dropped entry — and if codebook drift
+    * ever breaks that, the score comes out null instead of silently
+    * wrong. Values are the same quantized longs in the same fold
+    * order — scores are bit-identical.
     */
-  private def lutToArr(lut: DataFrame, v: Column, codes: Int): DataFrame = {
+  private[graft] def lutToArr(lut: DataFrame, v: Column, codes: Int): DataFrame = {
     import lut.sparkSession.implicits._
     lut.groupBy($"probe_id")
       .agg(map_from_entries(collect_list(struct(
@@ -965,7 +966,7 @@ object Knn {
         floor(v * lit(1.0e9) + lit(0.5)).cast("long").as("v")))).as("m"))
       .select($"probe_id", transform(
         sequence(lit(0L), lit(PqSubspaces.toLong * codes - 1)),
-        k => coalesce(element_at($"m", k), lit(0L))).as("lutm"))
+        k => element_at($"m", k)).as("lutm"))
   }
 
   /** Ordered ADC fold: Σ_sub lutm[sub·codes + cds[sub+1]], long-summed
@@ -975,7 +976,7 @@ object Knn {
   /** See [[graft.Staging.spreadNarrow]]. */
   private def spread(df: DataFrame): DataFrame = graft.Staging.spreadNarrow(df)
 
-  private def adcScore(cds: Column, lutm: Column, codes: Int): Column =
+  private[graft] def adcScore(cds: Column, lutm: Column, codes: Int): Column =
     aggregate(sequence(lit(0), lit(PqSubspaces - 1)), lit(0L),
       (acc, sub) => acc + element_at(lutm,
         (sub * codes + element_at(cds, sub + lit(1))).cast("int") + lit(1)))

@@ -26,7 +26,18 @@ object FlowAnalytics {
     * da octets: 192.168 . k%256 . user_id%256
     */
   def asFlows(spark: SparkSession, dir: String): DataFrame =
-    flowsOf(graft.Tables.events(spark, dir))
+    org.apache.spark.sql.graftbridge.Bridge.freshInstance(spark,
+      flowsResolved(spark, s"$dir/events.parquet")(
+        flowsOf(graft.Tables.events(spark, dir)).queryExecution.analyzed))
+
+  /** The analyzed [[flowsOf]] plan per (session, events snapshot): its
+    * 15 chained `withColumn`s each re-analyze the growing plan (about
+    * 40 ms a call), so every dashboard panel used to pay that before
+    * its own query. Memoized like [[graft.Tables.load]]: each call gets
+    * a fresh-id instance, nothing is cached as data.
+    */
+  private[graft] val flowsResolved = new graft.Staging.SnapshotMemo[
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
 
   /** The events→flows mapping over ANY events frame — pure column
     * ops, so it composes onto the streaming source too (E19).
@@ -789,7 +800,7 @@ object FlowAnalytics {
 
   def distinctHll(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.Tables.events(spark, dir)
+    asFlows(spark, dir)
       .groupBy($"event_type")
       .agg(
         graft.functions.HllAgg.hll_sketch($"user_id".cast("string"), HllP).as("sk"),

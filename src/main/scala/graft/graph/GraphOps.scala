@@ -1061,38 +1061,43 @@ object GraphOps {
     * drops from O(rounds × triangles) to O(triangles + Σ|drops|·deg).
     */
   private[graft] def ktruss4Of(edges0: DataFrame,
-      maxRounds: Int = Ktruss4MaxRounds,
-      support0: Option[DataFrame] = None): DataFrame = {
+      maxRounds: Int = Ktruss4MaxRounds): DataFrame = {
     import edges0.sparkSession.implicits._
-    // round 1: the one full support rollup — or, when the caller
-    // already has the per-snapshot (u, v, support) table (B61's
-    // staged `coorder_support` is EXACTLY this recount over the same
-    // edge set), start from it and skip the m^1.5 rollup entirely.
-    // The given frame is copied via materialize so the round loop's
-    // release() of superseded rounds never frees a shared staged
-    // artifact's blocks.
-    var scoredFrame = support0 match {
-      case Some(sup) =>
-        materialize(sup.select($"u", $"v", $"support"))
-      case None =>
-        val e0 = materialize(edges0.select($"u", $"v"))
-        val (_, tri0) = orientedTriangles(
-          org.apache.spark.sql.graftbridge.Bridge.freshStatsLeaf(e0))
-        val sup0 = tri0.select(explode(array(
-            struct(least($"s", $"y").as("u"), greatest($"s", $"y").as("v")),
-            struct(least($"s", $"z").as("u"), greatest($"s", $"z").as("v")),
-            struct(least($"y", $"z").as("u"), greatest($"y", $"z").as("v"))))
-            .as("e"))
-          .select($"e.u".as("u"), $"e.v".as("v"))
-          .groupBy($"u", $"v").agg(count(lit(1)).as("support"))
-        // the materialized frame backing `scored` (freshStatsLeaf
-        // wraps it in a new plan), tracked so superseded rounds can
-        // be released
-        val sf = materialize(e0.join(sup0, Seq("u", "v"), "left")
-          .select($"u", $"v", coalesce($"support", lit(0L)).as("support")))
-        release(e0)
-        sf
-    }
+    // round 1: the one full support rollup
+    val e0 = materialize(edges0.select($"u", $"v"))
+    val (_, tri0) = orientedTriangles(
+      org.apache.spark.sql.graftbridge.Bridge.freshStatsLeaf(e0))
+    val sup0 = tri0.select(explode(array(
+        struct(least($"s", $"y").as("u"), greatest($"s", $"y").as("v")),
+        struct(least($"s", $"z").as("u"), greatest($"s", $"z").as("v")),
+        struct(least($"y", $"z").as("u"), greatest($"y", $"z").as("v"))))
+        .as("e"))
+      .select($"e.u".as("u"), $"e.v".as("v"))
+      .groupBy($"u", $"v").agg(count(lit(1)).as("support"))
+    val sf = materialize(e0.join(sup0, Seq("u", "v"), "left")
+      .select($"u", $"v", coalesce($"support", lit(0L)).as("support")))
+    release(e0)
+    ktruss4Peel(sf, maxRounds)
+  }
+
+  /** [[ktruss4Of]] started from a ready per-edge (u, v, support) table
+    * — the full round-1 recount, as B61's staged `coorder_support` is
+    * — skipping the m^1.5 rollup. The table's rows ARE the edge set
+    * peeled. It is copied via materialize so the round loop's release()
+    * of superseded rounds never frees a shared staged artifact's blocks.
+    */
+  private[graft] def ktruss4FromSupport(support0: DataFrame,
+      maxRounds: Int = Ktruss4MaxRounds): DataFrame =
+    ktruss4Peel(materialize(support0.select("u", "v", "support")), maxRounds)
+
+  /** The peel rounds over `scored0`, the materialized round-1 support
+    * table, which the loop owns and releases.
+    */
+  private def ktruss4Peel(scored0: DataFrame, maxRounds: Int): DataFrame = {
+    import scored0.sparkSession.implicits._
+    // the materialized frame backing `scored` (freshStatsLeaf wraps it
+    // in a new plan), tracked so superseded rounds can be released
+    var scoredFrame = scored0
     // fresh-stats leaf: each round's plan references `scored` several
     // times (drops, keep, adjacency both ways), so inherited
     // checkpoint stats would compound across rounds
@@ -1156,8 +1161,7 @@ object GraphOps {
     // round-0 recount — instead of re-rolling the oriented-triangle
     // support (the peel's single most expensive pass).
     val truss = stagedGraph(spark, dir, "ktruss4_truss") {
-      materialize(ktruss4Of(coOrderEdgesStaged(spark, dir),
-        support0 = Some(coOrderSupportStaged(spark, dir))))
+      materialize(ktruss4FromSupport(coOrderSupportStaged(spark, dir)))
     }
     truss.orderBy($"support".desc, $"u", $"v").limit(Ktruss4TopN)
   }

@@ -1,7 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ⇄ Expression bridge.
@@ -15,6 +17,39 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A new Dataset over an already-resolved `plan` whose leaves and
+    * aliases carry FRESH expression ids — what the analyzer does to a
+    * table referenced twice in one SQL statement. The resolved
+    * relation inside (file listing, inferred schema) is shared, so
+    * handing every caller its own instance of one resolved plan skips
+    * re-resolution while keeping calls as independent as separate
+    * reads: self-joins of two results stay unambiguous. Supports the
+    * plans graft memoizes — `Project` chains over relation leaves.
+    */
+  def freshInstance(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan)
+      : org.apache.spark.sql.DataFrame = {
+    val fresh = plan.transformUpWithNewOutput {
+      case leaf: MultiInstanceRelation =>
+        val n = leaf.newInstance()
+        n -> leaf.asInstanceOf[LogicalPlan].output.zip(n.output)
+      case p: Project =>
+        val list = p.projectList.map {
+          case a: Alias => a.newInstance()
+          case e => e
+        }
+        p.copy(projectList = list) -> p.output.zip(list.map(_.toAttribute))
+      case other =>
+        throw new IllegalArgumentException(
+          s"freshInstance: unsupported plan node ${other.nodeName}")
+    }
+    // copied nodes share the original's Dataset-id tag SET, which every
+    // new Dataset adds its id to: left in place, all instances would
+    // claim each other's ids and a self-join would be flagged ambiguous
+    fresh.foreach(_.unsetTagValue(org.apache.spark.sql.classic.Dataset.DATASET_ID_TAG))
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], fresh)
+  }
 
   /** Rebuild a checkpointed leaf WITHOUT its inherited `originStats`.
     *

@@ -13,6 +13,11 @@ class GraftSessionSpec extends SparkSpecBase {
       .head().getDouble(0) === 1.0)
   }
 
+  test("Graft.builder sizes Spark's codegen cache to graft's working set") {
+    // a static conf: the shared session was created through the builder
+    assert(spark.conf.get(Graft.CodegenCacheKey) === Graft.CodegenCacheEntries.toString)
+  }
+
   test("Graft.session wires a reliable checkpoint dir and materialize uses it") {
     import spark.implicits._
     val dir = tmpDir("graft_ckpt")

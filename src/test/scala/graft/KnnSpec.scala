@@ -439,4 +439,19 @@ class KnnSpec extends SparkSpecBase {
       assert(rs.forall(_._2 != p), s"probe $p returned itself")
     }
   }
+
+  test("ADC LUT: a code slot missing from the codebook scores null, not 0") {
+    import spark.implicits._
+    val codes = 2
+    val m = Knn.PqSubspaces
+    // every (sub, cid) slot trained except (0, 1)
+    val lut = (for (sub <- 0 until m; cid <- 0 until codes if !(sub == 0 && cid == 1))
+      yield (0L, sub, cid, 0.25)).toDF("probe_id", "sub", "cid", "d")
+    val vecs = Seq((1L, Seq.fill(m)(0)), (2L, 1 +: Seq.fill(m - 1)(0))).toDF("vec_id", "cds")
+    val got = Knn.lutToArr(lut, $"d", codes).crossJoin(vecs)
+      .select($"vec_id", Knn.adcScore($"cds", $"lutm", codes).as("score"))
+      .orderBy($"vec_id").collect()
+    assert(got(0).getDouble(1) === 0.25 * m)
+    assert(got(1).isNullAt(1), "a code on a missing slot must not score as a 0 term")
+  }
 }

@@ -6,12 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session per suite (lazy, UTC, quiet). */
 trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = Graft.builder()
       .master("local[4]")
       .appName(getClass.getSimpleName)
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)

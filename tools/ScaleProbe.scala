@@ -84,20 +84,16 @@ object ScaleProbe {
     "graph_link_jaccard")
 
   def main(args: Array[String]): Unit = {
-    val spark0 = SparkSession.builder().master("local[32]")
+    val spark0 = Graft.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark0.sparkContext.setLogLevel("ERROR")
     build(spark0)
     spark0.stop()
     val results = for (dir <- Seq("/root/testdata/sf0.1", Out)) yield {
-      val spark = SparkSession.builder().master("local[32]")
+      val spark = Graft.builder().master("local[32]")
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", "graft.functions.GraftExtensions")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
