@@ -1,13 +1,15 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** Library entry point: a SparkSession.Builder pre-configured the way
   * every graft deployment needs — the SQL extensions (native
   * functions + the CIDR literal-folding optimizer rule), a UTC
   * session timezone (flow timestamps are wall-clock; a host-local
-  * zone silently shifts every window/date bucket) and a codegen cache
-  * that holds graft's working set. Every graft entry point (Bench,
+  * zone silently shifts every window/date bucket), a codegen cache
+  * that holds graft's working set and a local filesystem that forks
+  * no process per file written. Every graft entry point (Bench,
   * Verify, the specs, the tools) builds its session here.
   *
   * Everything else (master, shuffle partitions, memory) is the
@@ -31,13 +33,23 @@ object Graft {
     */
   val CodegenCacheEntries = 1000
 
-  /** The codegen cache size is a static conf: only a session CREATED
-    * through this builder gets it. */
+  /** Settings that bind only when the SparkContext is created, so a
+    * session that already runs keeps whatever it was created with:
+    * the codegen cache size, and Hadoop's local filesystem for the
+    * `FileSystem` and `FileContext` APIs. graft's filesystem classes
+    * (`graft.fs`) set permissions and read link status through
+    * `java.nio` instead of forking `chmod` and `readlink` for every
+    * file written.
+    */
+  val StaticConfs: Seq[(String, String)] = Seq(
+    CodegenCacheKey -> CodegenCacheEntries.toString,
+    "spark.hadoop.fs.file.impl" -> classOf[graft.fs.GraftLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.fs.GraftLocalFs].getName)
+
   def builder(): SparkSession.Builder =
-    SparkSession.builder()
+    StaticConfs.foldLeft(SparkSession.builder()
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(CodegenCacheKey, CodegenCacheEntries.toString)
+      .config("spark.sql.session.timeZone", "UTC")) { case (b, (k, v)) => b.config(k, v) }
 
   /** [[builder]] plus a RELIABLE checkpoint directory: the iterative
     * operators (cluster closure, ngram postings) truncate lineage via
@@ -64,17 +76,23 @@ object Graft {
     // longer match the oracle.
     register(spark)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // the codegen cache size is static: a pre-existing session keeps
-    // whatever it was created with, so all that can be done is say so
-    val codegenEntries = spark.conf.get(CodegenCacheKey).toInt
-    if (codegenEntries < CodegenCacheEntries)
+    // static settings cannot be changed on a running session, so all
+    // that can be done is say which ones differ
+    val differing = differingStaticConfs(spark.sparkContext.getConf)
+    if (differing.nonEmpty)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"$CodegenCacheKey is $codegenEntries on this already-running session, " +
-        s"below graft's $CodegenCacheEntries: generated code will be recompiled " +
-        "on every query once the cache cycles. Create the session through " +
-        "graft.Graft.builder() to size it.")
+        s"This already-running session differs from graft's static settings " +
+        s"(${differing.mkString(", ")}): generated code may be recompiled once " +
+        "the codegen cache cycles, and local files written may fork chmod and " +
+        "readlink. Create the session through graft.Graft.builder() to get them.")
     spark
   }
+
+  /** The [[StaticConfs]] that `conf` does not match, as `key=value`. */
+  private[graft] def differingStaticConfs(conf: SparkConf): Seq[String] =
+    StaticConfs.collect {
+      case (k, v) if !conf.getOption(k).contains(v) => s"$k=${conf.getOption(k).getOrElse("<unset>")}"
+    }
 
   /** Register the SQL functions on an EXISTING session (extensions
     * only bind at session creation) — for notebook/shared-session

@@ -170,15 +170,20 @@ object Staging {
   def corpusFingerprint(spark: SparkSession, dir: String): String = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(root, true)
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.toString.stripPrefix(root.toString)
-      // _SUCCESS / .crc markers churn without content meaning
-      if (!name.endsWith("_SUCCESS") && !name.endsWith(".crc"))
-        entries += s"$name|${f.getLen}|${f.getModificationTime}"
+    // listStatus, not listFiles: listFiles wraps every status in a
+    // LocatedFileStatus, whose constructor reads the file's permissions
+    // — a forked `ls -ld` per file on Hadoop's local filesystem
+    def walk(p: Path): Unit = fs.listStatus(p).foreach { f =>
+      if (f.isDirectory) walk(f.getPath)
+      else {
+        val name = f.getPath.toString.stripPrefix(root.toString)
+        // _SUCCESS / .crc markers churn without content meaning
+        if (!name.endsWith("_SUCCESS") && !name.endsWith(".crc"))
+          entries += s"$name|${f.getLen}|${f.getModificationTime}"
+      }
     }
+    walk(root)
     val md = java.security.MessageDigest.getInstance("SHA-256")
     entries.sorted.foreach(e => md.update(e.getBytes("UTF-8")))
     md.digest().take(8).map(b => f"$b%02x").mkString

@@ -18,6 +18,29 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(spark.conf.get(Graft.CodegenCacheKey) === Graft.CodegenCacheEntries.toString)
   }
 
+  test("Graft.builder wires graft's local filesystem for FileSystem and FileContext") {
+    val confs = Graft.StaticConfs.toMap
+    assert(confs("spark.hadoop.fs.file.impl") === classOf[graft.fs.GraftLocalFileSystem].getName)
+    assert(confs("spark.hadoop.fs.AbstractFileSystem.file.impl") ===
+      classOf[graft.fs.GraftLocalFs].getName)
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI("file:///"), hadoopConf)
+    assert(fs.getClass === classOf[graft.fs.GraftLocalFileSystem])
+    assert(fs.asInstanceOf[org.apache.hadoop.fs.LocalFileSystem].getRaw.getClass ===
+      classOf[graft.fs.GraftRawLocalFileSystem])
+    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+      new java.net.URI("file:///"), hadoopConf)
+    assert(fc.getDefaultFileSystem.getClass === classOf[graft.fs.GraftLocalFs])
+  }
+
+  test("Graft.session names every static setting a running session lacks") {
+    // the suite's session was created through the builder
+    assert(Graft.differingStaticConfs(spark.sparkContext.getConf).isEmpty)
+    val bare = new org.apache.spark.SparkConf(false).set(Graft.CodegenCacheKey, "100")
+    assert(Graft.differingStaticConfs(bare) === Seq(s"${Graft.CodegenCacheKey}=100",
+      "spark.hadoop.fs.file.impl=<unset>", "spark.hadoop.fs.AbstractFileSystem.file.impl=<unset>"))
+  }
+
   test("Graft.session wires a reliable checkpoint dir and materialize uses it") {
     import spark.implicits._
     val dir = tmpDir("graft_ckpt")
