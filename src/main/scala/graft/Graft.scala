@@ -8,9 +8,11 @@ import org.apache.spark.sql.SparkSession
   * functions + the CIDR literal-folding optimizer rule), a UTC
   * session timezone (flow timestamps are wall-clock; a host-local
   * zone silently shifts every window/date bucket), a codegen cache
-  * that holds graft's working set and a local filesystem that forks
-  * no process per file written. Every graft entry point (Bench,
-  * Verify, the specs, the tools) builds its session here.
+  * that holds graft's working set, a local filesystem that forks
+  * no process per file written and a file-listing threshold that
+  * keeps each micro-batch's listing on the driver. Every graft entry
+  * point (Bench, Verify, the specs, the tools) builds its session
+  * here.
   *
   * Everything else (master, shuffle partitions, memory) is the
   * caller's: `Graft.builder().master("local[8]").getOrCreate()`.
@@ -46,10 +48,37 @@ object Graft {
     "spark.hadoop.fs.file.impl" -> classOf[graft.fs.GraftLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.fs.GraftLocalFs].getName)
 
+  /** Most files a graft stream source takes into one micro-batch
+    * (`maxFilesPerTrigger` of `NfdumpCsv.readStream` and
+    * `FlowSources.jsonlStream`).
+    */
+  val MicroBatchMaxFiles = 64
+
+  /** Above this many paths, Spark's file index lists them in a Spark
+    * job with one task per path instead of on the driver.
+    */
+  val ListingThresholdKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+  /** Settings a running session can change, so [[session]] applies
+    * them again to a session it did not create: the UTC time zone,
+    * and a listing threshold of [[MicroBatchMaxFiles]]. The file
+    * stream source hands each micro-batch's files, already known from
+    * its own directory scan, to a new file index as plain paths; at
+    * Spark's default threshold of 32, a batch of 33–64 files is
+    * listed a second time by a job of one task per file: a 50-file
+    * batch's `getBatch` took 571–702 ms on 4 cores, against 23–34 ms
+    * listed on the driver. A directory tree with more entries than
+    * the threshold still lists in parallel.
+    */
+  val RuntimeConfs: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    ListingThresholdKey -> MicroBatchMaxFiles.toString)
+
   def builder(): SparkSession.Builder =
-    StaticConfs.foldLeft(SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")) { case (b, (k, v)) => b.config(k, v) }
+    (StaticConfs ++ RuntimeConfs).foldLeft(SparkSession.builder()
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")) {
+      case (b, (k, v)) => b.config(k, v)
+    }
 
   /** [[builder]] plus a RELIABLE checkpoint directory: the iterative
     * operators (cluster closure, ngram postings) truncate lineage via
@@ -69,13 +98,15 @@ object Graft {
     spark.sparkContext.setCheckpointDir(checkpointDir)
     // getOrCreate may have returned a PRE-EXISTING session whose
     // creation never saw the builder's configs: extensions only bind
-    // at session creation, so late-register the functions (idempotent)
-    // and set the timezone through the runtime conf (settable any
-    // time) — otherwise a shared-session caller gets 'undefined
-    // function' or, worse, host-local-zone window buckets that no
-    // longer match the oracle.
+    // at session creation, so late-register the functions (idempotent).
+    // getOrCreate copies the builder's runtime confs onto such a
+    // session, but `configure` may have overridden them, so set them
+    // here last — otherwise a shared-session caller gets 'undefined
+    // function', host-local-zone window buckets that no longer match
+    // the oracle, or a listing job in every micro-batch of more than
+    // 32 files.
     register(spark)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    RuntimeConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     // static settings cannot be changed on a running session, so all
     // that can be done is say which ones differ
     val differing = differingStaticConfs(spark.sparkContext.getConf)

@@ -83,7 +83,7 @@ object NfdumpCsv {
       .option("header", "true")
       .option("mode", "DROPMALFORMED")
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss[.SSS]")
-      .option("maxFilesPerTrigger", "64")
+      .option("maxFilesPerTrigger", graft.Graft.MicroBatchMaxFiles.toString)
       .schema(FlowSchema.nfdumpCsvSchema)
       .csv(dir)
       .where(org.apache.spark.sql.functions.col("ts").isNotNull &&

@@ -11,10 +11,14 @@ import graft.flow.FlowSchema
   */
 object FlowSources {
 
-  /** Warehouse scan with a date range — the `date=` partition layout
-    * written by PartitionedParquetSink turns this into partition
-    * pruning (directories outside the range are never listed into
-    * the scan), which is what makes "last 24h over 100 TB" cheap.
+  /** Warehouse scan with a date range over the `date=` partition
+    * layout written by PartitionedParquetSink. The range becomes
+    * partition pruning: files outside it are never read, no task
+    * opens them. They are still listed: reading a path builds an
+    * `InMemoryFileIndex` that lists every `date=` directory and its
+    * files when the relation is created (in a Spark job once there
+    * are more directories than `Graft.ListingThresholdKey`), so
+    * listing cost grows with the whole warehouse, not with the range.
     */
   def nflows(spark: SparkSession, root: String,
       fromDate: String, toDate: String): DataFrame =
@@ -39,7 +43,7 @@ object FlowSources {
       .schema(FlowSchema.nflowsSchema)
       .option("mode", "DROPMALFORMED")
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss[.SSS]")
-      .option("maxFilesPerTrigger", "64")
+      .option("maxFilesPerTrigger", graft.Graft.MicroBatchMaxFiles.toString)
       .json(dir)
       .where(col("ts").isNotNull && col("te").isNotNull)
 }

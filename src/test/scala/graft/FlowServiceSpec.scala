@@ -67,6 +67,44 @@ class FlowServiceSpec extends SparkSpecBase {
     assert(gotB.select("flowsrc").head().getString(0) === "b") // defaulted
   }
 
+  test("a micro-batch of more than 32 files runs one Spark job, with no listing job") {
+    // the file source knows the batch's files from its own scan; at
+    // Spark's default listing threshold (32) they are listed again by
+    // a job of one task per file before the write job runs
+    val watch = tmpDir("lwatch"); val out = tmpDir("lout"); val ckpt = tmpDir("lckpt")
+    val n = 40
+    (1 to n).foreach(i => flowFile(watch, f"nfcapd.$i%02d.csv", "2024-05-01 10:00:00",
+      s"192.168.0.$i"))
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val marker = "flow-service-spec-listener-marker"
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.job.description") == marker)) markerSeen.countDown()
+        else jobs.add((props.flatMap(p => Option(p.getProperty("sql.streaming.queryId")))
+          .getOrElse(""), e.stageInfos.map(_.numTasks).sum))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = FlowPipeline.start(spark, watch, out, ckpt, "site-l", availableNowCatchup = true)
+      q.awaitTermination()
+      // listener events arrive in order: once the marker job is seen,
+      // every job of the query has been seen too
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(q.recentProgress.count(_.numInputRows > 0) === 1)
+      import scala.jdk.CollectionConverters._
+      val tasks = jobs.asScala.collect { case (id, t) if id == q.id.toString => t }.toSeq
+      assert(tasks.size === 1, s"jobs of the data batch (tasks each): $tasks")
+      assert(!tasks.contains(n), s"a job of one task per file: $tasks")
+      assert(spark.read.parquet(out).count() === n)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("streaming JDBC load pushes micro-batches through the batch sink") {
     val watch = tmpDir("jwatch"); val ckpt = tmpDir("jckpt")
     flowFile(watch, "nfcapd.1.csv", "2024-05-01 10:00:00", "192.168.0.1")

@@ -33,6 +33,23 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(fc.getDefaultFileSystem.getClass === classOf[graft.fs.GraftLocalFs])
   }
 
+  test("Graft.builder keeps a micro-batch's file listing on the driver") {
+    // the stream sources take at most MicroBatchMaxFiles files a batch;
+    // a batch of more files than the threshold is listed in a Spark job
+    assert(spark.conf.get(Graft.ListingThresholdKey) === Graft.MicroBatchMaxFiles.toString)
+  }
+
+  test("Graft.session re-applies the listing threshold on a running session") {
+    val s2 = spark.newSession()
+    s2.conf.set(Graft.ListingThresholdKey, "32")
+    org.apache.spark.sql.SparkSession.setActiveSession(s2)
+    try {
+      val s = Graft.session(tmpDir("graft_ckpt_rt"))
+      assert(s eq s2)
+      assert(s.conf.get(Graft.ListingThresholdKey) === Graft.MicroBatchMaxFiles.toString)
+    } finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
+  }
+
   test("Graft.session names every static setting a running session lacks") {
     // the suite's session was created through the builder
     assert(Graft.differingStaticConfs(spark.sparkContext.getConf).isEmpty)
