@@ -5,12 +5,13 @@ import org.apache.spark.sql.SparkSession
 
 /** Library entry point: a SparkSession.Builder pre-configured the way
   * every graft deployment needs — the SQL extensions (native
-  * functions + the CIDR literal-folding optimizer rule), a UTC
-  * session timezone (flow timestamps are wall-clock; a host-local
-  * zone silently shifts every window/date bucket), a codegen cache
-  * that holds graft's working set, a local filesystem that forks
-  * no process per file written and a file-listing threshold that
-  * keeps each micro-batch's listing on the driver. Every graft entry
+  * functions, graft's optimizer rules and the scan of its
+  * materialized views), a UTC session timezone (flow timestamps are
+  * wall-clock; a host-local zone silently shifts every window/date
+  * bucket), a codegen cache that holds graft's working set, a local
+  * filesystem that forks no process per file written and a
+  * file-listing threshold that keeps each micro-batch's listing on
+  * the driver. Every graft entry
   * point (Bench, Verify, the specs, the tools) builds its session
   * here.
   *

@@ -555,11 +555,24 @@ object Staging {
     * again and replaces the stale entry, so a rewritten table is never
     * served from the old snapshot. A path that does not exist is not
     * memoized: `resolve` runs and reports it.
+    *
+    * The memo owns what it holds: `release` runs on every value it
+    * drops — the entry of a snapshot whose fingerprint moved, every
+    * entry of a session that ended, and the loser of two concurrent
+    * first resolves (`putIfAbsent`/`replace`, as in
+    * [[SessionCache.getOrBuild]]; the loser then reads the winner's
+    * entry). A value may hold data (a cached relation's blocks); a
+    * caller still running on an instance of a released value recomputes
+    * it from its source, as after any uncache.
     */
-  private[graft] final class SnapshotMemo[V] extends SessionScoped {
+  private[graft] final class SnapshotMemo[V](release: V => Unit = (_: V) => ())
+      extends SessionScoped {
+    /** Compared by reference in `replace`, never by value. */
+    private final class Entry(val fingerprint: String, val value: V)
     private val entries =
-      new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, V)]()
+      new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Entry]()
 
+    @annotation.tailrec
     def apply(spark: SparkSession, path: String)(resolve: => V): V = {
       val fp =
         try Some(corpusFingerprint(spark, path))
@@ -567,13 +580,22 @@ object Staging {
       fp match {
         case None => resolve
         case Some(f) =>
-          val hit = entries.get((spark, path))
-          if (hit != null && hit._1 == f) hit._2
+          val k = (spark, path)
+          val hit = entries.get(k)
+          if (hit != null && hit.fingerprint == f) hit.value
           else {
             installCleanup(spark)
-            val v = resolve
-            entries.put((spark, path), (f, v))
-            v
+            val mine = new Entry(f, resolve)
+            val won =
+              if (hit == null) entries.putIfAbsent(k, mine) == null
+              else entries.replace(k, hit, mine)
+            if (won) {
+              if (hit != null) release(hit.value)
+              mine.value
+            } else {
+              release(mine.value)
+              apply(spark, path)(resolve)
+            }
           }
       }
     }
@@ -585,7 +607,19 @@ object Staging {
       n
     }
 
-    protected def drop(spark: SparkSession): Unit =
-      entries.keySet().removeIf(_._1 == spark)
+    /** Release at session end is best-effort, as in [[SessionCache]]:
+      * the context is already going down.
+      */
+    protected def drop(spark: SparkSession): Unit = {
+      val it = entries.entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        if (e.getKey._1 == spark) {
+          it.remove()
+          try release(e.getValue.value)
+          catch { case _: Exception => () }
+        }
+      }
+    }
   }
 }

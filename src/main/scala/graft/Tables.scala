@@ -25,9 +25,11 @@ object Tables {
     * Resolving a parquet path lists its files and infers the schema
     * from a footer — about 70 ms, paid by every query that reads the
     * table. The memo pays it once per snapshot; each call still gets
-    * its own fresh-id instance of the plan ([[Bridge.freshInstance]]),
-    * so nothing is cached as data and results and plans are those of
-    * a fresh read.
+    * its own fresh-id instance of the plan ([[Bridge.freshInstance]]).
+    * It holds plans only, no data: every query still reads the files,
+    * and results and plans are those of a fresh read. (The flows view
+    * over `events` is held as data, by
+    * [[graft.flow.FlowAnalytics.flowsResolved]].)
     */
   private[graft] val loaded = new Staging.SnapshotMemo[LogicalPlan]
 

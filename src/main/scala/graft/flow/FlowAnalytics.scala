@@ -1,6 +1,7 @@
 package graft.flow
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables.{davg, dsum}
@@ -24,20 +25,36 @@ object FlowAnalytics {
   /** events → flow-shaped frame: src/dst IPv4 strings, ports, bytes.
     * sa octets: 10 . user_id%64 . (event_id div 256)%256 . event_id%256
     * da octets: 192.168 . k%256 . user_id%256
+    *
+    * Served from the session's materialized flows view of the current
+    * `events.parquet` snapshot ([[flowsResolved]]); each call gets its
+    * own fresh-id instance of it, so two calls join like two reads.
     */
   def asFlows(spark: SparkSession, dir: String): DataFrame =
     org.apache.spark.sql.graftbridge.Bridge.freshInstance(spark,
-      flowsResolved(spark, s"$dir/events.parquet")(
-        flowsOf(graft.Tables.events(spark, dir)).queryExecution.analyzed))
+      flowsResolved(spark, s"$dir/events.parquet")(flowsView(spark, dir)))
 
-  /** The analyzed [[flowsOf]] plan per (session, events snapshot): its
-    * 15 chained `withColumn`s each re-analyze the growing plan (about
-    * 40 ms a call), so every dashboard panel used to pay that before
-    * its own query. Memoized like [[graft.Tables.load]]: each call gets
-    * a fresh-id instance, nothing is cached as data.
+  /** The materialized flows view per (session, events snapshot), the
+    * `nflows` table every dashboard query reads: one disk-backed
+    * columnar copy of [[flowsOf]] over `events`, so a panel scans
+    * ready flow columns instead of re-decoding the parquet,
+    * re-parsing `props` and re-concatenating the address strings for
+    * every row. The data is written by the first query that scans it
+    * and kept for the snapshot's life: a moved fingerprint or the
+    * session's end drops it and frees its blocks.
     */
-  private[graft] val flowsResolved = new graft.Staging.SnapshotMemo[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
+  private[graft] val flowsResolved =
+    new graft.Staging.SnapshotMemo[InMemoryRelation](_.cacheBuilder.clearCache(blocking = true))
+
+  /** The unmaterialized view of the current snapshot's flows
+    * ([[graft.plans.DiskViews]]: reachable only through
+    * [[flowsResolved]]). It computes every column for every row, also
+    * columns a query does not read; [[flowsOf]] is total on valid
+    * `events` — `props.k`, when present, is an integer and
+    * `value * 100` fits a long — so no ANSI cast fails.
+    */
+  private[graft] def flowsView(spark: SparkSession, dir: String): InMemoryRelation =
+    graft.plans.DiskViews(flowsOf(graft.Tables.events(spark, dir)), s"flows of $dir/events.parquet")
 
   /** The events→flows mapping over ANY events frame — pure column
     * ops, so it composes onto the streaming source too (E19).

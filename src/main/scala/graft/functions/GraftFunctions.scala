@@ -117,8 +117,9 @@ object GraftFunctions {
     }
 }
 
-/** `spark.sql.extensions` entry point: SQL functions + the CIDR
-  * literal-folding and rank-limit→heap optimizer rules.
+/** `spark.sql.extensions` entry point: SQL functions, the CIDR
+  * literal-folding and rank-limit→heap optimizer rules, and the
+  * planning of graft's materialized views.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -130,5 +131,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     e.injectOptimizerRule(_ => graft.plans.FoldCidrLiteral)
     e.injectOptimizerRule(_ => graft.plans.RewriteRankLimit)
+    e.injectPlannerStrategy(graft.plans.DiskViewScans(_))
   }
 }

@@ -15,6 +15,12 @@ import org.apache.spark.sql.types._
   * (bounded by `df.rdd.getNumPartitions` concurrent connections —
   * `coalesce` first if the endpoint can't take that many writers).
   *
+  * Where the connection supports transactions, each flush is one
+  * transaction, rolled back before a retry: a batch that fails
+  * part-way leaves no rows behind, so the retry adds no duplicates.
+  * Other connections keep autocommit, and a retried flush may repeat the
+  * rows applied before the failure.
+  *
   * The connection factory is a serializable thunk so specs can inject
   * an in-memory stub Connection (no ClickHouse driver ships in this
   * environment); production use passes
@@ -83,12 +89,22 @@ object JdbcBatchSink {
             try {
               val conn = connect()
               try {
-                val ps = conn.prepareStatement(sql)
+                val tx = conn.getMetaData.supportsTransactions
+                if (tx) conn.setAutoCommit(false)
                 try {
-                  buf.foreach { r => bind(ps, schema, r); ps.addBatch() }
-                  ps.executeBatch()
+                  val ps = conn.prepareStatement(sql)
+                  try {
+                    buf.foreach { r => bind(ps, schema, r); ps.addBatch() }
+                    ps.executeBatch()
+                  } finally ps.close()
+                  if (tx) conn.commit()
                   done = true
-                } finally ps.close()
+                } catch {
+                  case e: Exception if tx =>
+                    try conn.rollback()
+                    catch { case r: java.sql.SQLException => e.addSuppressed(r) }
+                    throw e
+                }
               } finally conn.close()
             } catch {
               case e: java.sql.SQLException =>

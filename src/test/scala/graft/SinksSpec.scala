@@ -1,9 +1,10 @@
 package graft
 
 import java.lang.reflect.{InvocationHandler, Method, Proxy}
-import java.sql.{Connection, PreparedStatement}
+import java.sql.{Connection, DatabaseMetaData, PreparedStatement}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.sinks.{JdbcBatchSink, PartitionedParquetSink}
 
@@ -109,6 +110,16 @@ class SinksSpec extends SparkSpecBase {
     assert(JdbcStub.batchesExecuted.get() === 1) // succeeded exactly once
   }
 
+  test("jdbc sink retries a batch that failed part-way without duplicate rows") {
+    import spark.implicits._
+    TxJdbcStub.reset()
+    TxJdbcStub.failMidBatch.set(40) // the first executeBatch stores 40 rows, then fails
+    val df = spark.range(100).select($"id")
+    JdbcBatchSink.write(df.coalesce(1), "t", TxJdbcStub.connect, batchSize = 100)
+    assert(TxJdbcStub.table.asScala.map(_.longValue).toSeq.sorted === (0L until 100L))
+    assert(TxJdbcStub.rollbacks.get() === 1)
+  }
+
   test("jdbc sink round-trips into a real embedded database (Derby)") {
     import spark.implicits._
     // Derby ships on the Spark classpath — a real file-backed DB, so
@@ -195,11 +206,21 @@ object JdbcStub {
         def invoke(p: Any, m: Method, args: Array[AnyRef]): AnyRef = m.getName match {
           case "prepareStatement" =>
             sqls.add(args(0).asInstanceOf[String]); statement()
+          case "getMetaData" => JdbcStub.metaData(supportsTransactions = false)
           case "close" | "commit" | "setAutoCommit" => null
           case "isClosed" => java.lang.Boolean.FALSE
           case _ => null
         }
       }).asInstanceOf[Connection]
+
+  def metaData(supportsTransactions: Boolean): DatabaseMetaData =
+    Proxy.newProxyInstance(getClass.getClassLoader, Array(classOf[DatabaseMetaData]),
+      new InvocationHandler {
+        def invoke(p: Any, m: Method, args: Array[AnyRef]): AnyRef = m.getName match {
+          case "supportsTransactions" => java.lang.Boolean.valueOf(supportsTransactions)
+          case _ => null
+        }
+      }).asInstanceOf[DatabaseMetaData]
 
   private def statement(): PreparedStatement = {
     val pending = new AtomicInteger(0)
@@ -215,6 +236,60 @@ object JdbcStub {
             Array.empty[Int]
           case "close" => null
           case _ => null // setLong/setString/setDouble/...
+        }
+      }).asInstanceOf[PreparedStatement]
+  }
+}
+
+/** A transactional stub endpoint keyed by each row's first column:
+  * an executed row is stored at once under autocommit and at `commit`
+  * otherwise; `rollback` and `close` drop uncommitted rows. A
+  * non-negative `failMidBatch` makes the next `executeBatch` apply
+  * that many rows and then fail, as a connection lost mid-batch does.
+  */
+object TxJdbcStub {
+  val table = new ConcurrentLinkedQueue[java.lang.Long]()
+  val failMidBatch = new AtomicInteger(-1)
+  val rollbacks = new AtomicInteger(0)
+
+  def reset(): Unit = { table.clear(); failMidBatch.set(-1); rollbacks.set(0) }
+
+  def connect: () => Connection = () => {
+    var autoCommit = true
+    val uncommitted = scala.collection.mutable.ArrayBuffer.empty[java.lang.Long]
+    def store(id: java.lang.Long): Unit = if (autoCommit) table.add(id) else uncommitted += id
+    Proxy.newProxyInstance(getClass.getClassLoader, Array(classOf[Connection]),
+      new InvocationHandler {
+        def invoke(p: Any, m: Method, args: Array[AnyRef]): AnyRef = m.getName match {
+          case "getMetaData" => JdbcStub.metaData(supportsTransactions = true)
+          case "setAutoCommit" => autoCommit = args(0).asInstanceOf[Boolean]; null
+          case "getAutoCommit" => java.lang.Boolean.valueOf(autoCommit)
+          case "commit" => uncommitted.foreach(table.add); uncommitted.clear(); null
+          case "rollback" => rollbacks.incrementAndGet(); uncommitted.clear(); null
+          case "close" => uncommitted.clear(); null
+          case "prepareStatement" => statement(store)
+          case _ => null
+        }
+      }).asInstanceOf[Connection]
+  }
+
+  private def statement(store: java.lang.Long => Unit): PreparedStatement = {
+    var current: java.lang.Long = null
+    val batch = scala.collection.mutable.ArrayBuffer.empty[java.lang.Long]
+    Proxy.newProxyInstance(getClass.getClassLoader, Array(classOf[PreparedStatement]),
+      new InvocationHandler {
+        def invoke(p: Any, m: Method, args: Array[AnyRef]): AnyRef = m.getName match {
+          case "setLong" if args(0) == Integer.valueOf(1) =>
+            current = args(1).asInstanceOf[java.lang.Long]; null
+          case "addBatch" => batch += current; null
+          case "executeBatch" =>
+            val cut = failMidBatch.getAndSet(-1)
+            val applied = if (cut >= 0) batch.take(cut) else batch.toSeq
+            applied.foreach(store)
+            batch.clear()
+            if (cut >= 0) throw new java.sql.SQLException("connection lost mid-batch")
+            Array.fill(applied.size)(1)
+          case _ => null
         }
       }).asInstanceOf[PreparedStatement]
   }

@@ -2,13 +2,15 @@ package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import graft.flow.FlowAnalytics
 
 /** Per-query fixed cost of a dashboard refresh: generated code is
-  * compiled once and then served from Spark's codegen cache, and each
-  * table snapshot is resolved once per session, without ever serving a
-  * rewritten table from its old snapshot.
+  * compiled once and then served from Spark's codegen cache, each
+  * table snapshot is resolved once per session and its flows view
+  * materialized once, without ever serving a rewritten table from its
+  * old snapshot.
   *
   * The last test stops the suite's session, so it must stay last.
   */
@@ -22,6 +24,9 @@ class SnapshotReuseSpec extends SparkSpecBase {
 
   private def relationOf(df: DataFrame) =
     df.queryExecution.analyzed.collectFirst { case lr: LogicalRelation => lr }.get
+
+  private def viewOf(df: DataFrame) =
+    df.queryExecution.analyzed.collectFirst { case v: InMemoryRelation => v }.get
 
   private def writeEvents(dir: String, n: Int): Unit =
     spark.read.parquet(s"$sf0001/events.parquet").orderBy("event_id").limit(n)
@@ -43,7 +48,7 @@ class SnapshotReuseSpec extends SparkSpecBase {
     assert(relationOf(a).output.map(_.exprId).intersect(relationOf(b).output.map(_.exprId)).isEmpty)
     val f1 = FlowAnalytics.asFlows(spark, sf0001)
     val f2 = FlowAnalytics.asFlows(spark, sf0001)
-    assert(relationOf(f1).relation eq relationOf(f2).relation)
+    assert(viewOf(f1).cacheBuilder eq viewOf(f2).cacheBuilder)
     assert(f1.queryExecution.analyzed.outputSet.intersect(f2.queryExecution.analyzed.outputSet).isEmpty)
     // fresh ids keep a self-join of two calls as unambiguous as two reads
     val joined = f1.join(f2, f1("user_id") === f2("event_id"))
@@ -65,13 +70,13 @@ class SnapshotReuseSpec extends SparkSpecBase {
     def talkers() = FlowAnalytics.topTalkers(spark, dir).collect().toSeq
     def hll() = FlowAnalytics.distinctHll(spark, dir).collect().toSeq
     val (t1, h1, n1) = (talkers(), hll(), Tables.events(spark, dir).count())
-    val rel1 = relationOf(FlowAnalytics.asFlows(spark, dir)).relation
+    val view1 = viewOf(FlowAnalytics.asFlows(spark, dir)).cacheBuilder
     writeEvents(dir, 150)
     val (t2, h2, n2) = (talkers(), hll(), Tables.events(spark, dir).count())
     assert(n1 === 400 && n2 === 150)
     assert(t1 !== t2)
     assert(h1 !== h2)
-    assert(!(relationOf(FlowAnalytics.asFlows(spark, dir)).relation eq rel1))
+    assert(!(viewOf(FlowAnalytics.asFlows(spark, dir)).cacheBuilder eq view1))
     // the new results are those of a first read of the same files
     val other = tmpDir("snapshot_events_fresh")
     writeEvents(other, 150)
@@ -84,8 +89,11 @@ class SnapshotReuseSpec extends SparkSpecBase {
     Tables.load(spark, sf0001, "orders").count()
     assert(Tables.loaded.size(spark) > 0)
     assert(FlowAnalytics.flowsResolved.size(spark) > 0)
+    val view = viewOf(FlowAnalytics.asFlows(spark, sf0001)).cacheBuilder
+    assert(view.isCachedColumnBuffersLoaded)
     spark.stop()
     assert(Tables.loaded.size(spark) === 0)
     assert(FlowAnalytics.flowsResolved.size(spark) === 0)
+    assert(!view.isCachedColumnBuffersLoaded, "the stopped session's flows view was not released")
   }
 }
