@@ -1051,16 +1051,11 @@ object Relational {
     if (!new java.io.File(mvPath, "_SUCCESS").exists())
       rollup(ev.where($"day" < lastDay))
         .write.mode("overwrite").partitionBy("day").parquet(mvPath)
-    // refresh: ONLY the newest day's partition, dynamic overwrite
-    val prev = spark.conf
-      .getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try rollup(ev.where($"day" === lastDay))
-      .write.mode("overwrite").partitionBy("day").parquet(mvPath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // refresh: ONLY the newest day's partition — dynamic overwrite
+    // declared on this write, so the session's policy is never touched
+    rollup(ev.where($"day" === lastDay))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("day").parquet(mvPath)
     spark.read.parquet(mvPath)
       .select($"day".cast("string").as("day"), $"event_type", $"n", $"sum_v")
       .orderBy($"day", $"event_type")

@@ -15,32 +15,87 @@ import org.apache.spark.sql.types._
   * filter reproduces. E2/E3 (custom-state dedup, stream-static join)
   * are spec-level (see StreamingSpec) since their outputs depend on
   * in-batch arrival order, which a SQL oracle can't pin down.
+  *
+  * Every graded stream drains through [[drain]], which releases its
+  * memory sink: the returned frame keeps the drained rows alive only
+  * while the caller holds it.
   */
 object StreamingOps {
 
   private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Last completed micro-batch physical plan per graded streaming
-    * query — captured at stream termination. A streaming Dataset has
-    * no batch plan to `explain`; the executed micro-batch plan IS the
-    * planner artifact worth pinning (state store placement, the
-    * stream-static join's static-leaf shape, sink mode), so
-    * PlanSnapshotSpec can cover the streaming surface like the batch
-    * one.
+    * query — captured by [[drain]] at stream termination. A streaming
+    * Dataset has no batch plan to `explain`; the executed micro-batch
+    * plan IS the planner artifact worth pinning (state store
+    * placement, the stream-static join's static-leaf shape, sink
+    * mode), so PlanSnapshotSpec can cover the streaming surface like
+    * the batch one. Holds plan strings only, one per query key, so it
+    * does not grow with the number of runs.
     */
   private[graft] val lastBatchPlans =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  private def awaitAndRecord(q: org.apache.spark.sql.streaming.StreamingQuery,
-      key: String): Unit = {
-    q.awaitTermination()
-    q match {
-      case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
-        Option(w.streamingQuery.lastExecution).foreach { le =>
-          lastBatchPlans(key) = le.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        }
-      case _ => ()
+  /** Drains `stream` to completion through a memory sink and returns
+    * the sink's rows as a resolved frame.
+    *
+    * - The sink is named `graft_stream_<key letters>_<n>`.
+    * - A plan holding a `transformWithState` node starts on the
+    *   RocksDB state store provider, which that operator requires;
+    *   every other plan keeps the session's provider. The provider is
+    *   read once, when `start()` clones the session for the stream, so
+    *   the override is lifted as soon as the query has started.
+    * - After the AvailableNow drain, the last micro-batch's plan is
+    *   recorded in [[lastBatchPlans]] under `key`.
+    * - The sink's temp view is dropped before returning, from the
+    *   session and from the stream's clone of it, so no drained result
+    *   outlives the frames that reference it.
+    */
+  private def drain(stream: org.apache.spark.sql.Dataset[_], mode: String,
+      key: String): DataFrame = {
+    val spark = stream.sparkSession
+    val name = s"graft_stream_${key.stripPrefix("stream_").filter(_.isLetter)}" +
+      s"_${counter.incrementAndGet()}"
+    val writer = stream.writeStream.outputMode(mode).format("memory")
+      .queryName(name).trigger(Trigger.AvailableNow())
+    val needsRocksDb = stream.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.TransformWithState])
+    val q =
+      if (!needsRocksDb) writer.start()
+      else withConf(spark, "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(
+        writer.start())
+    try {
+      q.awaitTermination()
+      q match {
+        case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
+          Option(w.streamingQuery.lastExecution).foreach { le =>
+            lastBatchPlans(key) = le.explainString(
+              org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+          }
+        case _ => ()
+      }
+      spark.table(name)
+    } finally {
+      // the stream's own session copies the view when its first batch
+      // resolves, and Spark's broadcast threads keep that session as
+      // their inherited active session: its copy would pin the sink
+      org.apache.spark.sql.graftbridge.Bridge.streamSession(q)
+        .foreach(_.sessionState.catalog.dropTempView(name))
+      spark.catalog.dropTempView(name)
+    }
+  }
+
+  /** Runs `f` with session conf `key` set to `value`, then restores the
+    * key: its previous value, or unset if it had none.
+    */
+  private def withConf[T](spark: SparkSession, key: String, value: String)(
+      f: => T): T = {
+    val prev = spark.conf.getAll.get(key) // explicitly set values only
+    spark.conf.set(key, value)
+    try f finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
   }
 
@@ -121,7 +176,6 @@ object StreamingOps {
     */
   def windowAgg(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_window_${counter.incrementAndGet()}"
     val stream = eventsStream(spark, dir)
       .withWatermark("ts", "10 minutes")
       .groupBy(window($"ts", "1 hour").as("win"), $"event_type")
@@ -132,14 +186,8 @@ object StreamingOps {
       // (session TZ is UTC → same wall clock).
       .select($"win.start".cast("timestamp_ntz").as("win_start"),
         $"event_type", $"n", $"sum_value")
-    val q = stream.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_window_agg")
-    spark.table(name).orderBy($"win_start", $"event_type")
+    drain(stream, "append", "stream_window_agg")
+      .orderBy($"win_start", $"event_type")
   }
 
   /** E1b: complete-mode streaming aggregation — running per-proto
@@ -151,20 +199,12 @@ object StreamingOps {
     */
   def runningTotals(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_totals_${counter.incrementAndGet()}"
-    val q = eventsStream(spark, dir)
+    val totals = eventsStream(spark, dir)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),
         max($"user_id").as("max_user"),
         graft.Tables.dsum($"value").as("sum_value"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_running_totals")
-    spark.table(name).orderBy($"event_type")
+    drain(totals, "complete", "stream_running_totals").orderBy($"event_type")
   }
 
   /** E7: streaming sessionization — `session_window(ts, gap)` as a
@@ -179,8 +219,7 @@ object StreamingOps {
     */
   def sessionAgg(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_sessions_${counter.incrementAndGet()}"
-    val q = eventsStream(spark, dir)
+    val sessions = eventsStream(spark, dir)
       .withWatermark("ts", "10 minutes")
       .groupBy(session_window($"ts", "60 minutes").as("sw"), $"user_id")
       .agg(count(lit(1)).as("n_events"),
@@ -189,14 +228,8 @@ object StreamingOps {
         $"sw.start".cast("timestamp_ntz").as("session_start"),
         $"sw.end".cast("timestamp_ntz").as("session_end"),
         $"n_events", $"session_value")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_sessions_agg")
-    spark.table(name).orderBy($"user_id", $"session_start")
+    drain(sessions, "append", "stream_sessions_agg")
+      .orderBy($"user_id", $"session_start")
   }
 
   /** E2 (graded face): streaming stateful dedup —
@@ -226,24 +259,17 @@ object StreamingOps {
     */
   def dedupFirst(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_dedupfirst_${counter.incrementAndGet()}"
-    val q = eventsStream(spark, dir)
+    val firsts = eventsStream(spark, dir)
       .withWatermark("ts", "10 minutes")
       .select($"user_id", $"event_type",
         date_trunc("day", $"ts").as("day"), $"ts")
       .dropDuplicatesWithinWatermark("user_id", "event_type", "day")
       .select($"user_id", $"event_type", $"day".cast("timestamp_ntz").as("day"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_dedup_first")
     // distinct over the DRAIN (not the stream): collapses watermark
     // re-admissions a multi-batch drain could emit — a no-op for the
     // single-batch AvailableNow drain; see the contract above
-    spark.table(name).dropDuplicates("user_id", "event_type", "day")
+    drain(firsts, "append", "stream_dedup_first")
+      .dropDuplicates("user_id", "event_type", "day")
       .orderBy($"user_id", $"event_type", $"day")
   }
 
@@ -309,13 +335,9 @@ object StreamingOps {
       .schema("event_id LONG, user_id LONG, event_type STRING")
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$base/wave*").as[Evt]
-    val name = s"graft_stream_ratelimit_${counter.incrementAndGet()}"
-    val q = rateLimit(stream, RateLimitCapacity, RateLimitRefill)
-      .toDF()
-      .writeStream.outputMode("append").format("memory")
-      .queryName(name).trigger(Trigger.AvailableNow()).start()
-    awaitAndRecord(q, "stream_rate_limit")
-    spark.table(name).select($"user_id", $"event_id")
+    drain(rateLimit(stream, RateLimitCapacity, RateLimitRefill),
+        "append", "stream_rate_limit")
+      .select($"user_id", $"event_id")
       .orderBy($"user_id", $"event_id")
   }
 
@@ -379,18 +401,10 @@ object StreamingOps {
     */
   def topKApprox(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_topk_${counter.incrementAndGet()}"
-    val q = eventsStream(spark, dir)
+    val sketch = eventsStream(spark, dir)
       .agg(graft.functions.SpaceSavingAgg.space_saving(
         upper($"event_type"), 16).as("tk"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_topk")
-    spark.table(name)
+    drain(sketch, "complete", "stream_topk")
       .select(posexplode($"tk").as(Seq("pos", "e")))
       .select(($"pos" + 1).cast("long").as("rnk"),
         $"e.key".as("proto"), $"e.est")
@@ -506,16 +520,8 @@ object StreamingOps {
     */
   def intervalJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_ivj_${counter.incrementAndGet()}"
-    val q = intervalJoinStream(eventsStream(spark, dir))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_interval_join")
-    spark.table(name).orderBy($"view_id", $"purchase_id")
+    drain(intervalJoinStream(eventsStream(spark, dir)), "append",
+      "stream_interval_join").orderBy($"view_id", $"purchase_id")
   }
 
   /** The unstarted E4b plan over any events stream — exposed so the
@@ -699,34 +705,18 @@ object StreamingOps {
 
   def sessionTimer(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_sesstimer_${counter.incrementAndGet()}"
-    val pk = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(pk)
-    spark.conf.set(pk,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = sessionTimerStream(
-          eventsStream(spark, dir).withWatermark("ts", "10 minutes"))
-        .select($"user_id",
-          expr("CAST(timestamp_micros(start_us) AS TIMESTAMP_NTZ)")
-            .as("session_start"),
-          expr("CAST(timestamp_micros(end_us) AS TIMESTAMP_NTZ)")
-            .as("session_end"),
-          $"n_events",
-          expr("CAST(CAST(sum_q AS DECIMAL(28,2)) / 100 AS DOUBLE)")
-            .as("session_value"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitAndRecord(q, "stream_session_timer")
-    } finally prev match {
-      case Some(v) => spark.conf.set(pk, v)
-      case None => spark.conf.unset(pk)
-    }
-    spark.table(name).orderBy($"user_id", $"session_start")
+    val closed = sessionTimerStream(
+        eventsStream(spark, dir).withWatermark("ts", "10 minutes"))
+      .select($"user_id",
+        expr("CAST(timestamp_micros(start_us) AS TIMESTAMP_NTZ)")
+          .as("session_start"),
+        expr("CAST(timestamp_micros(end_us) AS TIMESTAMP_NTZ)")
+          .as("session_end"),
+        $"n_events",
+        expr("CAST(CAST(sum_q AS DECIMAL(28,2)) / 100 AS DOUBLE)")
+          .as("session_value"))
+    drain(closed, "append", "stream_session_timer")
+      .orderBy($"user_id", $"session_start")
   }
 
   // ------------------------------------ E16 streaming decayed counter
@@ -805,20 +795,13 @@ object StreamingOps {
     * micro-batch splits.
     */
   private[graft] def topkDecayedFrom(
-      masses: org.apache.spark.sql.Dataset[FlowMass], name: String): DataFrame = {
+      masses: org.apache.spark.sql.Dataset[FlowMass]): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val spark = masses.sparkSession
     import spark.implicits._
-    val q = masses.groupByKey(_.site)
+    val emits = masses.groupByKey(_.site)
       .transformWithState(new DecayedCounterProcessor, TimeMode.None(),
         OutputMode.Append(), org.apache.spark.sql.Encoders.product[DecayEmit])
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_topk_decayed")
     // latest emission per site (seq is monotone per key), then the
     // dyadic read-out: Σ bucket(age)·2^(20-age) in exact integers.
     // Each site's ring is aged relative to the site's OWN last hour;
@@ -828,7 +811,7 @@ object StreamingOps {
     // materialized: `last` feeds both the decayed-sum branch and the
     // final join (self-join reference conflict otherwise), and it is
     // key-cardinality tiny
-    val last = spark.table(name)
+    val last = drain(emits, "append", "stream_topk_decayed")
       .groupBy($"site")
       .agg(max(struct($"seq", $"ref_h", $"n_flows", $"raw_bytes", $"buckets"))
         .as("l"))
@@ -856,29 +839,18 @@ object StreamingOps {
 
   /** E16 graded entry: the flow stream reduced to (site, hour, bytes)
     * mass rows — the same site/ibyt derivation as B44 — through the
-    * decayed-counter state, ranked top-10. RocksDB provider required
-    * by transformWithState (and the right backend for per-key ring
-    * state at scale).
+    * decayed-counter state, ranked top-10. Runs on the RocksDB
+    * provider, as [[drain]] picks for every transformWithState plan
+    * (and the right backend for per-key ring state at scale).
     */
   def topkDecayed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_decay_${counter.incrementAndGet()}"
-    val pk = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(pk)
-    spark.conf.set(pk,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val masses = eventsStream(spark, dir)
-        .select(
-          concat(lit("10."), pmod(col("user_id"), lit(64))).as("site"),
-          expr("CAST(ts AS LONG) div 3600").as("h"),
-          round(col("value") * 100).cast("long").as("ibyt"))
-        .as[FlowMass]
-      topkDecayedFrom(masses, name)
-    } finally prev match {
-      case Some(v) => spark.conf.set(pk, v)
-      case None => spark.conf.unset(pk)
-    }
+    topkDecayedFrom(eventsStream(spark, dir)
+      .select(
+        concat(lit("10."), pmod(col("user_id"), lit(64))).as("site"),
+        expr("CAST(ts AS LONG) div 3600").as("h"),
+        round(col("value") * 100).cast("long").as("ibyt"))
+      .as[FlowMass])
   }
 
   // ------------------------------------ E17 streaming EWMA forecaster
@@ -936,21 +908,14 @@ object StreamingOps {
     * so the spec can drive it with its own micro-batch splits.
     */
   private[graft] def ewmaForecastFrom(
-      masses: org.apache.spark.sql.Dataset[ProtoMass], name: String): DataFrame = {
+      masses: org.apache.spark.sql.Dataset[ProtoMass]): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val spark = masses.sparkSession
     import spark.implicits._
-    val q = masses.groupByKey(_.pr)
+    val emits = masses.groupByKey(_.pr)
       .transformWithState(new EwmaProcessor, TimeMode.None(),
         OutputMode.Append(), org.apache.spark.sql.Encoders.product[EwmaEmit])
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_ewma_forecast")
-    val last = spark.table(name)
+    val last = drain(emits, "append", "stream_ewma_forecast")
       .groupBy($"pr")
       .agg(max(struct($"seq", $"ref_h", $"ring")).as("l"))
       .select($"pr", $"l.ref_h".as("ref_h"), $"l.ring".as("ring"))
@@ -980,22 +945,11 @@ object StreamingOps {
     */
   def ewmaForecast(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_ewma_${counter.incrementAndGet()}"
-    val pk = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(pk)
-    spark.conf.set(pk,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val masses = eventsStream(spark, dir)
-        .select(upper(col("event_type")).as("pr"),
-          expr("CAST(ts AS LONG) div 3600").as("h"),
-          round(col("value") * 100).cast("long").as("ibyt"))
-        .as[ProtoMass]
-      ewmaForecastFrom(masses, name)
-    } finally prev match {
-      case Some(v) => spark.conf.set(pk, v)
-      case None => spark.conf.unset(pk)
-    }
+    ewmaForecastFrom(eventsStream(spark, dir)
+      .select(upper(col("event_type")).as("pr"),
+        expr("CAST(ts AS LONG) div 3600").as("h"),
+        round(col("value") * 100).cast("long").as("ibyt"))
+      .as[ProtoMass])
   }
 
   // ------------------------------------ E20 streaming Holt forecaster
@@ -1100,21 +1054,14 @@ object StreamingOps {
     * split out so the spec can drive it with its own batch splits.
     */
   private[graft] def holtForecastFrom(
-      masses: org.apache.spark.sql.Dataset[FlowCents], name: String): DataFrame = {
+      masses: org.apache.spark.sql.Dataset[FlowCents]): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val spark = masses.sparkSession
     import spark.implicits._
-    val q = masses.groupByKey(_.flowsrc)
+    val emits = masses.groupByKey(_.flowsrc)
       .transformWithState(new HoltProcessor, TimeMode.None(),
         OutputMode.Append(), org.apache.spark.sql.Encoders.product[HoltEmit])
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_holt_forecast")
-    val last = spark.table(name)
+    val last = drain(emits, "append", "stream_holt_forecast")
       .groupBy($"flowsrc")
       .agg(max(struct($"seq", $"ref_h", $"cents", $"cnts",
         $"l", $"b", $"n_closed")).as("s"))
@@ -1153,22 +1100,11 @@ object StreamingOps {
     */
   def holtForecast(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_holt_${counter.incrementAndGet()}"
-    val pk = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(pk)
-    spark.conf.set(pk,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val masses = graft.flow.FlowAnalytics.flowsOf(eventsStream(spark, dir))
-        .select(col("flowsrc"),
-          expr("CAST(ts AS LONG) div 3600").as("h"),
-          col("ibyt").as("cents"))
-        .as[FlowCents]
-      holtForecastFrom(masses, name)
-    } finally prev match {
-      case Some(v) => spark.conf.set(pk, v)
-      case None => spark.conf.unset(pk)
-    }
+    holtForecastFrom(graft.flow.FlowAnalytics.flowsOf(eventsStream(spark, dir))
+      .select(col("flowsrc"),
+        expr("CAST(ts AS LONG) div 3600").as("h"),
+        col("ibyt").as("cents"))
+      .as[FlowCents])
   }
 
   // ---------------------------------------- E18 streaming silence watch
@@ -1211,21 +1147,14 @@ object StreamingOps {
   }
 
   private[graft] def silenceWatchFrom(
-      seen: org.apache.spark.sql.Dataset[SiteSeen], name: String): DataFrame = {
+      seen: org.apache.spark.sql.Dataset[SiteSeen]): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val spark = seen.sparkSession
     import spark.implicits._
-    val q = seen.groupByKey(_.site)
+    val emits = seen.groupByKey(_.site)
       .transformWithState(new SilenceProcessor, TimeMode.None(),
         OutputMode.Append(), org.apache.spark.sql.Encoders.product[SeenEmit])
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_silence_watch")
-    val last = spark.table(name)
+    val last = drain(emits, "append", "stream_silence_watch")
       .groupBy($"site")
       .agg(max(struct($"seq", $"last_h", $"n_flows")).as("l"))
       .select($"site", $"l.last_h".as("last_h"), $"l.n_flows".as("n_flows"))
@@ -1244,24 +1173,13 @@ object StreamingOps {
     */
   def silenceWatch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_silence_${counter.incrementAndGet()}"
-    val pk = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(pk)
-    spark.conf.set(pk,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val seen = eventsStream(spark, dir)
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-        .select(
-          concat(lit("192.168."), pmod(col("k"), lit(256)),
-            lit("."), pmod(col("user_id"), lit(256))).as("site"),
-          expr("CAST(ts AS LONG) div 3600").as("h"))
-        .as[SiteSeen]
-      silenceWatchFrom(seen, name)
-    } finally prev match {
-      case Some(v) => spark.conf.set(pk, v)
-      case None => spark.conf.unset(pk)
-    }
+    silenceWatchFrom(eventsStream(spark, dir)
+      .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
+      .select(
+        concat(lit("192.168."), pmod(col("k"), lit(256)),
+          lit("."), pmod(col("user_id"), lit(256))).as("site"),
+        expr("CAST(ts AS LONG) div 3600").as("h"))
+      .as[SiteSeen])
   }
 
   val documentsSchema: StructType = StructType(Seq(
@@ -1286,7 +1204,6 @@ object StreamingOps {
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val k = graft.dedup.Dedup.ContamPhraseTokens
-    val name = s"graft_stream_decon_${counter.incrementAndGet()}"
     val docsSpool = spool(spark, dir, "documents")
     // static side: the same deterministic benchmark derivation as D21
     val phrases = graft.Tables.load(spark, dir, "documents")
@@ -1299,18 +1216,12 @@ object StreamingOps {
     val docStream = spark.readStream
       .schema(documentsSchema)
       .parquet(docsSpool)
-    val q = graft.dedup.Dedup.tokenGrams(docStream, k)
+    val hits = graft.dedup.Dedup.tokenGrams(docStream, k)
       .withColumnRenamed("gram", "phrase")
       .join(broadcast(phrases), "phrase")
       .select($"doc_id", $"bench_id", $"p")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_decontaminate")
-    spark.table(name).orderBy($"doc_id", $"bench_id", $"p")
+    drain(hits, "append", "stream_decontaminate")
+      .orderBy($"doc_id", $"bench_id", $"p")
   }
 
   /** E9: streaming Bloom ingest gate — D23's incremental-dedup filter
@@ -1327,7 +1238,6 @@ object StreamingOps {
   def bloomGate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.functions.BloomAgg.{bloom_agg, bloom_contains}
-    val name = s"graft_stream_bloom_${counter.incrementAndGet()}"
     val docsSpool = spool(spark, dir, "documents")
     val existing = graft.Tables.load(spark, dir, "documents")
     val bf = existing.agg(bloom_agg(md5($"text".cast("binary")),
@@ -1342,18 +1252,11 @@ object StreamingOps {
       .union(incoming.where($"doc_id" % 3 === 0)
         .select(($"doc_id" + 30000).as("doc_id"),
           concat($"text", lit(" incoming fresh suffix")).as("text")))
-    val q = staged
+    val flagged = staged
       .crossJoin(broadcast(bf))
       .select($"doc_id",
         bloom_contains($"bf", md5($"text".cast("binary"))).as("flagged"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_bloom_gate")
-    spark.table(name).orderBy($"doc_id")
+    drain(flagged, "append", "stream_bloom_gate").orderBy($"doc_id")
   }
 
   /** E10: streaming MinHash ingest gate — D23b's incremental NEAR-dup
@@ -1374,7 +1277,6 @@ object StreamingOps {
   def minhashGate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.dedup.Dedup
-    val name = s"graft_stream_mh_${counter.incrementAndGet()}"
     val docsSpool = spool(spark, dir, "documents")
     val existing = graft.Tables.load(spark, dir, "documents")
       .select($"doc_id", $"text")
@@ -1415,23 +1317,17 @@ object StreamingOps {
         graft.functions.StrFuncs.minhash_sig(
           graft.functions.StrFuncs.char_grams($"text", Dedup.ShingleLen),
           Dedup.NumHashes, Dedup.MinhashP).as("minhashes"))
-    val q = Dedup.bandsOf(signed)
+    val best = drain(Dedup.bandsOf(signed)
       .join(index, Seq("band_id", "band_hash"))
       .groupBy($"doc_id")
-      .agg(max(Dedup.sigEst($"minhashes", $"s_old")).as("best_est"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_minhash_gate")
+      .agg(max(Dedup.sigEst($"minhashes", $"s_old")).as("best_est")),
+      "complete", "stream_minhash_gate")
     // batch-side presentation: every staged doc id, flagged or clean
     val ids = existing.where($"doc_id" % 5 === 0)
       .select(($"doc_id" + 50000).as("doc_id"))
       .union(existing.where($"doc_id" % 3 === 0)
         .select(($"doc_id" + 70000).as("doc_id")))
-    ids.join(spark.table(name), Seq("doc_id"), "left")
+    ids.join(best, Seq("doc_id"), "left")
       .select($"doc_id", $"best_est",
         coalesce($"best_est" >= Dedup.IncThreshold, lit(false)).as("is_dup"))
       .orderBy($"doc_id")
@@ -1450,7 +1346,6 @@ object StreamingOps {
   def qualityGate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.text.TextAnalytics
-    val name = s"graft_stream_qg_${counter.incrementAndGet()}"
     val docsSpool = spool(spark, dir, "documents")
     // trained BEFORE the stream starts (staged; a batch job on first
     // use) — the stream never re-trains
@@ -1469,14 +1364,7 @@ object StreamingOps {
       .select($"doc_id", $"n_feat",
         round(($"sq".cast("double") / lit(1.0e9)) / $"n_feat", 6).as("score_r"))
       .withColumn("pred_keep", $"score_r" > 0)
-    val q = scored.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_quality_gate")
-    spark.table(name).orderBy($"doc_id")
+    drain(scored, "append", "stream_quality_gate").orderBy($"doc_id")
   }
 
   /** E12: streaming quantile monitor (`stream_value_quantiles`) —
@@ -1495,19 +1383,11 @@ object StreamingOps {
     */
   def valueQuantiles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_kll_${counter.incrementAndGet()}"
-    val q = eventsStream(spark, dir)
+    val sk = drain(eventsStream(spark, dir)
       .groupBy($"event_type")
       .agg(graft.functions.KllAgg.kll_quantiles($"value", 256, Seq(0.5, 0.99))
-        .as("qs"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_value_quantiles")
-    val sk = spark.table(name)
+        .as("qs")),
+      "complete", "stream_value_quantiles")
     val exact = graft.Tables.events(spark, dir)
       .groupBy($"event_type")
       .agg(percentile($"value",
@@ -1556,16 +1436,8 @@ object StreamingOps {
     */
   def biflowStitch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_biflow_${counter.incrementAndGet()}"
-    val q = biflowStitchStream(eventsStream(spark, dir))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_biflow_stitch")
-    spark.table(name)
+    drain(biflowStitchStream(eventsStream(spark, dir)), "append",
+        "stream_biflow_stitch")
       .orderBy($"client", $"client_port", $"server", $"server_port",
         $"pr", $"first_s")
   }
@@ -1610,8 +1482,7 @@ object StreamingOps {
 
   def cdcUpsert(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_cdc_${counter.incrementAndGet()}"
-    val q = eventsStream(spark, dir)
+    val latest = eventsStream(spark, dir)
       .where(pmod($"user_id", lit(10)) === 0)
       .select($"user_id",
         get_json_object($"props", "$.k").cast("long").as("k"),
@@ -1619,14 +1490,7 @@ object StreamingOps {
         ($"event_type" === "error").as("is_delete"))
       .groupBy($"user_id", $"k")
       .agg(max(struct($"ts", $"event_id", $"value", $"is_delete")).as("last"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_cdc_upsert")
-    spark.table(name)
+    drain(latest, "complete", "stream_cdc_upsert")
       .where(!$"last.is_delete")
       .select($"user_id", $"k",
         $"last.event_id".as("event_id"), $"last.value".as("value"))
@@ -1657,19 +1521,11 @@ object StreamingOps {
     */
   def distinctKmv(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_kmv_${counter.incrementAndGet()}"
-    val q = eventsStream(spark, dir)
+    val sk = drain(eventsStream(spark, dir)
       .groupBy($"event_type")
       .agg(graft.functions.KmvAgg.kmv_sketch(
-        $"user_id".cast("string"), 256).as("sk"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_distinct_kmv")
-    val sk = spark.table(name)
+        $"user_id".cast("string"), 256).as("sk")),
+      "complete", "stream_distinct_kmv")
       .select($"event_type",
         round(graft.functions.KmvAgg.kmv_estimate($"sk"), 4).as("est_r"))
     val exact = graft.Tables.events(spark, dir)
@@ -1692,21 +1548,13 @@ object StreamingOps {
     */
   def lpmEnrich(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_lpm_${counter.incrementAndGet()}"
     val labeled = graft.flow.FlowAnalytics.lpmLabeled(
       graft.flow.FlowAnalytics.flowsOf(eventsStream(spark, dir)))
-    val q = labeled
+    val routes = labeled
       .groupBy($"src_label", $"matched_len", $"dst_label")
       .agg(count(lit(1)).as("n_flows"), sum($"ibyt").as("bytes"),
         graft.functions.KmvAgg.kmv_sketch($"sa", 256).as("sk"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_lpm_enrich")
-    spark.table(name)
+    drain(routes, "complete", "stream_lpm_enrich")
       .select($"src_label", $"matched_len", $"dst_label",
         $"n_flows", $"bytes",
         round(graft.functions.KmvAgg.kmv_estimate($"sk"), 4)
@@ -1724,21 +1572,13 @@ object StreamingOps {
     */
   def lpm6Enrich(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_lpm6_${counter.incrementAndGet()}"
     val labeled = graft.flow.FlowAnalytics.lpm6Labeled(
       graft.flow.FlowAnalytics.flowsOf(eventsStream(spark, dir)))
-    val q = labeled
+    val routes = labeled
       .groupBy($"src_label", $"matched_len")
       .agg(count(lit(1)).as("n_flows"), sum($"ibyt").as("bytes"),
         graft.functions.KmvAgg.kmv_sketch($"sa6", 256).as("sk"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_lpm6_enrich")
-    spark.table(name)
+    drain(routes, "complete", "stream_lpm6_enrich")
       .select($"src_label", $"matched_len", $"n_flows", $"bytes",
         round(graft.functions.KmvAgg.kmv_estimate($"sk"), 4)
           .as("n_src_est_r"))
@@ -1760,40 +1600,24 @@ object StreamingOps {
     */
   def annRoute(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_annroute_${counter.incrementAndGet()}"
     val sp = spool(spark, dir, "embeddings")
     val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
     val stream = spark.readStream.schema(schema).parquet(sp)
       .select($"vec_id", $"embedding")
     val cents = graft.ann.Knn.servedCentroids(spark, dir)
-    val q = graft.ann.Knn.routeAgainstIndex(stream, cents)
+    val routed = graft.ann.Knn.routeAgainstIndex(stream, cents)
       .select($"vec_id", $"cid", $"cscore_r")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_ann_route")
-    spark.table(name).orderBy($"vec_id")
+    drain(routed, "append", "stream_ann_route").orderBy($"vec_id")
   }
 
   def distinctHll(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_hll_${counter.incrementAndGet()}"
     val p = graft.flow.FlowAnalytics.HllP
-    val q = eventsStream(spark, dir)
+    val sk = drain(eventsStream(spark, dir)
       .groupBy($"event_type")
       .agg(graft.functions.HllAgg.hll_sketch(
-        $"user_id".cast("string"), p).as("sk"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "stream_distinct_hll")
-    val sk = spark.table(name)
+        $"user_id".cast("string"), p).as("sk")),
+      "complete", "stream_distinct_hll")
       .select($"event_type",
         graft.functions.HllAgg.hll_estimate($"sk", p).as("est"))
     val exact = graft.Tables.events(spark, dir)
@@ -1832,10 +1656,7 @@ object StreamingOps {
     */
   private def withStreamPartitions(spark: SparkSession)(
       f: => DataFrame): DataFrame = spark.synchronized {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, StreamStatePartitions.toString)
-    try f finally spark.conf.set(key, prev)
+    withConf(spark, "spark.sql.shuffle.partitions", StreamStatePartitions.toString)(f)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = rawQueries

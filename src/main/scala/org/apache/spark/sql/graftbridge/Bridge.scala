@@ -76,4 +76,16 @@ object Bridge {
         org.apache.spark.sql.classic.Dataset.ofRows(spark, clean)
       case _ => df
     }
+
+  /** The session a streaming query's micro-batches run in: the clone
+    * of the starting session that Spark keeps `protected[sql]`
+    * (`sparkSessionForStream`). None for a query that is not Spark's
+    * own wrapper.
+    */
+  def streamSession(q: org.apache.spark.sql.streaming.StreamingQuery)
+      : Option[org.apache.spark.sql.classic.SparkSession] = q match {
+    case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
+      Some(w.streamingQuery.sparkSessionForStream)
+    case _ => None
+  }
 }

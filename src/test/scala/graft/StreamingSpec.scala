@@ -377,222 +377,206 @@ class StreamingSpec extends SparkSpecBase {
 
   test("decayed counter is batch-split invariant (incl. late and idle keys)") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // three files = three micro-batches under maxFilesPerTrigger=1.
-      // Shapes under test: "hot" loud now; "was_loud" all mass old
-      // (extra halvings at read-out); "late" delivers an OLD hour in a
-      // LATER batch (must fold into the right ring slot, not age-0);
-      // "ancient" outside the window entirely (decayed 0, still listed).
-      val h0 = 500000L // arbitrary epoch-hour base
-      val batches = Seq(
-        Seq(("hot", h0, 100L), ("was_loud", h0, 800L), ("ancient", h0 - 45, 999L)),
-        Seq(("hot", h0 + 5, 200L), ("was_loud", h0 + 1, 50L)),
-        Seq(("hot", h0 + 6, 400L), ("late", h0 + 2, 64L), ("hot", h0 + 1, 32L)))
-      val src = tmpDir("decaysrc") + "/data"
-      batches.zipWithIndex.foreach { case (b, i) =>
-        b.toDF("site", "h", "ibyt").repartition(1)
-          .write.mode("append").parquet(src)
-      }
-      def run(filesPerTrigger: Option[Int], name: String) = {
-        val rd = spark.readStream.schema("site STRING, h LONG, ibyt LONG")
-        val stream = filesPerTrigger.fold(rd)(n =>
-          rd.option("maxFilesPerTrigger", n)).parquet(src)
-          .as[StreamingOps.FlowMass]
-        StreamingOps.topkDecayedFrom(stream, name)
-          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-            r.getLong(3))).toSeq
-      }
-      val split = run(Some(1), "decay_split")
-      val whole = run(None, "decay_whole")
-      assert(split === whole, "decayed state differs across batch splits")
-      val m = split.map(r => r._1 -> r._4).toMap
-      // read-out semantics: hot's age-0 mass at full 2^20 weight;
-      // was_loud idle 6h → its h0+1 mass carries 5 halvings beyond its
-      // own ring age; ancient is out of window
-      assert(m("ancient") === 0L)
-      val sh = 1L << StreamingOps.DecayQShift
-      assert(m("hot") === 400L * sh + 200L * (sh >> 1) + 32L * (sh >> 5) +
-        100L * (sh >> 6))
-      assert(m("was_loud") === 50L * (sh >> 5) + 800L * (sh >> 6))
-      assert(m("late") === 64L * (sh >> 4))
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    // three files = three micro-batches under maxFilesPerTrigger=1.
+    // Shapes under test: "hot" loud now; "was_loud" all mass old
+    // (extra halvings at read-out); "late" delivers an OLD hour in a
+    // LATER batch (must fold into the right ring slot, not age-0);
+    // "ancient" outside the window entirely (decayed 0, still listed).
+    val h0 = 500000L // arbitrary epoch-hour base
+    val batches = Seq(
+      Seq(("hot", h0, 100L), ("was_loud", h0, 800L), ("ancient", h0 - 45, 999L)),
+      Seq(("hot", h0 + 5, 200L), ("was_loud", h0 + 1, 50L)),
+      Seq(("hot", h0 + 6, 400L), ("late", h0 + 2, 64L), ("hot", h0 + 1, 32L)))
+    val src = tmpDir("decaysrc") + "/data"
+    batches.zipWithIndex.foreach { case (b, i) =>
+      b.toDF("site", "h", "ibyt").repartition(1)
+        .write.mode("append").parquet(src)
+    }
+    def run(filesPerTrigger: Option[Int]) = {
+      val rd = spark.readStream.schema("site STRING, h LONG, ibyt LONG")
+      val stream = filesPerTrigger.fold(rd)(n =>
+        rd.option("maxFilesPerTrigger", n)).parquet(src)
+        .as[StreamingOps.FlowMass]
+      StreamingOps.topkDecayedFrom(stream)
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getLong(3))).toSeq
+    }
+    val split = run(Some(1))
+    val whole = run(None)
+    assert(split === whole, "decayed state differs across batch splits")
+    val m = split.map(r => r._1 -> r._4).toMap
+    // read-out semantics: hot's age-0 mass at full 2^20 weight;
+    // was_loud idle 6h → its h0+1 mass carries 5 halvings beyond its
+    // own ring age; ancient is out of window
+    assert(m("ancient") === 0L)
+    val sh = 1L << StreamingOps.DecayQShift
+    assert(m("hot") === 400L * sh + 200L * (sh >> 1) + 32L * (sh >> 5) +
+      100L * (sh >> 6))
+    assert(m("was_loud") === 50L * (sh >> 5) + 800L * (sh >> 6))
+    assert(m("late") === 64L * (sh >> 4))
   }
 
   test("streaming Holt state is batch-split invariant and matches a sequential replay") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def run(src: String, filesPerTrigger: Option[Int], name: String) = {
-        val rd = spark.readStream.schema("flowsrc STRING, h LONG, cents LONG")
-        val stream = filesPerTrigger.fold(rd)(n =>
-          rd.option("maxFilesPerTrigger", n)).parquet(src)
-          .as[StreamingOps.FlowCents]
-        StreamingOps.holtForecastFrom(stream, name)
-          .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
-            r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSeq
-      }
-      // the from-scratch sequential recursion, the same parse tree as
-      // the processor / batch HOF / recursive-CTE oracle
-      def replay(rows: Seq[(String, Long, Long)]) =
-        rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (k, rs) =>
-          val hourly = rs.groupBy(_._2).view.mapValues(_.map(_._3).sum)
-            .toSeq.sortBy(_._1)
-          var l = 0.0; var b = 0.0; var n = 0L
-          hourly.foreach { case (_, cents) =>
-            val x = cents.toDouble / 100.0
-            if (n == 0L) { l = x; b = 0.0; n = 1L }
-            else {
-              val ln = 0.5 * x + 0.5 * (l + b)
-              b = 0.25 * (ln - l) + 0.75 * b
-              l = ln; n += 1L
-            }
+    def run(src: String, filesPerTrigger: Option[Int]) = {
+      val rd = spark.readStream.schema("flowsrc STRING, h LONG, cents LONG")
+      val stream = filesPerTrigger.fold(rd)(n =>
+        rd.option("maxFilesPerTrigger", n)).parquet(src)
+        .as[StreamingOps.FlowCents]
+      StreamingOps.holtForecastFrom(stream)
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
+          r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSeq
+    }
+    // the from-scratch sequential recursion, the same parse tree as
+    // the processor / batch HOF / recursive-CTE oracle
+    def replay(rows: Seq[(String, Long, Long)]) =
+      rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (k, rs) =>
+        val hourly = rs.groupBy(_._2).view.mapValues(_.map(_._3).sum)
+          .toSeq.sortBy(_._1)
+        var l = 0.0; var b = 0.0; var n = 0L
+        hourly.foreach { case (_, cents) =>
+          val x = cents.toDouble / 100.0
+          if (n == 0L) { l = x; b = 0.0; n = 1L }
+          else {
+            val ln = 0.5 * x + 0.5 * (l + b)
+            b = 0.25 * (ln - l) + 0.75 * b
+            l = ln; n += 1L
           }
-          def r6(v: Double) = BigDecimal(v)
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          (k, n, r6(l), r6(b), r6(l + b), r6(l + 3.0 * b))
         }
-      val h0 = 800000L
-      // Part 1 — split invariance: hours stay within one ring span
-      // (state is then order-free), with a GAP hour, a LATE old row in
-      // the last batch, and a single-hour sparse key.
-      val b1 = (1 to 10).map(j => ("A", h0 + j, 100L * j + 7L)) ++
-        Seq(("B", h0 + 3, 250L))
-      val b2 = (12 to 18).map(j => ("A", h0 + j, 55L * j))
-      val b3 = Seq(("A", h0 + 20, 999L), ("A", h0 + 2, 1234L)) // late old hour
-      val batches = Seq(b1, b2, b3)
-      val src = tmpDir("holtsrc") + "/data"
-      batches.foreach(_.toDF("flowsrc", "h", "cents").repartition(1)
-        .write.mode("append").parquet(src))
-      val split = run(src, Some(1), "holt_split")
-      val whole = run(src, None, "holt_whole")
-      assert(split === whole, "Holt state differs across batch splits")
-      assert(split === replay(batches.flatten),
-        "Holt state differs from the sequential replay")
-      // Part 2 — the CLOSE path: a 40-hour span (single ordered file)
-      // forces slots off the 24-slot ring, folding them incrementally;
-      // the final state must still equal the from-scratch recursion.
-      val wide = (1 to 40).filterNot(j => j % 7 == 0)
-        .map(j => ("W", h0 + j, 31L * j + (j % 5) * 13L))
-      val src2 = tmpDir("holtsrc2") + "/data"
-      wide.toDF("flowsrc", "h", "cents").repartition(1)
-        .coalesce(1).write.mode("append").parquet(src2)
-      val closed = run(src2, None, "holt_closed")
-      assert(closed === replay(wide),
-        "incremental closure diverged from the sequential recursion")
-      assert(closed.head._2 === wide.map(_._2).distinct.size.toLong)
-      // Part 3 — disorder tolerance: the SAME >ring span arriving
-      // out of time order within one batch (Spark guarantees no row
-      // order after the groupByKey shuffle). Without the per-batch
-      // sort, arrival order would close ring slots early and silently
-      // drop rows > ring hours older than the batch's max hour.
-      val scrambled = {
-        val arr = wide.toArray
-        val rnd = new scala.util.Random(42)
-        for (i <- arr.indices.reverse.dropRight(1)) {
-          val j = rnd.nextInt(i + 1)
-          val t = arr(i); arr(i) = arr(j); arr(j) = t
-        }
-        arr.toSeq
+        def r6(v: Double) = BigDecimal(v)
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        (k, n, r6(l), r6(b), r6(l + b), r6(l + 3.0 * b))
       }
-      assert(scrambled !== wide) // the shuffle actually moved rows
-      val src3 = tmpDir("holtsrc3") + "/data"
-      scrambled.toDF("flowsrc", "h", "cents").repartition(1)
-        .coalesce(1).write.mode("append").parquet(src3)
-      val disordered = run(src3, None, "holt_disordered")
-      assert(disordered === replay(wide),
-        "out-of-order arrival within a batch diverged from the replay")
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    val h0 = 800000L
+    // Part 1 — split invariance: hours stay within one ring span
+    // (state is then order-free), with a GAP hour, a LATE old row in
+    // the last batch, and a single-hour sparse key.
+    val b1 = (1 to 10).map(j => ("A", h0 + j, 100L * j + 7L)) ++
+      Seq(("B", h0 + 3, 250L))
+    val b2 = (12 to 18).map(j => ("A", h0 + j, 55L * j))
+    val b3 = Seq(("A", h0 + 20, 999L), ("A", h0 + 2, 1234L)) // late old hour
+    val batches = Seq(b1, b2, b3)
+    val src = tmpDir("holtsrc") + "/data"
+    batches.foreach(_.toDF("flowsrc", "h", "cents").repartition(1)
+      .write.mode("append").parquet(src))
+    val split = run(src, Some(1))
+    val whole = run(src, None)
+    assert(split === whole, "Holt state differs across batch splits")
+    assert(split === replay(batches.flatten),
+      "Holt state differs from the sequential replay")
+    // Part 2 — the CLOSE path: a 40-hour span (single ordered file)
+    // forces slots off the 24-slot ring, folding them incrementally;
+    // the final state must still equal the from-scratch recursion.
+    val wide = (1 to 40).filterNot(j => j % 7 == 0)
+      .map(j => ("W", h0 + j, 31L * j + (j % 5) * 13L))
+    val src2 = tmpDir("holtsrc2") + "/data"
+    wide.toDF("flowsrc", "h", "cents").repartition(1)
+      .coalesce(1).write.mode("append").parquet(src2)
+    val closed = run(src2, None)
+    assert(closed === replay(wide),
+      "incremental closure diverged from the sequential recursion")
+    assert(closed.head._2 === wide.map(_._2).distinct.size.toLong)
+    // Part 3 — disorder tolerance: the SAME >ring span arriving
+    // out of time order within one batch (Spark guarantees no row
+    // order after the groupByKey shuffle). Without the per-batch
+    // sort, arrival order would close ring slots early and silently
+    // drop rows > ring hours older than the batch's max hour.
+    val scrambled = {
+      val arr = wide.toArray
+      val rnd = new scala.util.Random(42)
+      for (i <- arr.indices.reverse.dropRight(1)) {
+        val j = rnd.nextInt(i + 1)
+        val t = arr(i); arr(i) = arr(j); arr(j) = t
+      }
+      arr.toSeq
+    }
+    assert(scrambled !== wide) // the shuffle actually moved rows
+    val src3 = tmpDir("holtsrc3") + "/data"
+    scrambled.toDF("flowsrc", "h", "cents").repartition(1)
+      .coalesce(1).write.mode("append").parquet(src3)
+    val disordered = run(src3, None)
+    assert(disordered === replay(wide),
+      "out-of-order arrival within a batch diverged from the replay")
   }
 
   test("streaming EWMA ring is batch-split invariant and matches a from-scratch replay") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val h0 = 600000L
-      // key A: 15 present baseline hours (≥ the 12-bucket gate), one
-      // GAP hour, a LATE row for an old hour in the last batch; key B:
-      // too sparse — must be filtered by the n_base gate.
-      val rows = (1 to 10).map(j => ("A", h0 + j, 10L * j)) ++
-        Seq(("A", h0 + 12, 77L), ("B", h0 + 3, 5L))
-      val rows2 = (13 to 16).map(j => ("A", h0 + j, 7L * j)) ++ Seq(("B", h0 + 9, 5L))
-      val rows3 = Seq(("A", h0 + 17, 123L), ("A", h0 + 2, 1000L)) // late old hour
-      val batches = Seq(rows, rows2, rows3)
-      val src = tmpDir("ewmasrc") + "/data"
-      batches.foreach { b =>
-        b.toDF("pr", "h", "ibyt").repartition(1)
-          .write.mode("append").parquet(src)
-      }
-      def run(filesPerTrigger: Option[Int], name: String) = {
-        val rd = spark.readStream.schema("pr STRING, h LONG, ibyt LONG")
-        val stream = filesPerTrigger.fold(rd)(n =>
-          rd.option("maxFilesPerTrigger", n)).parquet(src)
-          .as[StreamingOps.ProtoMass]
-        StreamingOps.ewmaForecastFrom(stream, name)
-          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-            r.getDouble(3))).toSeq
-      }
-      val split = run(Some(1), "ewma_split")
-      val whole = run(None, "ewma_whole")
-      assert(split === whole, "EWMA ring differs across batch splits")
-      // from-scratch replay: hourly sums for A, lags of hour hmax+1,
-      // present = vol > 0, weights in the same left-to-right order
-      val all = batches.flatten.filter(_._1 == "A")
-      val hourly = all.groupBy(_._2).view.mapValues(_.map(_._3).sum).toMap
-      val hmax = hourly.keys.max
-      val wts = graft.flow.FlowAnalytics.EwmaWeights
-      var num = 0.0; var den = 0.0; var nb = 0L
-      (1 to graft.flow.FlowAnalytics.EwmaLags).foreach { j =>
-        val v = hourly.getOrElse(hmax + 1 - j, 0L)
-        num += (if (v > 0) wts(j - 1) * v.toDouble else 0.0)
-        den += (if (v > 0) wts(j - 1) else 0.0)
-        if (v > 0) nb += 1
-      }
-      val expect = BigDecimal(num / den)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(split.map(_._1) === Seq("A"), "sparse key B must not pass the n_base gate")
-      assert(split.head === (("A", hmax + 1, nb, expect)))
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    val h0 = 600000L
+    // key A: 15 present baseline hours (≥ the 12-bucket gate), one
+    // GAP hour, a LATE row for an old hour in the last batch; key B:
+    // too sparse — must be filtered by the n_base gate.
+    val rows = (1 to 10).map(j => ("A", h0 + j, 10L * j)) ++
+      Seq(("A", h0 + 12, 77L), ("B", h0 + 3, 5L))
+    val rows2 = (13 to 16).map(j => ("A", h0 + j, 7L * j)) ++ Seq(("B", h0 + 9, 5L))
+    val rows3 = Seq(("A", h0 + 17, 123L), ("A", h0 + 2, 1000L)) // late old hour
+    val batches = Seq(rows, rows2, rows3)
+    val src = tmpDir("ewmasrc") + "/data"
+    batches.foreach { b =>
+      b.toDF("pr", "h", "ibyt").repartition(1)
+        .write.mode("append").parquet(src)
+    }
+    def run(filesPerTrigger: Option[Int]) = {
+      val rd = spark.readStream.schema("pr STRING, h LONG, ibyt LONG")
+      val stream = filesPerTrigger.fold(rd)(n =>
+        rd.option("maxFilesPerTrigger", n)).parquet(src)
+        .as[StreamingOps.ProtoMass]
+      StreamingOps.ewmaForecastFrom(stream)
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getDouble(3))).toSeq
+    }
+    val split = run(Some(1))
+    val whole = run(None)
+    assert(split === whole, "EWMA ring differs across batch splits")
+    // from-scratch replay: hourly sums for A, lags of hour hmax+1,
+    // present = vol > 0, weights in the same left-to-right order
+    val all = batches.flatten.filter(_._1 == "A")
+    val hourly = all.groupBy(_._2).view.mapValues(_.map(_._3).sum).toMap
+    val hmax = hourly.keys.max
+    val wts = graft.flow.FlowAnalytics.EwmaWeights
+    var num = 0.0; var den = 0.0; var nb = 0L
+    (1 to graft.flow.FlowAnalytics.EwmaLags).foreach { j =>
+      val v = hourly.getOrElse(hmax + 1 - j, 0L)
+      num += (if (v > 0) wts(j - 1) * v.toDouble else 0.0)
+      den += (if (v > 0) wts(j - 1) else 0.0)
+      if (v > 0) nb += 1
+    }
+    val expect = BigDecimal(num / den)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    assert(split.map(_._1) === Seq("A"), "sparse key B must not pass the n_base gate")
+    assert(split.head === (("A", hmax + 1, nb, expect)))
   }
 
   test("silence watch max-merge is batch-split invariant and thresholds correctly") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val h0 = 700000L
-      // "live" reports up to the global max; "dark" stops 30h before
-      // (reported); "edge" stops exactly 24h before (reported — the
-      // >= boundary); "recent" stops 23h before (not reported). A late
-      // out-of-order row for dark must NOT advance its max.
-      val batches = Seq(
-        Seq(("live", h0), ("dark", h0 + 10), ("edge", h0 + 16), ("recent", h0 + 17)),
-        Seq(("live", h0 + 20), ("dark", h0 + 5)), // late old row for dark
-        Seq(("live", h0 + 40)))
-      val src = tmpDir("silsrc") + "/data"
-      batches.foreach(_.toDF("site", "h").repartition(1)
-        .write.mode("append").parquet(src))
-      def run(filesPerTrigger: Option[Int], name: String) = {
-        val rd = spark.readStream.schema("site STRING, h LONG")
-        val stream = filesPerTrigger.fold(rd)(n =>
-          rd.option("maxFilesPerTrigger", n)).parquet(src)
-          .as[StreamingOps.SiteSeen]
-        StreamingOps.silenceWatchFrom(stream, name)
-          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-            r.getLong(3))).toSeq
-      }
-      val split = run(Some(1), "sil_split")
-      val whole = run(None, "sil_whole")
-      assert(split === whole, "silence state differs across batch splits")
-      assert(split.map(_._1) === Seq("dark", "edge"),
-        s"expected exactly dark+edge reported, got $split")
-      val m = split.map(r => r._1 -> r._4).toMap
-      assert(m("dark") === 30L, "late old row must not advance dark's max")
-      assert(m("edge") === 24L, "the >= threshold boundary must report")
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    val h0 = 700000L
+    // "live" reports up to the global max; "dark" stops 30h before
+    // (reported); "edge" stops exactly 24h before (reported — the
+    // >= boundary); "recent" stops 23h before (not reported). A late
+    // out-of-order row for dark must NOT advance its max.
+    val batches = Seq(
+      Seq(("live", h0), ("dark", h0 + 10), ("edge", h0 + 16), ("recent", h0 + 17)),
+      Seq(("live", h0 + 20), ("dark", h0 + 5)), // late old row for dark
+      Seq(("live", h0 + 40)))
+    val src = tmpDir("silsrc") + "/data"
+    batches.foreach(_.toDF("site", "h").repartition(1)
+      .write.mode("append").parquet(src))
+    def run(filesPerTrigger: Option[Int]) = {
+      val rd = spark.readStream.schema("site STRING, h LONG")
+      val stream = filesPerTrigger.fold(rd)(n =>
+        rd.option("maxFilesPerTrigger", n)).parquet(src)
+        .as[StreamingOps.SiteSeen]
+      StreamingOps.silenceWatchFrom(stream)
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getLong(3))).toSeq
+    }
+    val split = run(Some(1))
+    val whole = run(None)
+    assert(split === whole, "silence state differs across batch splits")
+    assert(split.map(_._1) === Seq("dark", "edge"),
+      s"expected exactly dark+edge reported, got $split")
+    val m = split.map(r => r._1 -> r._4).toMap
+    assert(m("dark") === 30L, "late old row must not advance dark's max")
+    assert(m("edge") === 24L, "the >= threshold boundary must report")
   }
 
   test("timer-closed sessions are batch-split invariant and match the gap-merge rule") {
