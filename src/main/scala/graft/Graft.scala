@@ -60,8 +60,14 @@ object Graft {
     */
   val ListingThresholdKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
+  /** Reads parquet TIMESTAMP(NANOS) columns as INT64 nanoseconds. */
+  val NanosAsLongKey = "spark.sql.legacy.parquet.nanosAsLong"
+
   /** Settings a running session can change, so [[session]] applies
     * them again to a session it did not create: the UTC time zone,
+    * parquet INT64 TIMESTAMP(NANOS) columns read as longs (Spark 4's
+    * reader rejects them otherwise; `events.ts` has shipped in that
+    * shape, and [[Tables.events]] and the events stream convert it),
     * and a listing threshold of [[MicroBatchMaxFiles]]. The file
     * stream source hands each micro-batch's files, already known from
     * its own directory scan, to a new file index as plain paths; at
@@ -73,6 +79,7 @@ object Graft {
     */
   val RuntimeConfs: Seq[(String, String)] = Seq(
     "spark.sql.session.timeZone" -> "UTC",
+    NanosAsLongKey -> "true",
     ListingThresholdKey -> MicroBatchMaxFiles.toString)
 
   def builder(): SparkSession.Builder =
@@ -104,8 +111,8 @@ object Graft {
     // session, but `configure` may have overridden them, so set them
     // here last — otherwise a shared-session caller gets 'undefined
     // function', host-local-zone window buckets that no longer match
-    // the oracle, or a listing job in every micro-batch of more than
-    // 32 files.
+    // the oracle, an events read that rejects nanosecond timestamps,
+    // or a listing job in every micro-batch of more than 32 files.
     register(spark)
     RuntimeConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     // static settings cannot be changed on a running session, so all

@@ -55,10 +55,6 @@ object Staging {
     try f finally spark.conf.set(key, prev)
   }
 
-  /** Staged-artifact parquet layout version: bump when any staged
-    * table's SCHEMA changes, so a new library version can never be
-    * poisoned by artifacts a previous version published.
-    */
   /** Conditional narrow-scan spread for CPU-bound map chains (PQ
     * encode/ADC folds, PNG codec, per-token hashing, char-gram
     * kernels): a one-file scan — the shape every small-SF bench run
@@ -118,6 +114,10 @@ object Staging {
     }
   }
 
+  /** Staged-artifact parquet layout version: bump when any staged
+    * table's SCHEMA changes, so a new library version can never be
+    * poisoned by artifacts a previous version published.
+    */
   private val LakeFormatVersion = 1
 
   /** Session conf key for the cross-session artifact lake root. When

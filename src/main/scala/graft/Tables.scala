@@ -41,13 +41,13 @@ object Tables {
 
   /** `events.ts` has shipped in two physical shapes across testdata
     * generations: INT64 TIMESTAMP(NANOS) (which Spark 4's parquet
-    * reader surfaces only as long via `nanosAsLong`) and plain µs
-    * TIMESTAMP. Normalize BOTH to µs TIMESTAMP_NTZ by inspecting the
-    * read schema, so every downstream query and its DuckDB oracle
-    * (which reads either file as µs TIMESTAMP) agree bit-for-bit.
+    * reader surfaces only as long via `nanosAsLong`, which
+    * [[Graft.RuntimeConfs]] sets) and plain µs TIMESTAMP. Normalize
+    * BOTH to µs TIMESTAMP_NTZ by inspecting the read schema, so every
+    * downstream query and its DuckDB oracle (which reads either file
+    * as µs TIMESTAMP) agree bit-for-bit.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(spark, dir, "events")
     val tsConv = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

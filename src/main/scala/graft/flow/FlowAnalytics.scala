@@ -832,7 +832,7 @@ object FlowAnalytics {
     * (`flow_distinct_hll_sliding`) — the payoff of a MERGEABLE
     * sketch: per-hour HLL register blocks are built from the raw scan
     * ONCE, then every 4-hour sliding window is a union (elementwise
-    * max) of 4 hourly blocks via [[graft.functions.HllUnionAgg]]. The
+    * max) of 4 hourly blocks via [[graft.functions.HllMergeAgg]]. The
     * explode-by-offset fan-out runs over SKETCHES (groups × 512 B),
     * never raw events — at 100 TB the alternative (re-counting
     * distinct per overlapping window) scans the corpus once per
@@ -854,7 +854,7 @@ object FlowAnalytics {
       .select($"event_type", $"sk",
         expr("hour - make_interval(0, 0, 0, 0, k, 0, 0)").as("win_start"))
       .groupBy($"event_type", $"win_start")
-      .agg(graft.functions.HllAgg.hll_union($"sk", HllP).as("wsk"),
+      .agg(graft.functions.HllAgg.hll_merge($"sk", HllP).as("wsk"),
         count(lit(1)).as("n_hours"))
       .select($"event_type", $"win_start", $"n_hours",
         round(graft.functions.HllAgg.hll_estimate($"wsk", HllP), 6).as("hll_est_r"))
@@ -1145,7 +1145,7 @@ object FlowAnalytics {
     */
   def valueQuantilesSliding(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.functions.KllAgg.{kll_sketch, kll_union, kll_values}
+    import graft.functions.KllSketchAgg.{kll_sketch, kll_union, kll_values}
     val ev = graft.Tables.events(spark, dir)
       .select($"value", date_trunc("hour", $"ts").as("hr"))
     val hourly = ev.groupBy($"hr")
@@ -1441,7 +1441,7 @@ object FlowAnalytics {
     * — every (protocol × port) grouping level's distinct-user count
     * from ONE corpus pass: the per-(pr, dp) HLL cell table is built
     * once, and all coarser CUBE cells MERGE cell sketches
-    * ([[graft.functions.HllAgg.HllUnionAgg]]) instead of re-scanning
+    * ([[graft.functions.HllMergeAgg]]) instead of re-scanning
     * raw data — the B18b/B34 re-aggregation rule applied to the
     * grouping lattice, and exactly how a 100 TB OLAP cube serves
     * COUNT(DISTINCT): distinct doesn't re-aggregate, mergeable
@@ -1451,12 +1451,12 @@ object FlowAnalytics {
     */
   def distinctCube(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.functions.HllAgg.{hll_sketch, hll_union, hll_estimate}
+    import graft.functions.HllAgg.{hll_sketch, hll_merge, hll_estimate}
     val flows = asFlows(spark, dir)
     val cells = flows.groupBy($"pr", $"dp")
       .agg(hll_sketch($"user_id".cast("string"), HllP).as("sk"))
     val approx = cells.cube($"pr", $"dp")
-      .agg(hll_union($"sk", HllP).as("csk"))
+      .agg(hll_merge($"sk", HllP).as("csk"))
       .select(coalesce($"pr", lit("ALL")).as("pr_g"),
         coalesce($"dp", lit(-1)).as("dp_g"),
         hll_estimate($"csk", HllP).as("est"))

@@ -2,10 +2,8 @@ package graft.functions
 
 import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types._
@@ -29,8 +27,6 @@ object BloomUtil {
     * and merging can sanity-check shape compatibility.
     */
   def headerBytes: Int = 8
-
-  def emptyFilter(m: Int, k: Int): Array[Long] = new Array[Long](m / 64)
 
   private def md5(bytes: Array[Byte]): Array[Byte] =
     java.security.MessageDigest.getInstance("MD5").digest(bytes)
@@ -64,13 +60,6 @@ object BloomUtil {
     }
     true
   }
-
-  def serialize(words: Array[Long], m: Int, k: Int): Array[Byte] = {
-    val bb = ByteBuffer.allocate(headerBytes + words.length * 8)
-    bb.putInt(m); bb.putInt(k)
-    words.foreach(bb.putLong)
-    bb.array()
-  }
 }
 
 /** `bloom_agg(key, m, k)` — build an m-bit Bloom filter with k
@@ -91,55 +80,21 @@ case class BloomAgg(
     kHashes: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends ArraySketchAgg[Array[Long]] {
 
   require(mBits > 0 && mBits % 64 == 0, "bloom_agg requires m > 0, multiple of 64")
   require(kHashes > 0, "bloom_agg requires k > 0")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (key.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"bloom_agg requires a STRING key, got ${key.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
+  override protected def inputTypes = Seq((key, StringType, "key"))
+  override protected def cells: Cells[Array[Long]] = Cells.Or
+  override protected def length: Int = mBits / 64
+  override protected def header: Seq[Int] = Seq(mBits, kHashes)
+  override protected def add(words: Array[Long], k: Any): Unit =
+    BloomUtil.add(words, k.asInstanceOf[UTF8String], mBits, kHashes)
 
-  override def children: Seq[Expression] = Seq(key)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): Array[Long] =
-    BloomUtil.emptyFilter(mBits, kHashes)
-
-  override def update(words: Array[Long], input: InternalRow): Array[Long] = {
-    val k = key.eval(input)
-    if (k != null) BloomUtil.add(words, k.asInstanceOf[UTF8String], mBits, kHashes)
-    words
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < a.length) { a(i) |= b(i); i += 1 }
-    a
-  }
-
-  override def eval(words: Array[Long]): Any =
-    BloomUtil.serialize(words, mBits, kHashes)
-
-  override def serialize(words: Array[Long]): Array[Byte] =
-    BloomUtil.serialize(words, mBits, kHashes)
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    bb.getInt; bb.getInt
-    val words = BloomUtil.emptyFilter(mBits, kHashes)
-    var i = 0
-    while (i < words.length) { words(i) = bb.getLong; i += 1 }
-    words
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomAgg =
-    copy(inputAggBufferOffset = newOffset)
+  override protected def input: Expression = key
+  override protected def withOffsets(m: Int, i: Int): BloomAgg =
+    copy(mutableAggBufferOffset = m, inputAggBufferOffset = i)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): BloomAgg =
     copy(key = c(0))
   override def prettyName: String = "bloom_agg"
@@ -173,8 +128,7 @@ case class BloomContains(left: Expression, right: Expression)
 
 object BloomAgg {
   def bloom_agg(key: Column, m: Int, k: Int): Column =
-    ExpressionUtils.column(
-      BloomAgg(ExpressionUtils.expression(key), m, k).toAggregateExpression())
+    BloomAgg(GraftAgg.expr(key), m, k).toColumn
 
   def bloom_contains(filter: Column, key: Column): Column =
     ExpressionUtils.column(BloomContains(

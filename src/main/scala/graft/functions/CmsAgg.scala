@@ -2,10 +2,8 @@ package graft.functions
 
 import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types._
@@ -55,13 +53,6 @@ object CmsUtil {
     }
     est
   }
-
-  def serialize(counters: Array[Long], depth: Int, width: Int): Array[Byte] = {
-    val bb = ByteBuffer.allocate(headerBytes + counters.length * 8)
-    bb.putInt(depth); bb.putInt(width)
-    counters.foreach(bb.putLong)
-    bb.array()
-  }
 }
 
 /** `cms_sketch(key, d, w)` — Count-Min sketch over a group's string
@@ -81,54 +72,20 @@ case class CmsAgg(
     width: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends ArraySketchAgg[Array[Long]] {
 
   require(depth > 0 && width > 0, "cms_sketch requires depth > 0 and width > 0")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (key.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"cms_sketch requires a STRING key, got ${key.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
+  override protected def inputTypes = Seq((key, StringType, "key"))
+  override protected def cells: Cells[Array[Long]] = Cells.Add
+  override protected def length: Int = depth * width
+  override protected def header: Seq[Int] = Seq(depth, width)
+  override protected def add(counters: Array[Long], k: Any): Unit =
+    CmsUtil.add(counters, k.asInstanceOf[UTF8String], depth, width, 1L)
 
-  override def children: Seq[Expression] = Seq(key)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](depth * width)
-
-  override def update(counters: Array[Long], input: InternalRow): Array[Long] = {
-    val k = key.eval(input)
-    if (k != null)
-      CmsUtil.add(counters, k.asInstanceOf[UTF8String], depth, width, 1L)
-    counters
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < a.length) { a(i) += b(i); i += 1 }
-    a
-  }
-
-  override def eval(counters: Array[Long]): Any =
-    CmsUtil.serialize(counters, depth, width)
-
-  override def serialize(counters: Array[Long]): Array[Byte] =
-    CmsUtil.serialize(counters, depth, width)
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    bb.getInt; bb.getInt
-    val counters = new Array[Long](depth * width)
-    var i = 0
-    while (i < counters.length) { counters(i) = bb.getLong; i += 1 }
-    counters
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CmsAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CmsAgg =
-    copy(inputAggBufferOffset = newOffset)
+  override protected def input: Expression = key
+  override protected def withOffsets(m: Int, i: Int): CmsAgg =
+    copy(mutableAggBufferOffset = m, inputAggBufferOffset = i)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): CmsAgg =
     copy(key = c(0))
   override def prettyName: String = "cms_sketch"
@@ -161,8 +118,7 @@ case class CmsQuery(left: Expression, right: Expression) extends BinaryExpressio
 
 object CmsAgg {
   def cms_sketch(key: Column, depth: Int, width: Int): Column =
-    ExpressionUtils.column(
-      CmsAgg(ExpressionUtils.expression(key), depth, width).toAggregateExpression())
+    CmsAgg(GraftAgg.expr(key), depth, width).toColumn
 
   def cms_query(sketch: Column, key: Column): Column =
     ExpressionUtils.column(CmsQuery(

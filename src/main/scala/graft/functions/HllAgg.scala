@@ -2,10 +2,8 @@ package graft.functions
 
 import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types._
@@ -61,13 +59,6 @@ object HllUtil {
     if (raw <= 2.5 * m && zeros > 0) m * math.log(m.toDouble / zeros)
     else raw
   }
-
-  def serialize(regs: Array[Byte], m: Int): Array[Byte] = {
-    val bb = ByteBuffer.allocate(headerBytes + m)
-    bb.putInt(m)
-    bb.put(regs)
-    bb.array()
-  }
 }
 
 /** `hll_sketch(key, p)` — HyperLogLog with m = 2^p registers as a
@@ -81,112 +72,59 @@ case class HllAgg(
     p: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] {
+  extends ArraySketchAgg[Array[Byte]] {
 
   require(p >= 4 && p <= 16, "hll_sketch requires 4 <= p <= 16")
-  private def m: Int = 1 << p
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (key.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"hll_sketch requires a STRING key, got ${key.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
+  override protected def inputTypes = Seq((key, StringType, "key"))
+  override protected def cells: Cells[Array[Byte]] = Cells.Max
+  override protected def length: Int = 1 << p
+  override protected def header: Seq[Int] = Seq(length)
+  override protected def add(regs: Array[Byte], k: Any): Unit =
+    HllUtil.add(regs, k.asInstanceOf[UTF8String], length)
 
-  override def children: Seq[Expression] = Seq(key)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](m)
-
-  override def update(regs: Array[Byte], input: InternalRow): Array[Byte] = {
-    val k = key.eval(input)
-    if (k != null) HllUtil.add(regs, k.asInstanceOf[UTF8String], m)
-    regs
-  }
-
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i < a.length) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
-    a
-  }
-
-  override def eval(regs: Array[Byte]): Any = HllUtil.serialize(regs, m)
-  override def serialize(regs: Array[Byte]): Array[Byte] = HllUtil.serialize(regs, m)
-  override def deserialize(bytes: Array[Byte]): Array[Byte] =
-    java.util.Arrays.copyOfRange(bytes, HllUtil.headerBytes, HllUtil.headerBytes + m)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllAgg =
-    copy(inputAggBufferOffset = newOffset)
+  override protected def input: Expression = key
+  override protected def withOffsets(m: Int, i: Int): HllAgg =
+    copy(mutableAggBufferOffset = m, inputAggBufferOffset = i)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): HllAgg =
     copy(key = c(0))
   override def prettyName: String = "hll_sketch"
 }
 
-/** `hll_union(sketch, p)` — merges PRE-BUILT [[HllAgg]] register
+/** `hll_merge(sketch, p)` — merges PRE-BUILT [[HllAgg]] register
   * blocks (elementwise max). This is the re-aggregation half of the
   * sketch contract: hourly sketches roll up into daily / sliding /
   * all-time windows without touching raw data again — at 100 TB the
   * raw scan happens once, and every coarser panel is a merge over
-  * (groups × m bytes), not a re-count.
+  * (groups × m bytes), not a re-count. (Not `hll_union`: that name
+  * is Spark's built-in over its own `hll_sketch_agg` sketches.)
   */
-case class HllUnionAgg(
+case class HllMergeAgg(
     child: Expression,
     p: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] {
+  extends ArraySketchAgg[Array[Byte]] {
 
-  require(p >= 4 && p <= 16, "hll_union requires 4 <= p <= 16")
-  private def m: Int = 1 << p
+  require(p >= 4 && p <= 16, "hll_merge requires 4 <= p <= 16")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(
-        s"hll_union expects a BINARY sketch, got ${child.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](m)
-
-  override def update(regs: Array[Byte], input: InternalRow): Array[Byte] = {
-    val s = child.eval(input)
-    if (s != null) {
-      val bytes = s.asInstanceOf[Array[Byte]]
-      require(bytes.length == HllUtil.headerBytes + m,
-        s"hll_union: sketch built with a different p (got ${bytes.length} bytes, want ${HllUtil.headerBytes + m})")
-      var i = 0
-      while (i < m) {
-        val b = bytes(HllUtil.headerBytes + i)
-        if (b > regs(i)) regs(i) = b
-        i += 1
-      }
-    }
-    regs
+  override protected def inputTypes = Seq((child, BinaryType, "sketch"))
+  override protected def cells: Cells[Array[Byte]] = Cells.Max
+  override protected def length: Int = 1 << p
+  override protected def header: Seq[Int] = Seq(length)
+  override protected def add(regs: Array[Byte], sketch: Any): Unit = {
+    val bytes = sketch.asInstanceOf[Array[Byte]]
+    require(bytes.length == HllUtil.headerBytes + length,
+      s"hll_merge: sketch built with a different p (got ${bytes.length} bytes, want ${HllUtil.headerBytes + length})")
+    cells.mergeInto(regs, deserialize(bytes))
   }
 
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i < a.length) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
-    a
-  }
-
-  override def eval(regs: Array[Byte]): Any = HllUtil.serialize(regs, m)
-  override def serialize(regs: Array[Byte]): Array[Byte] = HllUtil.serialize(regs, m)
-  override def deserialize(bytes: Array[Byte]): Array[Byte] =
-    java.util.Arrays.copyOfRange(bytes, HllUtil.headerBytes, HllUtil.headerBytes + m)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllUnionAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllUnionAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): HllUnionAgg =
+  override protected def input: Expression = child
+  override protected def withOffsets(m: Int, i: Int): HllMergeAgg =
+    copy(mutableAggBufferOffset = m, inputAggBufferOffset = i)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): HllMergeAgg =
     copy(child = c(0))
-  override def prettyName: String = "hll_union"
+  override def prettyName: String = "hll_merge"
 }
 
 /** `hll_estimate(sketch, p)` — cardinality estimate of an
@@ -211,13 +149,9 @@ case class HllEstimate(child: Expression, p: Int) extends UnaryExpression {
 }
 
 object HllAgg {
-  def hll_sketch(key: Column, p: Int): Column =
-    ExpressionUtils.column(
-      HllAgg(ExpressionUtils.expression(key), p).toAggregateExpression())
+  def hll_sketch(key: Column, p: Int): Column = HllAgg(GraftAgg.expr(key), p).toColumn
 
-  def hll_union(sketch: Column, p: Int): Column =
-    ExpressionUtils.column(
-      HllUnionAgg(ExpressionUtils.expression(sketch), p).toAggregateExpression())
+  def hll_merge(sketch: Column, p: Int): Column = HllMergeAgg(GraftAgg.expr(sketch), p).toColumn
 
   def hll_estimate(sketch: Column, p: Int): Column =
     ExpressionUtils.column(HllEstimate(ExpressionUtils.expression(sketch), p))

@@ -3,11 +3,9 @@ package graft.functions
 import java.nio.ByteBuffer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** KLL-style mergeable quantile sketch (Karnin–Lang–Liberty 2016),
@@ -154,103 +152,43 @@ object KllUtil {
   }
 }
 
-/** `kll_quantiles(value, k, ps...)` — mergeable quantile sketch
-  * aggregate returning ARRAY<DOUBLE> of the requested quantiles.
-  * k trades size for accuracy (rank error ≈ O(log(n/k)/k); k = 256
-  * holds ~1% observed on 10⁶-row planted distributions).
+/** The compactor stack as an aggregate: the buffer, its merge and
+  * its bytes, shared by the raw-value builder and the sketch merger.
   */
-case class KllAgg(
-    value: Expression,
-    k: Int,
-    ps: Seq[Double],
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllUtil.Sketch] {
-
-  require(k >= 16 && k <= 4096, "kll_quantiles requires 16 <= k <= 4096")
-  require(ps.nonEmpty && ps.forall(p => p > 0 && p <= 1),
-    "kll_quantiles requires quantiles in (0, 1]")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (value.dataType != DoubleType)
-      TypeCheckResult.TypeCheckFailure(
-        s"kll_quantiles requires a DOUBLE value, got ${value.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def children: Seq[Expression] = Seq(value)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+abstract class KllBuildAgg extends SketchAgg[KllUtil.Sketch] {
+  def k: Int
 
   override def createAggregationBuffer(): KllUtil.Sketch = new KllUtil.Sketch(k)
-
-  override def update(s: KllUtil.Sketch, input: InternalRow): KllUtil.Sketch = {
-    val v = value.eval(input)
-    if (v != null) s.insert(v.asInstanceOf[Double])
-    s
-  }
-
   override def merge(a: KllUtil.Sketch, b: KllUtil.Sketch): KllUtil.Sketch = {
     a.mergeIn(b); a
   }
-
-  override def eval(s: KllUtil.Sketch): Any =
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(s.quantiles(ps))
-
   override def serialize(s: KllUtil.Sketch): Array[Byte] = s.serialize()
-  override def deserialize(bytes: Array[Byte]): KllUtil.Sketch =
-    KllUtil.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KllAgg =
-    copy(value = c(0))
-  override def prettyName: String = "kll_quantiles"
+  override def deserialize(bytes: Array[Byte]): KllUtil.Sketch = KllUtil.deserialize(bytes)
 }
 
 /** `kll_sketch(value, k)` — the sketch itself as BINARY, for staged /
-  * re-aggregated panels (the [[HllAgg]]/[[HllUnionAgg]] contract for
+  * re-aggregated panels (the [[HllAgg]]/[[HllMergeAgg]] contract for
   * quantiles): build per-fine-bucket sketches once, then roll coarser
-  * windows up by MERGE without touching raw data again.
+  * windows up by MERGE without touching raw data again. k trades
+  * size for accuracy (rank error ≈ O(log(n/k)/k); k = 256 holds ~1%
+  * observed on 10⁶-row planted distributions). `kll_quantiles(value,
+  * k, ps...)` is `kll_values(kll_sketch(value, k), ps...)`.
   */
 case class KllSketchAgg(
     value: Expression,
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllUtil.Sketch] {
+  extends KllBuildAgg {
 
   require(k >= 16 && k <= 4096, "kll_sketch requires 16 <= k <= 4096")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (value.dataType != DoubleType)
-      TypeCheckResult.TypeCheckFailure(
-        s"kll_sketch requires a DOUBLE value, got ${value.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
+  override protected def inputTypes = Seq((value, DoubleType, "value"))
+  override protected def add(s: KllUtil.Sketch, v: Any): Unit = s.insert(v.asInstanceOf[Double])
 
-  override def children: Seq[Expression] = Seq(value)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): KllUtil.Sketch = new KllUtil.Sketch(k)
-  override def update(s: KllUtil.Sketch, input: InternalRow): KllUtil.Sketch = {
-    val v = value.eval(input)
-    if (v != null) s.insert(v.asInstanceOf[Double])
-    s
-  }
-  override def merge(a: KllUtil.Sketch, b: KllUtil.Sketch): KllUtil.Sketch = {
-    a.mergeIn(b); a
-  }
-  override def eval(s: KllUtil.Sketch): Any = s.serialize()
-  override def serialize(s: KllUtil.Sketch): Array[Byte] = s.serialize()
-  override def deserialize(bytes: Array[Byte]): KllUtil.Sketch =
-    KllUtil.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
+  override protected def input: Expression = value
+  override protected def withOffsets(m: Int, i: Int): KllSketchAgg =
+    copy(mutableAggBufferOffset = m, inputAggBufferOffset = i)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KllSketchAgg =
     copy(value = c(0))
   override def prettyName: String = "kll_sketch"
@@ -266,43 +204,21 @@ case class KllUnionAgg(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllUtil.Sketch] {
+  extends KllBuildAgg {
 
   require(k >= 16 && k <= 4096, "kll_union requires 16 <= k <= 4096")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(
-        s"kll_union expects a BINARY sketch, got ${child.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): KllUtil.Sketch = new KllUtil.Sketch(k)
-  override def update(s: KllUtil.Sketch, input: InternalRow): KllUtil.Sketch = {
-    val v = child.eval(input)
-    if (v != null) {
-      val other = KllUtil.deserialize(v.asInstanceOf[Array[Byte]])
-      require(other.k == s.k,
-        s"kll_union: sketch k=${other.k} does not match declared k=${s.k}")
-      s.mergeIn(other)
-    }
-    s
+  override protected def inputTypes = Seq((child, BinaryType, "sketch"))
+  override protected def add(s: KllUtil.Sketch, v: Any): Unit = {
+    val other = KllUtil.deserialize(v.asInstanceOf[Array[Byte]])
+    require(other.k == s.k,
+      s"kll_union: sketch k=${other.k} does not match declared k=${s.k}")
+    s.mergeIn(other)
   }
-  override def merge(a: KllUtil.Sketch, b: KllUtil.Sketch): KllUtil.Sketch = {
-    a.mergeIn(b); a
-  }
-  override def eval(s: KllUtil.Sketch): Any = s.serialize()
-  override def serialize(s: KllUtil.Sketch): Array[Byte] = s.serialize()
-  override def deserialize(bytes: Array[Byte]): KllUtil.Sketch =
-    KllUtil.deserialize(bytes)
 
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllUnionAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllUnionAgg =
-    copy(inputAggBufferOffset = newOffset)
+  override protected def input: Expression = child
+  override protected def withOffsets(m: Int, i: Int): KllUnionAgg =
+    copy(mutableAggBufferOffset = m, inputAggBufferOffset = i)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KllUnionAgg =
     copy(child = c(0))
   override def prettyName: String = "kll_union"
@@ -339,19 +255,20 @@ case class KllValues(child: Expression, ps: Seq[Double])
   override def prettyName: String = "kll_values"
 }
 
-object KllAgg {
+object KllSketchAgg {
+  /** The requested quantiles of `value` per group: the sketch and the
+    * quantile code of [[kll_sketch]] and [[kll_values]], composed.
+    */
   def kll_quantiles(value: Column, k: Int, ps: Seq[Double]): Column =
-    ExpressionUtils.column(
-      KllAgg(ExpressionUtils.expression(value), k, ps).toAggregateExpression())
+    Bridge.column(quantiles(GraftAgg.expr(value), k, ps))
 
-  def kll_sketch(value: Column, k: Int): Column =
-    ExpressionUtils.column(
-      KllSketchAgg(ExpressionUtils.expression(value), k).toAggregateExpression())
+  private[functions] def quantiles(value: Expression, k: Int, ps: Seq[Double]): Expression =
+    KllValues(KllSketchAgg(value, k).toAggregateExpression(), ps)
 
-  def kll_union(sketch: Column, k: Int): Column =
-    ExpressionUtils.column(
-      KllUnionAgg(ExpressionUtils.expression(sketch), k).toAggregateExpression())
+  def kll_sketch(value: Column, k: Int): Column = KllSketchAgg(GraftAgg.expr(value), k).toColumn
+
+  def kll_union(sketch: Column, k: Int): Column = KllUnionAgg(GraftAgg.expr(sketch), k).toColumn
 
   def kll_values(sketch: Column, ps: Seq[Double]): Column =
-    ExpressionUtils.column(KllValues(ExpressionUtils.expression(sketch), ps))
+    Bridge.column(KllValues(GraftAgg.expr(sketch), ps))
 }

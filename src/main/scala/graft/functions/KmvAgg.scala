@@ -2,10 +2,8 @@ package graft.functions
 
 import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types._
@@ -173,29 +171,16 @@ case class KmvAgg(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]] {
+  extends SketchAgg[java.util.TreeSet[java.lang.Long]] {
 
   require(k > 1, "kmv_sketch requires k > 1")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (key.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"kmv_sketch requires a STRING key, got ${key.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def children: Seq[Expression] = Seq(key)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
+  override protected def inputTypes = Seq((key, StringType, "key"))
+  override protected def add(set: java.util.TreeSet[java.lang.Long], v: Any): Unit =
+    KmvUtil.insert(set, k, KmvUtil.hash(v.asInstanceOf[UTF8String]))
 
   override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
     new java.util.TreeSet[java.lang.Long]()
-
-  override def update(set: java.util.TreeSet[java.lang.Long],
-      input: InternalRow): java.util.TreeSet[java.lang.Long] = {
-    val v = key.eval(input)
-    if (v != null) KmvUtil.insert(set, k, KmvUtil.hash(v.asInstanceOf[UTF8String]))
-    set
-  }
 
   override def merge(a: java.util.TreeSet[java.lang.Long],
       b: java.util.TreeSet[java.lang.Long]): java.util.TreeSet[java.lang.Long] = {
@@ -204,19 +189,15 @@ case class KmvAgg(
     a
   }
 
-  override def eval(set: java.util.TreeSet[java.lang.Long]): Any =
-    KmvUtil.serialize(k, set)
-
   override def serialize(set: java.util.TreeSet[java.lang.Long]): Array[Byte] =
     KmvUtil.serialize(k, set)
 
   override def deserialize(bytes: Array[Byte]): java.util.TreeSet[java.lang.Long] =
     KmvUtil.deserialize(bytes)._2
 
-  override def withNewMutableAggBufferOffset(newOffset: Int): KmvAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KmvAgg =
-    copy(inputAggBufferOffset = newOffset)
+  override protected def input: Expression = key
+  override protected def withOffsets(m: Int, i: Int): KmvAgg =
+    copy(mutableAggBufferOffset = m, inputAggBufferOffset = i)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KmvAgg =
     copy(key = c(0))
   override def prettyName: String = "kmv_sketch"
@@ -285,9 +266,7 @@ case class KmvDiffEst(left: Expression, right: Expression) extends KmvBinaryEst 
 }
 
 object KmvAgg {
-  def kmv_sketch(key: Column, k: Int): Column =
-    ExpressionUtils.column(
-      KmvAgg(ExpressionUtils.expression(key), k).toAggregateExpression())
+  def kmv_sketch(key: Column, k: Int): Column = KmvAgg(GraftAgg.expr(key), k).toColumn
   def kmv_estimate(sk: Column): Column =
     ExpressionUtils.column(KmvEstimate(ExpressionUtils.expression(sk)))
   def kmv_union_est(a: Column, b: Column): Column =

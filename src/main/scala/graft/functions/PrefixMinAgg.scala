@@ -4,9 +4,6 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -37,115 +34,54 @@ case class PrefixMinAgg(
     k: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[PrefixMinAgg.Buf] {
+  extends HeapAgg[(Long, Array[Byte])] {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (df.dataType != LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"prefix_min requires a BIGINT df, got ${df.dataType.sql}")
-    else if (gram.dataType != StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"prefix_min requires a STRING gram, got ${gram.dataType.sql}")
-    else if (k.dataType != IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"prefix_min requires an INT k, got ${k.dataType.sql}")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-
+  override protected def inputTypes =
+    Seq((df, LongType, "df"), (gram, StringType, "gram"), (k, IntegerType, "k"))
   override def children: Seq[Expression] = Seq(df, gram, k)
-  override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  import PrefixMinAgg.{Buf, largestFirst}
+  override protected def worstFirst: java.util.Comparator[(Long, Array[Byte])] =
+    PrefixMinAgg.largestFirst
+  override protected def codec: Codec[(Long, Array[Byte])] = PrefixMinAgg.entries
+  override protected def initialK: Int = 0
 
-  override def createAggregationBuffer(): Buf = new Buf
-
-  private def offer(buf: Buf, e: (Long, Array[Byte])): Unit = {
-    if (buf.heap.size < buf.k) buf.heap.add(e)
-    else if (largestFirst.compare(e, buf.heap.peek()) > 0) {
-      buf.heap.poll(); buf.heap.add(e)
-    }
-  }
-
-  /** Re-trim after k could only have GROWN (max-merge): never drops
-    * below-k entries, so no re-expansion is ever needed.
-    */
-  private def trim(buf: Buf): Unit =
-    while (buf.heap.size > buf.k) buf.heap.poll()
-
-  override def update(buf: Buf, input: InternalRow): Buf = {
+  override def update(heap: BoundedHeap[(Long, Array[Byte])], input: InternalRow): BoundedHeap[(Long, Array[Byte])] = {
     val d = df.eval(input); val g = gram.eval(input); val kv = k.eval(input)
     if (d != null && g != null && kv != null) {
       val ki = kv.asInstanceOf[Int]
-      if (buf.k != 0 && ki != buf.k)
+      if (heap.k != 0 && ki != heap.k)
         throw new IllegalArgumentException(
-          s"prefix_min requires k constant per group, saw ${buf.k} then $ki")
-      buf.k = ki
-      offer(buf, (d.asInstanceOf[Long], g.asInstanceOf[UTF8String].getBytes.clone()))
+          s"prefix_min requires k constant per group, saw ${heap.k} then $ki")
+      heap.k = ki
+      heap.offer((d.asInstanceOf[Long], g.asInstanceOf[UTF8String].getBytes.clone()))
     }
-    buf
+    heap
   }
 
-  override def merge(a: Buf, b: Buf): Buf = {
+  /** k could only have GROWN (max-merge), so the re-trim never drops
+    * an entry a larger k would need back.
+    */
+  override def merge(a: BoundedHeap[(Long, Array[Byte])], b: BoundedHeap[(Long, Array[Byte])]): BoundedHeap[(Long, Array[Byte])] = {
     a.k = math.max(a.k, b.k)
-    val it = b.heap.iterator()
-    while (it.hasNext) offer(a, it.next())
-    trim(a)
+    a.mergeIn(b)
+    a.trim()
     a
   }
 
-  override def eval(buf: Buf): Any = {
-    trim(buf)
-    // drain a copy, largest-first → ascending array
-    val copy = new java.util.PriorityQueue[(Long, Array[Byte])](
-      math.max(1, buf.heap.size), largestFirst)
-    copy.addAll(buf.heap)
-    val arr = new Array[Any](copy.size)
-    var i = copy.size - 1
-    while (i >= 0) { arr(i) = UTF8String.fromBytes(copy.poll()._2); i -= 1 }
-    new GenericArrayData(arr)
+  override def eval(heap: BoundedHeap[(Long, Array[Byte])]): Any = {
+    heap.trim()
+    heap.bestFirst(e => UTF8String.fromBytes(e._2))
   }
 
-  override def serialize(buf: Buf): Array[Byte] = {
-    val entries = new Array[(Long, Array[Byte])](buf.heap.size)
-    buf.heap.toArray(entries)
-    val bb = ByteBuffer.allocate(8 + entries.map(e => 12 + e._2.length).sum)
-    bb.putInt(buf.k).putInt(entries.length)
-    entries.foreach { case (d, g) => bb.putLong(d).putInt(g.length).put(g) }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Buf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new Buf
-    buf.k = bb.getInt
-    val n = bb.getInt
-    var i = 0
-    while (i < n) {
-      val d = bb.getLong
-      val g = new Array[Byte](bb.getInt)
-      bb.get(g)
-      buf.heap.add((d, g))
-      i += 1
-    }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): PrefixMinAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): PrefixMinAgg =
-    copy(inputAggBufferOffset = newOffset)
+  override protected def withOffsets(m: Int, i: Int): PrefixMinAgg =
+    copy(mutableAggBufferOffset = m, inputAggBufferOffset = i)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): PrefixMinAgg =
     copy(df = c(0), gram = c(1), k = c(2))
   override def prettyName: String = "prefix_min"
 }
 
 object PrefixMinAgg {
-
-  /** k plus a bounded worst-first heap of (df, gram-utf8-bytes). */
-  final class Buf {
-    var k: Int = 0
-    val heap = new java.util.PriorityQueue[(Long, Array[Byte])](8, largestFirst)
-  }
 
   /** Heap head = the LARGEST (df, gram) — the entry evicted first.
     * Gram bytes compare unsigned-lexicographic (UTF8String binary
@@ -169,9 +105,20 @@ object PrefixMinAgg {
     }
   }
 
+  /** (df, gram bytes) as [long df][int length][bytes]. */
+  private val entries: Codec[(Long, Array[Byte])] = new Codec[(Long, Array[Byte])] {
+    def size(e: (Long, Array[Byte])): Int = 12 + e._2.length
+    def put(bb: ByteBuffer, e: (Long, Array[Byte])): Unit = {
+      bb.putLong(e._1).putInt(e._2.length).put(e._2); ()
+    }
+    def get(bb: ByteBuffer): (Long, Array[Byte]) = {
+      val d = bb.getLong
+      val g = new Array[Byte](bb.getInt)
+      bb.get(g)
+      (d, g)
+    }
+  }
+
   def prefix_min(df: Column, gram: Column, k: Column): Column =
-    ExpressionUtils.column(
-      PrefixMinAgg(ExpressionUtils.expression(df), ExpressionUtils.expression(gram),
-        ExpressionUtils.expression(k))
-        .toAggregateExpression())
+    PrefixMinAgg(GraftAgg.expr(df), GraftAgg.expr(gram), GraftAgg.expr(k)).toColumn
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
-import java.nio.ByteBuffer
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, InterpretedOrdering, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -45,29 +42,10 @@ case class PrefixRowsAgg(
     maxRows: Int = RankRowsAgg.DefaultMaxRows,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[PrefixRowsAgg.Buf] {
+  extends GraftAgg[KeyGroups] with SortedRows[KeyGroups] {
 
-  require(orderKeys.nonEmpty && orderKeys.length == ascending.length &&
-    orderKeys.length == nullsFirst.length, "sort spec arity mismatch")
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val bad = orderKeys.find(e =>
-      !org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(e.dataType))
-    if (bad.isDefined)
-      TypeCheckResult.TypeCheckFailure(
-        s"prefix_rows sort key type ${bad.get.dataType.sql} is not orderable")
-    else if (kExpr.dataType != LongType)
-      TypeCheckResult.TypeCheckFailure(
-        s"prefix_rows k column must be BIGINT, got ${kExpr.dataType.sql}")
-    else if (!payload.dataType.isInstanceOf[StructType])
-      TypeCheckResult.TypeCheckFailure(
-        s"prefix_rows payload must be a struct, got ${payload.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
+  override protected def inputTypes = Seq((kExpr, LongType, "k column"))
   override def children: Seq[Expression] = (orderKeys :+ kExpr) :+ payload
-  override def nullable: Boolean = false
-  private def payloadType: StructType = payload.dataType.asInstanceOf[StructType]
   // rnk: rank()/row_number() value; pend: the row's tie-group END
   // position (== rnk under row_number semantics) — cume_dist's
   // numerator, free to emit from the same fold
@@ -78,30 +56,9 @@ case class PrefixRowsAgg(
       StructField("row", payloadType, nullable = false))),
     containsNull = false)
 
-  private def numKeys: Int = orderKeys.length
-  private def numFields: Int = numKeys + 2 // keys, k, payload
+  override def createAggregationBuffer(): KeyGroups = new KeyGroups(keyOrder, -1)
 
-  @transient private lazy val ascOrd: InterpretedOrdering =
-    new InterpretedOrdering(orderKeys.zipWithIndex.map { case (e, i) =>
-      SortOrder(BoundReference(i, e.dataType, nullable = true),
-        if (ascending(i)) org.apache.spark.sql.catalyst.expressions.Ascending
-        else org.apache.spark.sql.catalyst.expressions.Descending,
-        if (nullsFirst(i)) org.apache.spark.sql.catalyst.expressions.NullsFirst
-        else org.apache.spark.sql.catalyst.expressions.NullsLast,
-        Seq.empty)
-    })
-
-  @transient private lazy val keyOrd: java.util.Comparator[UnsafeRow] =
-    (a: UnsafeRow, b: UnsafeRow) => ascOrd.compare(a, b)
-
-  @transient private lazy val proj: UnsafeProjection =
-    UnsafeProjection.create(children)
-
-  override def createAggregationBuffer(): PrefixRowsAgg.Buf =
-    new PrefixRowsAgg.Buf(
-      new java.util.TreeMap[UnsafeRow, java.util.ArrayList[UnsafeRow]](keyOrd), 0, -1)
-
-  private def setK(buf: PrefixRowsAgg.Buf, kLong: Long): Unit = {
+  private def setK(buf: KeyGroups, kLong: Long): Unit = {
     if (kLong > maxRows)
       throw new IllegalStateException(
         s"$prettyName: a group's prefix needs $kLong rows (> maxRows=$maxRows). " +
@@ -112,24 +69,14 @@ case class PrefixRowsAgg(
     buf.k = math.max(kLong, 0L).toInt
   }
 
-  private def evict(buf: PrefixRowsAgg.Buf): Unit = {
+  private def evict(buf: KeyGroups): Unit = {
     if (rankSemantics) {
       // rank(): a boundary tie GROUP is kept whole while fewer than k
       // rows sort strictly before it
-      while (buf.map.size > 1 &&
-          buf.total - buf.map.lastEntry().getValue.size >= buf.k) {
-        val ev = buf.map.pollLastEntry()
-        buf.total -= ev.getValue.size
-      }
+      while (buf.map.size > 1 && buf.total - buf.lastGroupSize >= buf.k) buf.dropLastGroup()
     } else {
       // row_number(): evict single worst rows down to k
-      while (buf.total > buf.k && !buf.map.isEmpty) {
-        val last = buf.map.lastEntry()
-        val rows = last.getValue
-        rows.remove(rows.size - 1)
-        buf.total -= 1
-        if (rows.isEmpty) buf.map.remove(last.getKey)
-      }
+      while (buf.total > buf.k && !buf.map.isEmpty) buf.dropLastRow()
     }
     if (buf.total > maxRows)
       throw new IllegalStateException(
@@ -139,49 +86,29 @@ case class PrefixRowsAgg(
           "(spark.graft.rankLimitRewrite=false).")
   }
 
-  private def insert(buf: PrefixRowsAgg.Buf, row: UnsafeRow): Unit = {
-    if (buf.k < 0) setK(buf, row.getLong(numKeys))
-    if (buf.k == 0) return
-    val existing = buf.map.get(row)
-    if (existing != null) {
-      existing.add(row.copy())
-      buf.total += 1
-    } else {
-      if (!buf.map.isEmpty && keyOrd.compare(row, buf.map.lastKey()) > 0 &&
-          buf.total >= buf.k) {
-        return // strictly worse than the worst retained key, prefix full
-      }
-      val stored = row.copy()
-      val lst = new java.util.ArrayList[UnsafeRow](1)
-      lst.add(stored)
-      buf.map.put(stored, lst)
-      buf.total += 1
-    }
-    evict(buf)
+  /** A key strictly worse than the worst retained one is dropped once
+    * the prefix is full.
+    */
+  private def insert(buf: KeyGroups, row: UnsafeRow): Unit = {
+    if (buf.k < 0) setK(buf, row.getLong(orderKeys.length))
+    if (buf.k > 0 && buf.insert(row, full = buf.total >= buf.k)) evict(buf)
   }
 
-  override def update(buf: PrefixRowsAgg.Buf, input: InternalRow): PrefixRowsAgg.Buf = {
+  override def update(buf: KeyGroups, input: InternalRow): KeyGroups = {
     insert(buf, proj(input))
     buf
   }
 
-  override def merge(a: PrefixRowsAgg.Buf, b: PrefixRowsAgg.Buf): PrefixRowsAgg.Buf = {
+  override def merge(a: KeyGroups, b: KeyGroups): KeyGroups = {
     if (a.k < 0) a.k = b.k
-    val it = b.map.values().iterator()
-    while (it.hasNext) {
-      val rows = it.next()
-      var i = 0
-      while (i < rows.size) { insert(a, rows.get(i)); i += 1 }
-    }
+    b.foreachRow(insert(a, _))
     a
   }
 
-  override def eval(buf: PrefixRowsAgg.Buf): Any = {
+  override def eval(buf: KeyGroups): Any = {
     val out = new scala.collection.mutable.ArrayBuffer[Any](buf.total)
     var cum = 0L
-    val it = buf.map.values().iterator()
-    while (it.hasNext) {
-      val rows = it.next()
+    buf.map.values().forEach { rows =>
       var i = 0
       while (i < rows.size) {
         // rank(): every row of a tie group shares the group rank;
@@ -189,10 +116,7 @@ case class PrefixRowsAgg(
         // boundary group past k (rank mode) — trimmed here.
         val rnk = if (rankSemantics) cum + 1 else cum + i + 1
         val pend = if (rankSemantics) cum + rows.size else cum + i + 1
-        if (rnk <= buf.k) {
-          out += InternalRow(rnk, pend,
-            rows.get(i).getStruct(numKeys + 1, payloadType.length).copy())
-        }
+        if (rnk <= buf.k) out += InternalRow(rnk, pend, payloadOf(rows.get(i)))
         i += 1
       }
       cum += rows.size
@@ -200,79 +124,15 @@ case class PrefixRowsAgg(
     new GenericArrayData(out.toArray)
   }
 
-  override def serialize(buf: PrefixRowsAgg.Buf): Array[Byte] = {
-    var size = 8
-    val it0 = buf.map.values().iterator()
-    while (it0.hasNext) {
-      val rows = it0.next()
-      size += 4
-      var i = 0
-      while (i < rows.size) { size += 4 + rows.get(i).getSizeInBytes; i += 1 }
-    }
-    val out = ByteBuffer.allocate(size)
-    out.putInt(buf.k)
-    out.putInt(buf.map.size)
-    val it = buf.map.values().iterator()
-    while (it.hasNext) {
-      val rows = it.next()
-      out.putInt(rows.size)
-      var i = 0
-      while (i < rows.size) {
-        val bytes = rows.get(i).getBytes
-        out.putInt(bytes.length)
-        out.put(bytes)
-        i += 1
-      }
-    }
-    out.array()
-  }
+  override def serialize(buf: KeyGroups): Array[Byte] = buf.serialize(rowCodec)
+  override def deserialize(bytes: Array[Byte]): KeyGroups =
+    KeyGroups.deserialize(bytes, keyOrder, rowCodec)
 
-  override def deserialize(bytes: Array[Byte]): PrefixRowsAgg.Buf = {
-    val in = ByteBuffer.wrap(bytes)
-    val buf = createAggregationBuffer()
-    buf.k = in.getInt
-    val nGroups = in.getInt
-    var g = 0
-    while (g < nGroups) {
-      val m = in.getInt
-      var i = 0
-      var lst: java.util.ArrayList[UnsafeRow] = null
-      while (i < m) {
-        val len = in.getInt
-        val arr = new Array[Byte](len)
-        in.get(arr)
-        val row = new UnsafeRow(numFields)
-        row.pointTo(arr, len)
-        if (lst == null) {
-          lst = new java.util.ArrayList[UnsafeRow](m)
-          buf.map.put(row, lst)
-        }
-        lst.add(row)
-        i += 1
-      }
-      buf.total += m
-      g += 1
-    }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): PrefixRowsAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): PrefixRowsAgg =
-    copy(inputAggBufferOffset = newOffset)
+  override protected def withOffsets(m: Int, i: Int): PrefixRowsAgg =
+    copy(mutableAggBufferOffset = m, inputAggBufferOffset = i)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): PrefixRowsAgg =
     copy(orderKeys = newChildren.dropRight(2),
       kExpr = newChildren(newChildren.length - 2), payload = newChildren.last)
 
   override def prettyName: String = "prefix_rows"
-}
-
-object PrefixRowsAgg {
-  /** Ordered key-group map + retained count + per-group k (−1 until
-    * the first row/merge supplies it).
-    */
-  final class Buf(
-      val map: java.util.TreeMap[UnsafeRow, java.util.ArrayList[UnsafeRow]],
-      var total: Int,
-      var k: Int)
 }

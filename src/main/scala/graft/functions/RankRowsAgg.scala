@@ -1,10 +1,7 @@
 package graft.functions
 
-import java.nio.ByteBuffer
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, InterpretedOrdering, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -59,94 +56,31 @@ case class RankRowsAgg(
     maxRows: Int = RankRowsAgg.DefaultMaxRows,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[RankRowsAgg.Buf] {
+  extends GraftAgg[KeyGroups] with SortedRows[KeyGroups] {
 
   require(k > 0, "rankk_rows requires k > 0")
   require(maxRows >= k, "rankk_rows maxRows must be >= k")
-  require(orderKeys.nonEmpty && orderKeys.length == ascending.length &&
-    orderKeys.length == nullsFirst.length, "sort spec arity mismatch")
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val bad = orderKeys.find(e =>
-      !org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(e.dataType))
-    if (bad.isDefined)
-      TypeCheckResult.TypeCheckFailure(
-        s"rankk_rows sort key type ${bad.get.dataType.sql} is not orderable")
-    else if (!payload.dataType.isInstanceOf[StructType])
-      TypeCheckResult.TypeCheckFailure(
-        s"rankk_rows payload must be a struct, got ${payload.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
-  }
 
   override def children: Seq[Expression] = orderKeys :+ payload
-  override def nullable: Boolean = false
-  private def payloadType: StructType = payload.dataType.asInstanceOf[StructType]
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("rnk", IntegerType, nullable = false),
       StructField("row", payloadType, nullable = false))),
     containsNull = false)
 
-  private def numKeys: Int = orderKeys.length
-  private def numFields: Int = numKeys + 1
+  override def createAggregationBuffer(): KeyGroups = new KeyGroups(keyOrder, k)
 
-  /** Best-key-first ordering per the window's sort spec, compared
-    * over the key prefix of the stored (keys..., payload) row.
+  /** Insert a full row, then restore the eviction invariant (worst
+    * group first; eviction only ever shrinks state, so one backwards
+    * sweep suffices). A key strictly worse than the current worst
+    * retained key only enters if the invariant still admits a NEW
+    * worst group.
     */
-  @transient private lazy val ascOrd: InterpretedOrdering =
-    new InterpretedOrdering(orderKeys.zipWithIndex.map { case (e, i) =>
-      SortOrder(BoundReference(i, e.dataType, nullable = true),
-        if (ascending(i)) org.apache.spark.sql.catalyst.expressions.Ascending
-        else org.apache.spark.sql.catalyst.expressions.Descending,
-        if (nullsFirst(i)) org.apache.spark.sql.catalyst.expressions.NullsFirst
-        else org.apache.spark.sql.catalyst.expressions.NullsLast,
-        Seq.empty)
-    })
-
-  @transient private lazy val keyOrd: java.util.Comparator[UnsafeRow] =
-    (a: UnsafeRow, b: UnsafeRow) => ascOrd.compare(a, b)
-
-  @transient private lazy val proj: UnsafeProjection =
-    UnsafeProjection.create(children)
-
-  override def createAggregationBuffer(): RankRowsAgg.Buf =
-    new RankRowsAgg.Buf(new java.util.TreeMap[UnsafeRow, java.util.ArrayList[UnsafeRow]](keyOrd), 0)
-
-  /** Insert a full row (copied only once admitted — `row` may be a
-    * reused projection buffer), then restore the eviction invariant
-    * (worst group first; eviction only ever shrinks state, so one
-    * backwards sweep suffices).
-    */
-  private def insert(buf: RankRowsAgg.Buf, row: UnsafeRow): Unit = {
-    val existing = buf.map.get(row)
-    if (existing != null) {
-      existing.add(row.copy())
-      buf.total += 1
-    } else {
-      // admission check: a key strictly worse than the current worst
-      // retained key can only enter if the invariant still admits a
-      // NEW worst group
-      if (!buf.map.isEmpty && keyOrd.compare(row, buf.map.lastKey()) > 0 &&
-          (if (dense) buf.map.size >= k else buf.total >= k)) {
-        return
-      }
-      val stored = row.copy()
-      val lst = new java.util.ArrayList[UnsafeRow](1)
-      lst.add(stored)
-      buf.map.put(stored, lst)
-      buf.total += 1
-    }
-    if (dense) {
-      while (buf.map.size > k) {
-        val ev = buf.map.pollLastEntry()
-        buf.total -= ev.getValue.size
-      }
-    } else {
-      while (buf.map.size > 1 && buf.total - buf.map.lastEntry().getValue.size >= k) {
-        val ev = buf.map.pollLastEntry()
-        buf.total -= ev.getValue.size
-      }
-    }
+  private def insert(buf: KeyGroups, row: UnsafeRow): Unit = {
+    if (!buf.insert(row, full = if (dense) buf.map.size >= k else buf.total >= k)) return
+    def overfull =
+      if (dense) buf.map.size > k else buf.map.size > 1 && buf.total - buf.lastGroupSize >= k
+    while (overfull) buf.dropLastGroup()
     // post-eviction: what's left is rows the semantics force us to
     // keep — if that still exceeds the cap, fail loud before the
     // buffer becomes an executor OOM (aggregation state can't spill)
@@ -160,101 +94,35 @@ case class RankRowsAgg(
     }
   }
 
-  override def update(buf: RankRowsAgg.Buf, input: InternalRow): RankRowsAgg.Buf = {
+  override def update(buf: KeyGroups, input: InternalRow): KeyGroups = {
     insert(buf, proj(input))
     buf
   }
 
-  override def merge(a: RankRowsAgg.Buf, b: RankRowsAgg.Buf): RankRowsAgg.Buf = {
-    val it = b.map.values().iterator()
-    while (it.hasNext) {
-      val rows = it.next()
-      var i = 0
-      while (i < rows.size) { insert(a, rows.get(i)); i += 1 }
-    }
+  override def merge(a: KeyGroups, b: KeyGroups): KeyGroups = {
+    b.foreachRow(insert(a, _))
     a
   }
 
-  override def eval(buf: RankRowsAgg.Buf): Any = {
+  override def eval(buf: KeyGroups): Any = {
     val out = new scala.collection.mutable.ArrayBuffer[Any](buf.total)
     var cum = 0
     var keyIdx = 0
-    val it = buf.map.values().iterator()
-    while (it.hasNext) {
-      val rows = it.next()
+    buf.map.values().forEach { rows =>
       val rnk = if (dense) keyIdx + 1 else cum + 1
-      if (rnk <= k) {
-        var i = 0
-        while (i < rows.size) {
-          out += InternalRow(rnk,
-            rows.get(i).getStruct(numKeys, payloadType.length).copy())
-          i += 1
-        }
-      }
+      if (rnk <= k) rows.forEach(r => out += InternalRow(rnk, payloadOf(r)))
       cum += rows.size
       keyIdx += 1
     }
     new GenericArrayData(out.toArray)
   }
 
-  override def serialize(buf: RankRowsAgg.Buf): Array[Byte] = {
-    var size = 4
-    val it0 = buf.map.values().iterator()
-    while (it0.hasNext) {
-      val rows = it0.next()
-      size += 4
-      var i = 0
-      while (i < rows.size) { size += 4 + rows.get(i).getSizeInBytes; i += 1 }
-    }
-    val out = ByteBuffer.allocate(size)
-    out.putInt(buf.map.size)
-    val it = buf.map.values().iterator()
-    while (it.hasNext) {
-      val rows = it.next()
-      out.putInt(rows.size)
-      var i = 0
-      while (i < rows.size) {
-        val bytes = rows.get(i).getBytes
-        out.putInt(bytes.length)
-        out.put(bytes)
-        i += 1
-      }
-    }
-    out.array()
-  }
+  override def serialize(buf: KeyGroups): Array[Byte] = buf.serialize(rowCodec)
+  override def deserialize(bytes: Array[Byte]): KeyGroups =
+    KeyGroups.deserialize(bytes, keyOrder, rowCodec)
 
-  override def deserialize(bytes: Array[Byte]): RankRowsAgg.Buf = {
-    val in = ByteBuffer.wrap(bytes)
-    val nGroups = in.getInt
-    val buf = createAggregationBuffer()
-    var g = 0
-    while (g < nGroups) {
-      val m = in.getInt
-      var i = 0
-      var lst: java.util.ArrayList[UnsafeRow] = null
-      while (i < m) {
-        val len = in.getInt
-        val arr = new Array[Byte](len)
-        in.get(arr)
-        val row = new UnsafeRow(numFields)
-        row.pointTo(arr, len)
-        if (lst == null) {
-          lst = new java.util.ArrayList[UnsafeRow](m)
-          buf.map.put(row, lst)
-        }
-        lst.add(row)
-        i += 1
-      }
-      buf.total += m
-      g += 1
-    }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): RankRowsAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): RankRowsAgg =
-    copy(inputAggBufferOffset = newOffset)
+  override protected def withOffsets(m: Int, i: Int): RankRowsAgg =
+    copy(mutableAggBufferOffset = m, inputAggBufferOffset = i)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): RankRowsAgg =
     copy(orderKeys = newChildren.dropRight(1), payload = newChildren.last)
 
@@ -268,9 +136,4 @@ object RankRowsAgg {
     * before the 2 GB serialization wall.
     */
   val DefaultMaxRows: Int = 1 << 20
-
-  /** Ordered key-group map + total retained row count. */
-  final class Buf(
-      val map: java.util.TreeMap[UnsafeRow, java.util.ArrayList[UnsafeRow]],
-      var total: Int)
 }

@@ -6,9 +6,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -42,21 +40,14 @@ case class SpaceSavingAgg(
     weight: Option[Expression] = None,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[String, (Long, Long)]] {
+  extends GraftAgg[mutable.HashMap[String, (Long, Long)]] {
 
   require(k > 0, "space_saving requires k > 0")
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType != StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"space_saving requires a STRING key, got ${child.dataType.sql}")
-    else if (weight.exists(_.dataType != LongType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"space_saving weight must be BIGINT, got ${weight.get.dataType.sql}")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+  override protected def inputTypes =
+    (child, StringType, "key") +: weight.map((_, LongType, "weight")).toSeq
 
   override def children: Seq[Expression] = child +: weight.toSeq
-  override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("key", StringType, nullable = false),
@@ -160,10 +151,8 @@ case class SpaceSavingAgg(
     m
   }
 
-  override def withNewMutableAggBufferOffset(newOffset: Int): SpaceSavingAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): SpaceSavingAgg =
-    copy(inputAggBufferOffset = newOffset)
+  override protected def withOffsets(m: Int, i: Int): SpaceSavingAgg =
+    copy(mutableAggBufferOffset = m, inputAggBufferOffset = i)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): SpaceSavingAgg =
     copy(child = c.head, weight = if (c.length > 1) Some(c(1)) else None)
   override def prettyName: String =
@@ -172,14 +161,11 @@ case class SpaceSavingAgg(
 
 object SpaceSavingAgg {
   def space_saving(key: Column, k: Int): Column =
-    ExpressionUtils.column(
-      SpaceSavingAgg(ExpressionUtils.expression(key), k).toAggregateExpression())
+    SpaceSavingAgg(GraftAgg.expr(key), k).toColumn
 
   /** ClickHouse `topKWeighted`: each row contributes `weight` instead
     * of 1 (top talkers by BYTES at bounded memory).
     */
   def space_saving_weighted(key: Column, weight: Column, k: Int): Column =
-    ExpressionUtils.column(
-      SpaceSavingAgg(ExpressionUtils.expression(key), k,
-        Some(ExpressionUtils.expression(weight))).toAggregateExpression())
+    SpaceSavingAgg(GraftAgg.expr(key), k, Some(GraftAgg.expr(weight))).toColumn
 }

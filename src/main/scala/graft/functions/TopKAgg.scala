@@ -4,9 +4,6 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** `topk_agg(x, k)` — exact top-k values per group as a descending
@@ -24,83 +21,40 @@ case class TopKAgg(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.PriorityQueue[Double]] {
+  extends HeapAgg[Double] {
 
   require(k > 0, "topk_agg requires k > 0")
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == DoubleType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"topk_agg requires a DOUBLE column, got ${child.dataType.sql}")
-
+  override protected def inputTypes = Seq((child, DoubleType, "column"))
   override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
-  override def createAggregationBuffer(): java.util.PriorityQueue[Double] =
-    new java.util.PriorityQueue[Double](k + 1) // min-heap
+  // smaller is worse: Double.compare, the order Spark sorts doubles in
+  override protected def worstFirst: Ordering[Double] = Ordering.Double.TotalOrdering
+  override protected def codec: Codec[Double] = TopKAgg.doubles
+  override protected def initialK: Int = k
 
-  override def update(heap: java.util.PriorityQueue[Double], input: InternalRow): java.util.PriorityQueue[Double] = {
+  override def update(heap: BoundedHeap[Double], input: InternalRow): BoundedHeap[Double] = {
     val v = child.eval(input)
-    if (v != null) {
-      val d = v.asInstanceOf[Double]
-      if (heap.size < k) heap.add(d)
-      else if (heap.peek() < d) { heap.poll(); heap.add(d) }
-    }
+    if (v != null) heap.offer(v.asInstanceOf[Double])
     heap
   }
 
-  override def merge(a: java.util.PriorityQueue[Double], b: java.util.PriorityQueue[Double]): java.util.PriorityQueue[Double] = {
-    val it = b.iterator()
-    while (it.hasNext) {
-      val d = it.next()
-      if (a.size < k) a.add(d)
-      else if (a.peek() < d) { a.poll(); a.add(d) }
-    }
-    a
-  }
+  override def eval(heap: BoundedHeap[Double]): Any = heap.bestFirst(identity)
 
-  override def eval(heap: java.util.PriorityQueue[Double]): Any = {
-    // drain a COPY: as a window function Spark calls eval repeatedly
-    // on the same buffer (once per output row), so consuming the
-    // buffer itself would return the top-k for the first row only
-    val copy = new java.util.PriorityQueue[Double](heap)
-    val arr = new Array[Double](copy.size)
-    var i = copy.size - 1
-    while (i >= 0) { arr(i) = copy.poll(); i -= 1 } // min-heap drain → desc
-    new GenericArrayData(arr)
-  }
-
-  override def serialize(heap: java.util.PriorityQueue[Double]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + heap.size * 8)
-    bb.putInt(heap.size)
-    val it = heap.iterator()
-    while (it.hasNext) bb.putDouble(it.next())
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): java.util.PriorityQueue[Double] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val heap = createAggregationBuffer()
-    var i = 0
-    while (i < n) { heap.add(bb.getDouble); i += 1 }
-    heap
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): TopKAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): TopKAgg =
-    copy(inputAggBufferOffset = newOffset)
+  override protected def withOffsets(m: Int, i: Int): TopKAgg =
+    copy(mutableAggBufferOffset = m, inputAggBufferOffset = i)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): TopKAgg =
     copy(child = newChildren.head)
   override def prettyName: String = "topk_agg"
 }
 
 object TopKAgg {
-  def topk_agg(c: Column, k: Int): Column =
-    ExpressionUtils.column(
-      TopKAgg(ExpressionUtils.expression(c), k).toAggregateExpression())
+  private val doubles: Codec[Double] = new Codec[Double] {
+    def size(d: Double): Int = 8
+    def put(bb: ByteBuffer, d: Double): Unit = { bb.putDouble(d); () }
+    def get(bb: ByteBuffer): Double = bb.getDouble
+  }
+
+  def topk_agg(c: Column, k: Int): Column = TopKAgg(GraftAgg.expr(c), k).toColumn
 }

@@ -4,9 +4,6 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.{Bridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 
 /** `topk_by(score, id, k)` — exact top-k (score, id) pairs per group,
@@ -26,90 +23,34 @@ case class TopKByAgg(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.PriorityQueue[(Double, Long)]] {
+  extends HeapAgg[(Double, Long)] {
 
   require(k > 0, "topk_by requires k > 0")
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (score.dataType != DoubleType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"topk_by requires a DOUBLE score, got ${score.dataType.sql}")
-    else if (id.dataType != LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"topk_by requires a BIGINT id, got ${id.dataType.sql}")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-
+  override protected def inputTypes =
+    Seq((score, DoubleType, "score"), (id, LongType, "id"))
   override def children: Seq[Expression] = Seq(score, id)
-  override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("score", DoubleType, nullable = false))),
     containsNull = false)
 
-  import TopKByAgg.worstFirst
+  override protected def worstFirst: java.util.Comparator[(Double, Long)] = TopKByAgg.worstFirst
+  override protected def codec: Codec[(Double, Long)] = TopKByAgg.pairs
+  override protected def initialK: Int = k
 
-  private def better(a: (Double, Long), b: (Double, Long)): Boolean =
-    worstFirst.compare(a, b) > 0
-
-  override def createAggregationBuffer(): java.util.PriorityQueue[(Double, Long)] =
-    new java.util.PriorityQueue[(Double, Long)](k + 1, worstFirst)
-
-  override def update(heap: java.util.PriorityQueue[(Double, Long)], input: InternalRow): java.util.PriorityQueue[(Double, Long)] = {
+  override def update(heap: BoundedHeap[(Double, Long)], input: InternalRow): BoundedHeap[(Double, Long)] = {
     val s = score.eval(input); val i = id.eval(input)
-    if (s != null && i != null) {
-      val e = (s.asInstanceOf[Double], i.asInstanceOf[Long])
-      if (heap.size < k) heap.add(e)
-      else if (better(e, heap.peek())) { heap.poll(); heap.add(e) }
-    }
+    if (s != null && i != null) heap.offer((s.asInstanceOf[Double], i.asInstanceOf[Long]))
     heap
   }
 
-  override def merge(a: java.util.PriorityQueue[(Double, Long)], b: java.util.PriorityQueue[(Double, Long)]): java.util.PriorityQueue[(Double, Long)] = {
-    val it = b.iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (a.size < k) a.add(e)
-      else if (better(e, a.peek())) { a.poll(); a.add(e) }
-    }
-    a
-  }
+  override def eval(heap: BoundedHeap[(Double, Long)]): Any =
+    heap.bestFirst { case (s, d) => InternalRow(d, s) }
 
-  override def eval(heap: java.util.PriorityQueue[(Double, Long)]): Any = {
-    // drain a COPY (window-eval safety, see TopKAgg.eval)
-    val copy = new java.util.PriorityQueue[(Double, Long)](k + 1, worstFirst)
-    copy.addAll(heap)
-    val arr = new Array[Any](copy.size)
-    var i = copy.size - 1
-    while (i >= 0) { // worst-first drain → best-first array
-      val (s, d) = copy.poll()
-      arr(i) = InternalRow(d, s)
-      i -= 1
-    }
-    new GenericArrayData(arr)
-  }
-
-  override def serialize(heap: java.util.PriorityQueue[(Double, Long)]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + heap.size * 16)
-    bb.putInt(heap.size)
-    val it = heap.iterator()
-    while (it.hasNext) { val (s, i) = it.next(); bb.putDouble(s); bb.putLong(i) }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): java.util.PriorityQueue[(Double, Long)] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val heap = createAggregationBuffer()
-    var i = 0
-    while (i < n) { heap.add((bb.getDouble, bb.getLong)); i += 1 }
-    heap
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): TopKByAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): TopKByAgg =
-    copy(inputAggBufferOffset = newOffset)
+  override protected def withOffsets(m: Int, i: Int): TopKByAgg =
+    copy(mutableAggBufferOffset = m, inputAggBufferOffset = i)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): TopKByAgg =
     copy(score = c(0), id = c(1))
   override def prettyName: String = "topk_by"
@@ -130,8 +71,12 @@ object TopKByAgg {
     }
   }
 
+  private val pairs: Codec[(Double, Long)] = new Codec[(Double, Long)] {
+    def size(e: (Double, Long)): Int = 16
+    def put(bb: ByteBuffer, e: (Double, Long)): Unit = { bb.putDouble(e._1).putLong(e._2); () }
+    def get(bb: ByteBuffer): (Double, Long) = (bb.getDouble, bb.getLong)
+  }
+
   def topk_by(score: Column, id: Column, k: Int): Column =
-    ExpressionUtils.column(
-      TopKByAgg(ExpressionUtils.expression(score), ExpressionUtils.expression(id), k)
-        .toAggregateExpression())
+    TopKByAgg(GraftAgg.expr(score), GraftAgg.expr(id), k).toColumn
 }

@@ -1,12 +1,8 @@
 package graft.functions
 
-import java.nio.ByteBuffer
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, InterpretedOrdering, SortDirection, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
+import org.apache.spark.sql.types.{ArrayType, DataType}
 
 /** Bounded-heap top-k FULL ROWS per group, ordered by an arbitrary
   * multi-column sort spec — the aggregate behind
@@ -23,7 +19,7 @@ import org.apache.spark.sql.types._
   * shuffles and full-sorts every row of every group.
   *
   * `children` = the sort-key expressions followed by the payload
-  * struct; `directions`/`nullFirsts` carry the per-key sort spec
+  * struct; `ascending`/`nullsFirst` carry the per-key sort spec
   * (kept as primitives so the case-class stays trivially
   * serializable).
   */
@@ -35,129 +31,28 @@ case class TopKRowsAgg(
     payload: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.PriorityQueue[UnsafeRow]] {
+  extends HeapAgg[UnsafeRow] with SortedRows[BoundedHeap[UnsafeRow]] {
 
   require(k > 0, "topk_rows requires k > 0")
-  require(orderKeys.nonEmpty && orderKeys.length == ascending.length &&
-    orderKeys.length == nullsFirst.length, "sort spec arity mismatch")
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val bad = orderKeys.find(e =>
-      !org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(e.dataType))
-    if (bad.isDefined)
-      TypeCheckResult.TypeCheckFailure(
-        s"topk_rows sort key type ${bad.get.dataType.sql} is not orderable")
-    else if (!payload.dataType.isInstanceOf[StructType])
-      TypeCheckResult.TypeCheckFailure(
-        s"topk_rows payload must be a struct, got ${payload.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
-  }
 
   override def children: Seq[Expression] = orderKeys :+ payload
-  override def nullable: Boolean = false
-  private def payloadType: StructType = payload.dataType.asInstanceOf[StructType]
   override def dataType: DataType = ArrayType(payloadType, containsNull = false)
 
-  private def numKeys: Int = orderKeys.length
+  /** WORST stored row at the head (reverse of the sort order). */
+  @transient override protected lazy val worstFirst: Ordering[UnsafeRow] = keyOrder.reverse
+  override protected def codec: Codec[UnsafeRow] = rowCodec
+  override protected def initialK: Int = k
 
-  /** Best-row-first ordering per the window's sort spec, over the
-    * stored (keys..., payload) row.
-    */
-  @transient private lazy val ascOrd: InterpretedOrdering =
-    new InterpretedOrdering(orderKeys.zipWithIndex.map { case (e, i) =>
-      SortOrder(BoundReference(i, e.dataType, nullable = true),
-        if (ascending(i)) org.apache.spark.sql.catalyst.expressions.Ascending
-        else org.apache.spark.sql.catalyst.expressions.Descending,
-        if (nullsFirst(i)) org.apache.spark.sql.catalyst.expressions.NullsFirst
-        else org.apache.spark.sql.catalyst.expressions.NullsLast,
-        Seq.empty)
-    })
-
-  /** Heap comparator: WORST stored row at the head (reverse of the
-    * sort order) so eviction is O(log k).
-    */
-  @transient private lazy val worstFirst: java.util.Comparator[UnsafeRow] =
-    (a: UnsafeRow, b: UnsafeRow) => ascOrd.compare(b, a)
-
-  @transient private lazy val proj: UnsafeProjection =
-    UnsafeProjection.create(children)
-
-  private def numFields: Int = numKeys + 1
-
-  override def createAggregationBuffer(): java.util.PriorityQueue[UnsafeRow] =
-    new java.util.PriorityQueue[UnsafeRow](k + 1, worstFirst)
-
-  override def update(heap: java.util.PriorityQueue[UnsafeRow], input: InternalRow): java.util.PriorityQueue[UnsafeRow] = {
+  override def update(heap: BoundedHeap[UnsafeRow], input: InternalRow): BoundedHeap[UnsafeRow] = {
     val row = proj(input)
-    if (heap.size < k) heap.add(row.copy())
-    else if (ascOrd.compare(row, heap.peek()) < 0) {
-      heap.poll(); heap.add(row.copy())
-    }
+    if (heap.keeps(row)) heap.push(row.copy()) // proj reuses its row
     heap
   }
 
-  override def merge(a: java.util.PriorityQueue[UnsafeRow], b: java.util.PriorityQueue[UnsafeRow]): java.util.PriorityQueue[UnsafeRow] = {
-    val it = b.iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (a.size < k) a.add(e)
-      else if (ascOrd.compare(e, a.peek()) < 0) { a.poll(); a.add(e) }
-    }
-    a
-  }
+  override def eval(heap: BoundedHeap[UnsafeRow]): Any = heap.bestFirst(payloadOf)
 
-  override def eval(heap: java.util.PriorityQueue[UnsafeRow]): Any = {
-    // drain a COPY (window-eval safety, see TopKAgg.eval), worst to
-    // best, then reverse into rank order
-    val copy = new java.util.PriorityQueue[UnsafeRow](k + 1, worstFirst)
-    copy.addAll(heap)
-    val n = copy.size
-    val out = new Array[Any](n)
-    var i = n - 1
-    while (i >= 0) {
-      out(i) = copy.poll().getStruct(numKeys, payloadType.length).copy()
-      i -= 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override def serialize(heap: java.util.PriorityQueue[UnsafeRow]): Array[Byte] = {
-    var size = 4
-    val it0 = heap.iterator()
-    while (it0.hasNext) { size += 4 + it0.next().getSizeInBytes }
-    val buf = ByteBuffer.allocate(size)
-    buf.putInt(heap.size)
-    val it = heap.iterator()
-    while (it.hasNext) {
-      val r = it.next()
-      val bytes = r.getBytes
-      buf.putInt(bytes.length)
-      buf.put(bytes)
-    }
-    buf.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): java.util.PriorityQueue[UnsafeRow] = {
-    val buf = ByteBuffer.wrap(bytes)
-    val n = buf.getInt
-    val heap = createAggregationBuffer()
-    var i = 0
-    while (i < n) {
-      val len = buf.getInt
-      val arr = new Array[Byte](len)
-      buf.get(arr)
-      val row = new UnsafeRow(numFields)
-      row.pointTo(arr, len)
-      heap.add(row)
-      i += 1
-    }
-    heap
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): TopKRowsAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): TopKRowsAgg =
-    copy(inputAggBufferOffset = newOffset)
+  override protected def withOffsets(m: Int, i: Int): TopKRowsAgg =
+    copy(mutableAggBufferOffset = m, inputAggBufferOffset = i)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): TopKRowsAgg =
     copy(orderKeys = newChildren.dropRight(1), payload = newChildren.last)
 

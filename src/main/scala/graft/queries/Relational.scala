@@ -502,7 +502,7 @@ object Relational {
   }
 
   /** C27: graft's OWN mergeable quantile sketch next to its exact
-    * twin (`approx_kll`) — the [[graft.functions.KllAgg]] KLL-style
+    * twin (`approx_kll`) — the [[graft.functions.KllSketchAgg]] KLL-style
     * compactor stack, the quantile member of the sketch family
     * (HLL distinct / CMS frequency / SpaceSaving top-K / Bloom
     * membership). Graded the C14 way: published columns are exact
@@ -523,7 +523,7 @@ object Relational {
     val highs = ps.map(p => math.min(1.0, p + rank))
     ev.groupBy($"event_type")
       .agg(
-        graft.functions.KllAgg.kll_quantiles($"value", 256, ps).as("sk"),
+        graft.functions.KllSketchAgg.kll_quantiles($"value", 256, ps).as("sk"),
         percentile($"value", typedLit(ps)).as("exact"),
         percentile($"value", typedLit(lows)).as("lo"),
         percentile($"value", typedLit(highs)).as("hi"))
@@ -1040,15 +1040,19 @@ object Relational {
     val ev = graft.Tables.events(spark, dir).select(
       date_format(date_trunc("day", $"ts"), "yyyy-MM-dd").as("day"),
       $"event_type", $"value")
-    val lastDay = ev.agg(max($"day")).head().getString(0)
+    val days = ev.agg(sort_array(collect_set($"day"))).head().getSeq[String](0)
+    val lastDay = days.last
     def rollup(df: DataFrame): DataFrame =
       df.groupBy($"day", $"event_type")
         .agg(count(lit(1)).as("n"), dsum($"value").as("sum_v"))
-    // initial build: the settled days — ONLY if the MV doesn't exist
-    // yet (a later refresh must not re-touch settled partitions; the
-    // path is keyed by corpus dir, same staleness contract as every
-    // session-staged artifact)
-    if (!new java.io.File(mvPath, "_SUCCESS").exists())
+    // initial build: the settled days — ONLY if the MV doesn't hold
+    // them all yet (a later refresh must not re-touch settled
+    // partitions; the path is keyed by corpus content, same staleness
+    // contract as every session-staged artifact). `_SUCCESS` alone is
+    // not enough: a dir that lost a settled partition would be served
+    // as the whole MV by every later session.
+    val built = Option(new java.io.File(mvPath).list()).map(_.toSet).getOrElse(Set.empty)
+    if (!built("_SUCCESS") || !days.init.forall(d => built(s"day=$d")))
       rollup(ev.where($"day" < lastDay))
         .write.mode("overwrite").partitionBy("day").parquet(mvPath)
     // refresh: ONLY the newest day's partition — dynamic overwrite

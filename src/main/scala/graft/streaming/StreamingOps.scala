@@ -117,11 +117,6 @@ object StreamingOps {
     spoolDir.toString
   }
 
-  /** events spool + the nanos-as-long read the events parquet needs. */
-  private def spoolEvents(spark: SparkSession, dir: String): String = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spool(spark, dir, "events")
-  }
 
   /** The events file stream with `ts` normalized to µs TIMESTAMP
     * (LTZ; session TZ is UTC so wall clock matches the NTZ oracle)
@@ -157,7 +152,7 @@ object StreamingOps {
   }
 
   private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val sp = spoolEvents(spark, dir)
+    val sp = spool(spark, dir, "events")
     val schema = eventsSchema(spark, dir)
     val raw = spark.readStream.schema(schema).parquet(sp)
     schema("ts").dataType match {
@@ -1369,7 +1364,7 @@ object StreamingOps {
 
   /** E12: streaming quantile monitor (`stream_value_quantiles`) —
     * running p50/p99 per event type with the
-    * [[graft.functions.KllAgg]] compactor stack as the STREAMING
+    * [[graft.functions.KllSketchAgg]] compactor stack as the STREAMING
     * aggregation state: complete-mode groupBy whose state store
     * holds one serialized ~KB sketch per group, re-emitted whole
     * every trigger (the live latency-dashboard shape). This is the
@@ -1385,7 +1380,7 @@ object StreamingOps {
     import spark.implicits._
     val sk = drain(eventsStream(spark, dir)
       .groupBy($"event_type")
-      .agg(graft.functions.KllAgg.kll_quantiles($"value", 256, Seq(0.5, 0.99))
+      .agg(graft.functions.KllSketchAgg.kll_quantiles($"value", 256, Seq(0.5, 0.99))
         .as("qs")),
       "complete", "stream_value_quantiles")
     val exact = graft.Tables.events(spark, dir)

@@ -50,6 +50,47 @@ class FunctionsSpec extends SparkSpecBase {
       spark.sql("SELECT topk_agg(x, 2) FROM tk_bad").collect())
   }
 
+  test("every aggregate rejects a wrong-typed argument at analysis, naming itself") {
+    GraftFunctions.register(spark)
+    spark.sql("SELECT 1 AS i, 1.0D AS d, 'a' AS s, CAST('a' AS BINARY) AS b")
+      .createOrReplaceTempView("agg_bad")
+    // (function, call, name the error must carry): one wrong-typed
+    // argument per registered aggregate; kll_quantiles is
+    // kll_values(kll_sketch(...)), so its sketch builder reports it
+    val cases = Seq(
+      ("topk_agg", "topk_agg(s, 2)", "topk_agg"),
+      ("topk_by", "topk_by(d, s, 2)", "topk_by"),
+      ("space_saving", "space_saving(d, 2)", "space_saving"),
+      ("space_saving_weighted", "space_saving_weighted(s, d, 2)", "space_saving_weighted"),
+      ("bloom_agg", "bloom_agg(i, 64, 2)", "bloom_agg"),
+      ("cms_sketch", "cms_sketch(d, 2, 8)", "cms_sketch"),
+      ("kmv_sketch", "kmv_sketch(b, 4)", "kmv_sketch"),
+      ("hll_sketch", "hll_sketch(i, 9)", "hll_sketch"),
+      ("hll_merge", "hll_merge(s, 9)", "hll_merge"),
+      ("kll_quantiles", "kll_quantiles(s, 64, 0.5)", "kll_sketch"),
+      ("kll_sketch", "kll_sketch(s, 64)", "kll_sketch"),
+      ("kll_union", "kll_union(d, 64)", "kll_union"))
+    val registered = GraftFunctions.all.map(_._1).toSet
+    for ((fn, call, named) <- cases) {
+      assert(registered(fn), fn)
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT $call FROM agg_bad").collect())
+      assert(e.getMessage.contains(s"$named requires"), s"$fn: ${e.getMessage}")
+    }
+    import spark.implicits._
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Seq((1, "g", 2)).toDF("df", "gram", "k")
+        .agg(graft.functions.PrefixMinAgg.prefix_min($"df", $"gram", $"k")).collect())
+    assert(e.getMessage.contains("prefix_min requires a BIGINT df, got INT"), e.getMessage)
+  }
+
+  test("no graft function shadows a Spark built-in") {
+    val clashes = GraftFunctions.all.map(_._1).filter(name =>
+      org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
+        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+    assert(clashes.isEmpty, s"graft functions replacing Spark built-ins: $clashes")
+  }
+
   test("char_grams matches the HOF transform form, sorted and unsorted") {
     import spark.implicits._
     val df = Seq("abcdefgh", "abc", "", "aaaaaaa", "abcabcabc").toDF("text")

@@ -39,14 +39,22 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(spark.conf.get(Graft.ListingThresholdKey) === Graft.MicroBatchMaxFiles.toString)
   }
 
+  test("Graft.builder reads parquet nanosecond timestamps as longs") {
+    // declared once for the session: no read sets it at run time
+    assert(Graft.RuntimeConfs.toMap.get(Graft.NanosAsLongKey) === Some("true"))
+    assert(spark.conf.get(Graft.NanosAsLongKey) === "true")
+  }
+
   test("Graft.session re-applies the listing threshold on a running session") {
     val s2 = spark.newSession()
     s2.conf.set(Graft.ListingThresholdKey, "32")
+    s2.conf.set(Graft.NanosAsLongKey, "false")
     org.apache.spark.sql.SparkSession.setActiveSession(s2)
     try {
       val s = Graft.session(tmpDir("graft_ckpt_rt"))
       assert(s eq s2)
       assert(s.conf.get(Graft.ListingThresholdKey) === Graft.MicroBatchMaxFiles.toString)
+      assert(s.conf.get(Graft.NanosAsLongKey) === "true")
     } finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
   }
 

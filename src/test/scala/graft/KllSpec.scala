@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{KllAgg, KllUtil}
+import graft.functions.{KllSketchAgg, KllUtil}
 
 /** C27 invariants the within_bound grading can't see: the KLL
   * compactor stack holds a tight RANK-error bound on planted
@@ -79,7 +79,7 @@ class KllSpec extends SparkSpecBase {
       .select((($"id" * 2654435761L) % 1000003L).cast("double")
         ./(1000003.0).as("v"))
     val got = df.agg(
-      KllAgg.kll_quantiles($"v", 256, Seq(0.5, 0.9)).as("qs"),
+      KllSketchAgg.kll_quantiles($"v", 256, Seq(0.5, 0.9)).as("qs"),
       percentile($"v", typedLit(Seq(0.48, 0.52, 0.88, 0.92))).as("ex"))
       .select(element_at($"qs", 1), element_at($"qs", 2),
         element_at($"ex", 1), element_at($"ex", 2),
@@ -100,10 +100,10 @@ class KllSpec extends SparkSpecBase {
       .select(($"id" % 24).as("hr"),
         (($"id" * 2654435761L) % 1000003L).cast("double")./(1000003.0).as("v"))
     val hourly = df.groupBy($"hr")
-      .agg(graft.functions.KllAgg.kll_sketch($"v", 256).as("sk"))
+      .agg(graft.functions.KllSketchAgg.kll_sketch($"v", 256).as("sk"))
     val merged = hourly.agg(
-      graft.functions.KllAgg.kll_union($"sk", 256).as("wsk"))
-      .select(graft.functions.KllAgg.kll_values($"wsk", Seq(0.25, 0.5, 0.9)))
+      graft.functions.KllSketchAgg.kll_union($"sk", 256).as("wsk"))
+      .select(graft.functions.KllSketchAgg.kll_values($"wsk", Seq(0.25, 0.5, 0.9)))
       .head().getSeq[Double](0)
     for ((p, q) <- Seq(0.25, 0.5, 0.9).zip(merged)) {
       assert(math.abs(q - p) <= 0.02, // uniform in [0,1): value ≈ rank
@@ -121,16 +121,34 @@ class KllSpec extends SparkSpecBase {
     assert(q.length == 2 && q(0) >= 40 && q(0) <= 60 && q(1) >= 95)
   }
 
+  test("kll_quantiles: SQL and Column API give the values of kll_values over kll_sketch") {
+    import spark.implicits._
+    val df = spark.range(20000).repartition(1)
+      .select(($"id" % 7).as("g"), (($"id" * 2654435761L) % 1000003L).cast("double").as("v"))
+    df.createOrReplaceTempView("kll_api")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy("g").collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toSeq
+    val viaSql = rows(spark.sql(
+      "SELECT g, kll_quantiles(v, 64, 0.1, 0.5, 0.99) FROM kll_api GROUP BY g"))
+    val viaColumn = rows(df.groupBy($"g").agg(
+      KllSketchAgg.kll_quantiles($"v", 64, Seq(0.1, 0.5, 0.99))))
+    val composed = rows(df.groupBy($"g").agg(KllSketchAgg.kll_sketch($"v", 64).as("sk"))
+      .select($"g", KllSketchAgg.kll_values($"sk", Seq(0.1, 0.5, 0.99))))
+    assert(viaSql.length === 7)
+    assert(viaSql === viaColumn)
+    assert(viaSql === composed)
+  }
+
   test("null and empty inputs: nulls skipped, empty group yields NaN") {
     import spark.implicits._
     val withNulls = Seq[java.lang.Double](1.0, null, 2.0, null, 3.0)
       .toDF("v")
-    val q = withNulls.agg(KllAgg.kll_quantiles($"v", 64, Seq(0.5)).as("q"))
+    val q = withNulls.agg(KllSketchAgg.kll_quantiles($"v", 64, Seq(0.5)).as("q"))
       .head().getSeq[Double](0)
     assert(q(0) == 2.0)
     val empty = spark.emptyDataFrame.sparkSession
       .sql("SELECT CAST(NULL AS DOUBLE) AS v WHERE false")
-    val eq = empty.agg(KllAgg.kll_quantiles(col("v"), 64, Seq(0.5)).as("q"))
+    val eq = empty.agg(KllSketchAgg.kll_quantiles(col("v"), 64, Seq(0.5)).as("q"))
       .head().getSeq[Double](0)
     assert(eq(0).isNaN)
   }

@@ -93,6 +93,27 @@ class RelationalOpsSpec extends SparkSpecBase {
     assert(after.keys.exists(_.contains(s"day=$newest")))
   }
 
+  test("MV refresh rebuilds an MV dir that lost a settled partition") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val expected = graft.Tables.events(spark, sf0001)
+      .groupBy(date_format(date_trunc("day", $"ts"), "yyyy-MM-dd").as("day"), $"event_type")
+      .agg(count(lit(1)).as("n"), graft.Tables.dsum($"value").as("sum_v"))
+      .orderBy($"day", $"event_type").collect().toSeq
+    assert(Relational.mvIncrementalRefresh(spark, sf0001).collect().toSeq === expected)
+    val mvPath = Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_mv_${graft.Staging.corpusFingerprint(spark, sf0001)}")
+    // a settled day's partition goes missing; `_SUCCESS` stays
+    val settled = Files.list(mvPath).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("day=")).toSeq.sorted.head
+    Files.walk(mvPath.resolve(settled)).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    assert(Files.exists(mvPath.resolve("_SUCCESS")))
+    assert(Relational.mvIncrementalRefresh(spark, sf0001).collect().toSeq === expected)
+    assert(Files.isDirectory(mvPath.resolve(settled)))
+  }
+
   test("cust_rfm: scores bucket against true quintiles, segments follow the lattice") {
     val rows = graft.queries.Relational.custRfm(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3),

@@ -188,7 +188,7 @@ class SketchBoundsSpec extends SparkSpecBase {
 
   test("HLL union: merging partial sketches equals sketching the union") {
     import spark.implicits._
-    import graft.functions.HllAgg.{hll_sketch, hll_union}
+    import graft.functions.HllAgg.{hll_sketch, hll_merge}
     // two overlapping key sets, sketched separately, then unioned via
     // the re-aggregation path — must be byte-identical to one sketch
     // over the combined set (union = elementwise register max)
@@ -196,18 +196,18 @@ class SketchBoundsSpec extends SparkSpecBase {
     val b = spark.range(2000, 6000).select(concat(lit("u"), $"id").as("k"))
     val partials = a.select(lit(1).as("g"), $"k").unionAll(b.select(lit(2).as("g"), $"k"))
       .groupBy($"g").agg(hll_sketch($"k", 9).as("sk"))
-    val merged = partials.agg(hll_union($"sk", 9)).head().getAs[Array[Byte]](0)
+    val merged = partials.agg(hll_merge($"sk", 9)).head().getAs[Array[Byte]](0)
     val direct = a.unionAll(b).agg(hll_sketch($"k", 9)).head().getAs[Array[Byte]](0)
     assert(java.util.Arrays.equals(merged, direct))
   }
 
   test("HLL union: rejects sketches built with a different p") {
     import spark.implicits._
-    import graft.functions.HllAgg.{hll_sketch, hll_union}
+    import graft.functions.HllAgg.{hll_sketch, hll_merge}
     val sk8 = spark.range(100).select(concat(lit("u"), $"id").as("k"))
       .agg(hll_sketch($"k", 8).as("sk"))
     val e = intercept[Exception] {
-      sk8.agg(hll_union($"sk", 9)).head()
+      sk8.agg(hll_merge($"sk", 9)).head()
     }
     assert(e.getMessage != null)
   }
