@@ -1,7 +1,8 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Shared round-staging cadence for the iterative operators
   * (PageRank/PPR rounds, Lloyd's k-means rounds, PCA power steps).
@@ -252,10 +253,12 @@ object Staging {
     * instead of re-scanning the lake. AQE is held off the staging
     * action so the leaf advertises its hashpartitioning (see
     * [[preservePartitioning]]). Small partition-free artifacts take
-    * the [[LocalServeMaxBytes]] fast path instead.
+    * the [[LocalServeMaxBytes]] fast path instead: `collect` brings
+    * the rows to the driver, and if it fails they are served
+    * distributed.
     */
-  private def serve(spark: SparkSession, path: Path,
-      partitionCols: Seq[String]): Option[DataFrame] = {
+  private[graft] def serve(spark: SparkSession, path: Path, partitionCols: Seq[String],
+      collect: DataFrame => java.util.List[Row] = _.collectAsList()): Option[DataFrame] = {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
       if (!fs.exists(new Path(path, "_SUCCESS"))) None
@@ -265,9 +268,20 @@ object Staging {
           .filter(f => f.isFile && f.getPath.getName != "_SUCCESS" &&
             !f.getPath.getName.endsWith(".crc"))
           .map(_.getLen).sum
-        if (partitionCols.isEmpty && dataBytes <= LocalServeMaxBytes)
-          Some(spark.createDataFrame(raw.collectAsList(), raw.schema))
-        else {
+        // the gate reads encoded bytes, and decoded rows can be many
+        // times that: a failed collect, driver OOM included, falls
+        // through to the distributed serve
+        val local =
+          if (partitionCols.isEmpty && dataBytes <= LocalServeMaxBytes)
+            try Some(spark.createDataFrame(collect(raw), raw.schema))
+            catch {
+              case e @ (NonFatal(_) | _: OutOfMemoryError) =>
+                org.slf4j.LoggerFactory.getLogger(getClass).warn(
+                  s"staging-lake local serve failed for $path (serving distributed): $e")
+                None
+            }
+          else None
+        local.orElse {
           val keyed =
             if (partitionCols.isEmpty) raw
             else raw.repartition(partitionCols.map(raw.col): _*)

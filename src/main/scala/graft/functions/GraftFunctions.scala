@@ -94,12 +94,25 @@ object GraftFunctions {
     agg("kll_union", 2)(a => KllUnionAgg(a(0), a.int(1))),
     fn("kll_values", 2, variadic = true)(a => KllValues(a(0), a.doubles(1))))
 
-  /** Session-scoped registration (temp functions). */
-  def register(spark: SparkSession): Unit =
+  private val InfoClass = "graft.functions.GraftFunctions"
+
+  /** The registry entry of each graft function, as [[GraftExtensions]]
+    * injects it and [[register]] adds it.
+    */
+  private[functions] def info(name: String): ExpressionInfo = new ExpressionInfo(InfoClass, name)
+
+  /** Session-scoped registration, idempotent: a name whose entry is
+    * already graft's (a session built with [[GraftExtensions]], or
+    * registered before) is left as it is.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     all.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      val id = FunctionIdentifier(name)
+      if (!registry.lookupFunction(id).exists(_.getClassName == InfoClass))
+        registry.registerFunction(id, info(name), builder)
     }
+  }
 }
 
 /** `spark.sql.extensions` entry point: SQL functions, the CIDR
@@ -109,10 +122,7 @@ object GraftFunctions {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, builder) =>
-      e.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.GraftFunctions", name),
-        builder))
+      e.injectFunction((FunctionIdentifier(name), GraftFunctions.info(name), builder))
     }
     e.injectOptimizerRule(_ => graft.plans.FoldCidrLiteral)
     e.injectOptimizerRule(_ => graft.plans.RewriteRankLimit)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrd
 import org.apache.spark.sql.catalyst.planning.PhysicalOperation
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.Partitioning
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.metric.SQLMetric
@@ -60,6 +60,14 @@ case class DiskViewScans(session: SparkSession) extends SparkStrategy {
 
 /** Reads `attributes` of a [[DiskViews]] view through Spark's
   * in-memory scan, which it holds instead of having it as a child.
+  *
+  * A view built in one partition (a one-file snapshot) reports
+  * `SinglePartition`, which satisfies every required distribution:
+  * the planner then puts no exchange over it, and a query's partial
+  * and final aggregates, sorts, windows and top-N run in the scan's
+  * one task, as one job. The rows and their order are those the one
+  * map task fed the reducers before. A view of several partitions
+  * keeps the scan's partitioning and its exchanges.
   */
 case class DiskViewScanExec(
     attributes: Seq[Attribute],
@@ -71,7 +79,9 @@ case class DiskViewScanExec(
   override def output: Seq[Attribute] = attributes
   override def innerChildren: Seq[QueryPlan[_]] = Seq(relation)
   override lazy val metrics: Map[String, SQLMetric] = scan.metrics
-  override def outputPartitioning: Partitioning = scan.outputPartitioning
+  override def outputPartitioning: Partitioning =
+    if (relation.cacheBuilder.cachedColumnBuffers.getNumPartitions == 1) SinglePartition
+    else scan.outputPartitioning
   override def outputOrdering: Seq[SortOrder] = scan.outputOrdering
   override def supportsColumnar: Boolean = scan.supportsColumnar
   override def supportsRowBased: Boolean = scan.supportsRowBased

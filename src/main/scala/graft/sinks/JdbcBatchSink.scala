@@ -79,6 +79,18 @@ object JdbcBatchSink {
     df.foreachPartition { (rows: Iterator[Row]) =>
       if (rows.nonEmpty) {
         val buf = new scala.collection.mutable.ArrayBuffer[Row](batchSize)
+        // the partition's connection, opened by its first flush and
+        // reopened only after a failed one
+        var conn: Connection = null
+        var tx = false
+        def open(): Unit = {
+          val c = connect()
+          try {
+            tx = c.getMetaData.supportsTransactions
+            if (tx) c.setAutoCommit(false)
+          } catch { case e: Exception => c.close(); throw e }
+          conn = c
+        }
         def flush(): Unit = if (buf.nonEmpty) {
           var attempt = 0
           var done = false
@@ -87,25 +99,24 @@ object JdbcBatchSink {
             // connection refusal must back off like a failed batch,
             // not kill the task outright.
             try {
-              val conn = connect()
+              if (conn == null) open()
               try {
-                val tx = conn.getMetaData.supportsTransactions
-                if (tx) conn.setAutoCommit(false)
+                val ps = conn.prepareStatement(sql)
                 try {
-                  val ps = conn.prepareStatement(sql)
-                  try {
-                    buf.foreach { r => bind(ps, schema, r); ps.addBatch() }
-                    ps.executeBatch()
-                  } finally ps.close()
-                  if (tx) conn.commit()
-                  done = true
-                } catch {
-                  case e: Exception if tx =>
-                    try conn.rollback()
-                    catch { case r: java.sql.SQLException => e.addSuppressed(r) }
-                    throw e
-                }
-              } finally conn.close()
+                  buf.foreach { r => bind(ps, schema, r); ps.addBatch() }
+                  ps.executeBatch()
+                } finally ps.close()
+                if (tx) conn.commit()
+                done = true
+              } catch {
+                case e: Exception =>
+                  if (tx) try conn.rollback()
+                  catch { case r: java.sql.SQLException => e.addSuppressed(r) }
+                  try conn.close()
+                  catch { case c: java.sql.SQLException => e.addSuppressed(c) }
+                  conn = null
+                  throw e
+              }
             } catch {
               case e: java.sql.SQLException =>
                 attempt += 1
@@ -115,11 +126,13 @@ object JdbcBatchSink {
           }
           buf.clear()
         }
-        rows.foreach { r =>
-          buf += r
-          if (buf.length >= batchSize) flush()
-        }
-        flush()
+        try {
+          rows.foreach { r =>
+            buf += r
+            if (buf.length >= batchSize) flush()
+          }
+          flush()
+        } finally if (conn != null) conn.close()
       }
     }
   }

@@ -1,13 +1,17 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CyclicBarrier, Executors, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CyclicBarrier, Executors, TimeUnit}
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.FileSystem
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.graftbridge.SparkInternals
 import graft.flow.FlowAnalytics
 
@@ -89,6 +93,65 @@ class FlowsViewSpec extends SparkSpecBase {
       s"stage input bytes $inputs are not whole reads of the $blockBytes-byte view")
     second.foreach { case (q, df, rows) =>
       assert(rows === uncached(df, dir), s"$q differs from the query over fresh flows")
+    }
+  }
+
+  /** The exchanges of `df`'s executed plan as AQE planned it and as it
+    * ran: a stage found empty at run time drops the exchanges above it.
+    */
+  private def exchanges(df: DataFrame): Seq[SparkPlan] = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.initialPlan) ++ nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
+    }
+    nodes(df.queryExecution.executedPlan).filter {
+      case _: Exchange | _: ReusedExchangeExec => true
+      case _ => false
+    }
+  }
+
+  test("over a one-file snapshot every dashboard panel is one job of one stage and one task") {
+    val groups = new ConcurrentHashMap[Int, String]() // stage id -> panel
+    val jobs = new ConcurrentHashMap[String, java.lang.Integer]()
+    val stages = new ConcurrentHashMap[String, java.lang.Integer]()
+    val tasks = new ConcurrentHashMap[String, java.lang.Integer]()
+    def bump(m: ConcurrentHashMap[String, java.lang.Integer], q: String, n: Int): Unit =
+      m.merge(q, n, (a, b) => a + b)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("one_partition ")).foreach { g =>
+            val q = g.stripPrefix("one_partition ")
+            bump(jobs, q, 1)
+            bump(stages, q, e.stageInfos.size)
+            e.stageIds.foreach(groups.put(_, q))
+          }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(groups.get(e.stageId)).foreach(bump(tasks, _, 1))
+    }
+    def run(q: String, dir: String): (DataFrame, Seq[Row]) = {
+      val df = FlowAnalytics.queries(q)(spark, dir)
+      (df, df.collect().toSeq)
+    }
+    panels.foreach(run(_, sf0001)) // the view is written by the first pass
+    spark.sparkContext.addSparkListener(listener)
+    val one = try panels.map { q =>
+      spark.sparkContext.setJobGroup(s"one_partition $q", q)
+      try q -> run(q, sf0001) finally spark.sparkContext.clearJobGroup()
+    } finally {
+      SparkInternals.drainListeners(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    one.foreach { case (q, (df, rows)) =>
+      val counts = (jobs.get(q), stages.get(q), tasks.get(q))
+      assert(counts === ((1, 1, 1)), s"$q ran (jobs, stages, tasks) = $counts")
+      assert(exchanges(df).isEmpty, s"$q planned exchanges:\n${df.queryExecution.executedPlan}")
+      assert(rows === uncached(df, sf0001), s"$q differs from the query over fresh flows")
+      val (twoDf, twoRows) = run(q, sf0001TwoFile)
+      assert(rows === twoRows, s"$q differs over the two-file copy")
+      assert(exchanges(twoDf).nonEmpty,
+        s"$q planned no exchange over two files:\n${twoDf.queryExecution.executedPlan}")
     }
   }
 

@@ -94,4 +94,17 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(s2.sql("SELECT topk_agg(x, 1) FROM VALUES (1.0D), (3.0D) AS t(x)")
       .head().getSeq[Double](0) === Seq(3.0))
   }
+
+  test("Graft.register leaves the extensions' registry entries untouched") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    def entries = graft.functions.GraftFunctions.all.map { case (name, _) =>
+      registry.lookupFunction(FunctionIdentifier(name)).get
+    }
+    val before = entries
+    assert(before.forall(_.getClassName == "graft.functions.GraftFunctions"))
+    Graft.register(spark) // as Graft.session does on every call
+    Graft.register(spark)
+    assert(entries.zip(before).forall { case (a, b) => a eq b })
+  }
 }

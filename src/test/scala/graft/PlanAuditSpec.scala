@@ -11,6 +11,10 @@ import graft.text.TextAnalytics
   * predicate pushdown into the parquet scan, column pruning, broadcast
   * joins for dimensions, partial aggregation, top-K without total
   * sort, whole-stage codegen on the hot paths.
+  *
+  * Flow and graph queries are audited over [[sf0001TwoFile]]: the
+  * flows view of a one-file `events` plans no exchange, and these
+  * audits pin the multi-file plan that runs at scale.
   */
 class PlanAuditSpec extends SparkSpecBase {
 
@@ -40,7 +44,7 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("topn_persistence ranks per hour through the heap rewrite, not a window sort") {
-    val p = plan(graft.flow.FlowAnalytics.topnPersistence(spark, sf0001))
+    val p = plan(graft.flow.FlowAnalytics.topnPersistence(spark, sf0001TwoFile))
     assert(!p.contains("Window"), s"per-hour top-10 fell back to WindowExec:\n$p")
     assert(p.contains("ObjectHashAggregate"),
       s"expected the rank-limit bounded-heap aggregate:\n$p")
@@ -92,8 +96,8 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("sequenceMatch carries O(1) state per row: no collect_list, one shuffle") {
-    for (df <- Seq(FlowAnalytics.sequenceMatch(spark, sf0001),
-                   FlowAnalytics.sequenceMatch4(spark, sf0001))) {
+    for (df <- Seq(FlowAnalytics.sequenceMatch(spark, sf0001TwoFile),
+                   FlowAnalytics.sequenceMatch4(spark, sf0001TwoFile))) {
       val p = plan(df)
       assert(!p.contains("collect_list"), s"unbounded per-user array state:\n$p")
       // all window passes + the per-user aggregation reuse ONE
@@ -105,7 +109,7 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("funnel is one corpus pass: a single events scan, no self-joins") {
-    val p = plan(FlowAnalytics.funnel(spark, sf0001))
+    val p = plan(FlowAnalytics.funnel(spark, sf0001TwoFile))
     // the prefix-min window DFA reads events ONCE; the previous shape
     // scanned it four times (per-step filters) behind three joins.
     // Count the "(n) Scan parquet" detail headers — the tree line
@@ -126,7 +130,7 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("flow analytics aggregate partially before the shuffle") {
-    val p = plan(FlowAnalytics.topTalkers(spark, sf0001))
+    val p = plan(FlowAnalytics.topTalkers(spark, sf0001TwoFile))
     assert("HashAggregate".r.findAllIn(p).length >= 2, s"no map-side combine:\n$p")
     assert(p.contains("TakeOrderedAndProject"), "top-N sorted globally")
   }
@@ -196,7 +200,7 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("space_saving aggregates partially before the shuffle") {
-    val p = plan(FlowAnalytics.topKApprox(spark, sf0001))
+    val p = plan(FlowAnalytics.topKApprox(spark, sf0001TwoFile))
     // TypedImperativeAggregate runs in ObjectHashAggregate; a partial +
     // final pair means per-partition sketches merge instead of raw rows
     assert("ObjectHashAggregate".r.findAllIn(p).length >= 2,
@@ -204,7 +208,7 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("literal CIDR in flow_cidr_filter is folded by the session extension") {
-    val p = FlowAnalytics.flowCidrFilter(spark, sf0001)
+    val p = FlowAnalytics.flowCidrFilter(spark, sf0001TwoFile)
       .queryExecution.optimizedPlan.toString.toLowerCase
     assert(!p.contains("ip4incidr"), s"FoldCidrLiteral did not fire:\n$p")
     assert(p.contains("ip4aton"), s"expected folded aton comparison:\n$p")
@@ -259,8 +263,8 @@ class PlanAuditSpec extends SparkSpecBase {
     // per-partition fixed-size sketch blocks merge, raw rows never
     // cross the shuffle
     for (df <- Seq(graft.dedup.Dedup.bloomGate(spark, sf0001),
-                   FlowAnalytics.freqCms(spark, sf0001),
-                   FlowAnalytics.distinctHll(spark, sf0001))) {
+                   FlowAnalytics.freqCms(spark, sf0001TwoFile),
+                   FlowAnalytics.distinctHll(spark, sf0001TwoFile))) {
       val p = plan(df)
       assert("ObjectHashAggregate".r.findAllIn(p).length >= 2,
         s"sketch not partial-aggregated:\n$p")
@@ -285,7 +289,7 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("zorder locality query has no global single-reducer sort") {
-    val p = plan(FlowAnalytics.zorderLocality(spark, sf0001))
+    val p = plan(FlowAnalytics.zorderLocality(spark, sf0001TwoFile))
     // the row_number window partitions by protocol — a hash exchange,
     // never SinglePartition (the final presentation orderBy is range)
     assert(!p.contains("Exchange SinglePartition"),
@@ -295,7 +299,7 @@ class PlanAuditSpec extends SparkSpecBase {
 
   test("anomaly z-score's global window runs over the HOURLY table, not raw flows") {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Window => LWindow}
-    val df = FlowAnalytics.anomalyZscore(spark, sf0001)
+    val df = FlowAnalytics.anomalyZscore(spark, sf0001TwoFile)
     val win = df.queryExecution.optimizedPlan
       .collectFirst { case w: LWindow => w }
     assert(win.isDefined, "no window node in the plan")
@@ -320,8 +324,8 @@ class PlanAuditSpec extends SparkSpecBase {
     // per round (the reason staging checkpoints run with AQE off; see
     // Staging.preservePartitioning).
     for ((name, df) <- Seq(
-        "flow_pagerank" -> graft.graph.GraphOps.flowPagerank(spark, sf0001),
-        "flow_hits" -> graft.graph.GraphOps.flowHits(spark, sf0001))) {
+        "flow_pagerank" -> graft.graph.GraphOps.flowPagerank(spark, sf0001TwoFile),
+        "flow_hits" -> graft.graph.GraphOps.flowHits(spark, sf0001TwoFile))) {
       val p = plan(df)
       assert(!p.contains("UnknownPartitioning"),
         s"$name staged leaf lost its partitioning:\n$p")
@@ -357,7 +361,7 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("EWMA window is partitioned by protocol — no single-reducer global window") {
-    val p = plan(graft.flow.FlowAnalytics.ewmaForecast(spark, sf0001))
+    val p = plan(graft.flow.FlowAnalytics.ewmaForecast(spark, sf0001TwoFile))
     assert(!p.contains("SinglePartition") ||
       !p.substring(p.indexOf("Window")).contains("SinglePartition"),
       s"flow_ewma_forecast windows on a single partition:\n$p")
@@ -385,7 +389,7 @@ class PlanAuditSpec extends SparkSpecBase {
     // HashAggregate, which sits above the scan — if the aggregate
     // ever slips above the window, the corpus itself would single-
     // partition and this query dies at scale.
-    val p = plan(FlowAnalytics.anomalyZscore(spark, sf0001))
+    val p = plan(FlowAnalytics.anomalyZscore(spark, sf0001TwoFile))
     val treeOps = "([A-Za-z]+)(?: parquet)? +\\((\\d+)\\)".r.findAllMatchIn(p)
       .map(_.group(1)).toSeq
     val iWin = treeOps.indexOf("Window")
@@ -416,7 +420,7 @@ class PlanAuditSpec extends SparkSpecBase {
     // static plan shows two parquet scans, but the hourly partial-agg
     // exchanges are canonically identical, so AQE must dedupe them —
     // at 100 TB the difference is one corpus scan vs two
-    val df = FlowAnalytics.cusum(spark, sf0001)
+    val df = FlowAnalytics.cusum(spark, sf0001TwoFile)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("ReusedExchange") || p.contains("ReusedQueryStage"),
@@ -424,7 +428,7 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("biflow stitch is one corpus pass + one canonical-key shuffle, no join") {
-    val p = plan(FlowAnalytics.biflowStitch(spark, sf0001))
+    val p = plan(FlowAnalytics.biflowStitch(spark, sf0001TwoFile))
     assert("(?m)^\\(\\d+\\) Scan parquet".r.findAllIn(p).length === 1,
       s"leg derivation re-scanned the corpus:\n$p")
     assert(!p.contains("Join"), s"the stitch must be a pure aggregation:\n$p")
@@ -455,7 +459,7 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("flow_concurrency's sweep window is partitioned by site, never global") {
-    val p = plan(FlowAnalytics.flowConcurrency(spark, sf0001))
+    val p = plan(FlowAnalytics.flowConcurrency(spark, sf0001TwoFile))
     // every Window node must carry a site partition spec — a global
     // sweep would single-task the whole corpus at scale
     val windows = "(?m)^Arguments: .*windowspecdefinition\\(.*".r
@@ -473,7 +477,7 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("LPM enrichment rides the scan: broadcast joins only, no shuffle before the rollup") {
-    val p = plan(FlowAnalytics.lpmEnrich(spark, sf0001))
+    val p = plan(FlowAnalytics.lpmEnrich(spark, sf0001TwoFile))
     assert("BroadcastHashJoin LeftOuter".r.findAllIn(p).length === 4,
       s"expected 4 broadcast mask-length joins:\n$p")
     assert(!p.contains("SortMergeJoin"),
@@ -481,7 +485,7 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("KMV set algebra: sketches reduce per protocol; the pair algebra never re-scans") {
-    val p = plan(FlowAnalytics.setAlgebra(spark, sf0001))
+    val p = plan(FlowAnalytics.setAlgebra(spark, sf0001TwoFile))
     // the KMV sketch build must have a partial (map-side) phase
     assert("ObjectHashAggregate".r.findAllIn(p).length >= 2,
       s"no partial sketch aggregation:\n$p")
@@ -491,7 +495,7 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("Holt forecast folds map-side: only the rollup and final sort exchange") {
-    val p = plan(FlowAnalytics.holtForecast(spark, sf0001))
+    val p = plan(FlowAnalytics.holtForecast(spark, sf0001TwoFile))
     val exchanges = "(?m)^\\(\\d+\\) Exchange".r.findAllIn(p).length
     assert(exchanges <= 2, s"Holt fold grew extra shuffles ($exchanges):\n$p")
     assert(!p.contains("Window"), s"the sequential fold fell back to a window:\n$p")

@@ -100,6 +100,15 @@ class SinksSpec extends SparkSpecBase {
       "INSERT INTO target_tbl (id, name, score) VALUES (?, ?, ?)")
   }
 
+  test("jdbc sink writes a partition's flushes over one connection") {
+    import spark.implicits._
+    JdbcStub.reset()
+    JdbcBatchSink.write(spark.range(25000).select($"id").coalesce(1), "t", JdbcStub.connect)
+    assert(JdbcStub.rowsBound.get() === 25000)
+    assert(JdbcStub.batchesExecuted.get() === 3) // 10,000-row flushes
+    assert(JdbcStub.connects.get() === 1)
+  }
+
   test("jdbc sink retries transient failures then succeeds") {
     import spark.implicits._
     JdbcStub.reset()
@@ -108,6 +117,7 @@ class SinksSpec extends SparkSpecBase {
     JdbcBatchSink.write(df.coalesce(1), "t", JdbcStub.connect, batchSize = 100)
     assert(JdbcStub.rowsBound.get() >= 10)
     assert(JdbcStub.batchesExecuted.get() === 1) // succeeded exactly once
+    assert(JdbcStub.connects.get() === 3) // a new connection after each failure
   }
 
   test("jdbc sink retries a batch that failed part-way without duplicate rows") {
@@ -197,10 +207,14 @@ object JdbcStub {
   val rowsBound = new AtomicInteger(0)
   val batchesExecuted = new AtomicInteger(0)
   val failFirst = new AtomicInteger(0)
+  val connects = new AtomicInteger(0)
 
-  def reset(): Unit = { sqls.clear(); rowsBound.set(0); batchesExecuted.set(0); failFirst.set(0) }
+  def reset(): Unit = {
+    sqls.clear(); rowsBound.set(0); batchesExecuted.set(0); failFirst.set(0); connects.set(0)
+  }
 
-  def connect: () => Connection = () =>
+  def connect: () => Connection = () => {
+    connects.incrementAndGet()
     Proxy.newProxyInstance(getClass.getClassLoader, Array(classOf[Connection]),
       new InvocationHandler {
         def invoke(p: Any, m: Method, args: Array[AnyRef]): AnyRef = m.getName match {
@@ -212,6 +226,7 @@ object JdbcStub {
           case _ => null
         }
       }).asInstanceOf[Connection]
+  }
 
   def metaData(supportsTransactions: Boolean): DatabaseMetaData =
     Proxy.newProxyInstance(getClass.getClassLoader, Array(classOf[DatabaseMetaData]),

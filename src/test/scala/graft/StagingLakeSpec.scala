@@ -49,6 +49,26 @@ class StagingLakeSpec extends SparkSpecBase {
       === a.collect().map(r => (r.getLong(0), r.getLong(1))).sorted)
   }
 
+  test("a local serve whose collect fails, driver OOM included, is served distributed") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LogicalRDD
+    val artifact = tmpDir("lake_serve_collect")
+    spark.range(50).select(col("id"), (col("id") % 7).as("k"))
+      .write.mode("overwrite").parquet(artifact)
+    val path = new org.apache.hadoop.fs.Path(artifact)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val local = Staging.serve(spark, path, Nil).get
+    assert(local.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    for (failure <- Seq(new OutOfMemoryError("injected"), new IllegalStateException("injected"))) {
+      val served = Staging.serve(spark, path, Nil, _ => throw failure)
+      assert(served.isDefined, s"$failure dropped the artifact")
+      assert(served.get.queryExecution.analyzed.isInstanceOf[LogicalRDD],
+        s"$failure: not the distributed serve:\n${served.get.queryExecution.analyzed}")
+      assert(rows(served.get) === rows(local))
+    }
+  }
+
   test("lake-served artifact restores the staged hash partitioning") {
     val corpus = tmpDir("lake_corpus_p")
     val lake = tmpDir("lake_root_p")
