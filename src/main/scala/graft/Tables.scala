@@ -95,9 +95,20 @@ object Tables {
     } finally reader.close()
   }
 
-  /** Exact decimal sum of a (≤ `scale`-decimal) column, output as double. */
+  /** Exact sum of a (≤ `scale`-decimal) column, output as double
+    * ([[graft.functions.ExactSum]]).
+    *
+    * An integral column at scale 0 (`ibyt`, `ipkt`, character counts)
+    * sums as LONG: its total must stay within ±(2⁶³ − 1), and one
+    * outside raises `ARITHMETIC_OVERFLOW` in any session, never wraps.
+    * Every other column sums as DECIMAL(28, `scale`) values, each within
+    * ±10^(28 − `scale`) (a larger one fails the ANSI cast), into a
+    * DECIMAL(38, `scale`) total. Both give the double nearest the exact
+    * total; NULLs are skipped, and an empty or all-NULL group gives NULL.
+    */
   def dsum(c: Column, scale: Int = 2): Column =
-    sum(c.cast(DecimalType(28, scale))).cast("double")
+    Bridge.column(graft.functions.ExactSum(Bridge.expression(c), scale).toAggregateExpression())
+      .cast("double")
 
   /** Exact decimal product-sum: cast each factor before multiplying. */
   def dec(c: Column, scale: Int = 2): Column = c.cast(DecimalType(28, scale))

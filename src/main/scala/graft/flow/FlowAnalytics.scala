@@ -591,15 +591,15 @@ object FlowAnalytics {
       .orderBy($"flow_id")
   }
 
-  /** B6: per-protocol exact value percentiles. */
+  /** B6: per-protocol exact value percentiles, from one sort of each
+    * group's values (one array-valued `percentile`).
+    */
   def valuePercentiles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     asFlows(spark, dir)
       .groupBy($"pr")
-      .agg(
-        expr("percentile(value, 0.5)").as("p50"),
-        expr("percentile(value, 0.9)").as("p90"),
-        expr("percentile(value, 0.99)").as("p99"))
+      .agg(percentile($"value", typedLit(Seq(0.5, 0.9, 0.99))).as("ps"))
+      .select($"pr", $"ps"(0).as("p50"), $"ps"(1).as("p90"), $"ps"(2).as("p99"))
       .orderBy($"pr")
   }
 

@@ -116,8 +116,9 @@ object GraftFunctions {
 }
 
 /** `spark.sql.extensions` entry point: SQL functions, the CIDR
-  * literal-folding and rank-limit→heap optimizer rules, and the
-  * planning of graft's materialized views.
+  * literal-folding and rank-limit→heap optimizer rules, the planning
+  * of graft's materialized views, and the collapse of aggregation
+  * steps that no exchange separates.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -127,5 +128,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => graft.plans.FoldCidrLiteral)
     e.injectOptimizerRule(_ => graft.plans.RewriteRankLimit)
     e.injectPlannerStrategy(graft.plans.DiskViewScans(_))
+    e.injectQueryStagePrepRule(_ => graft.plans.CollapseAggregateSteps)
   }
 }

@@ -347,9 +347,10 @@ object Relational {
       .groupBy($"l_returnflag")
       .agg(
         percentile_approx($"l_extendedprice", lit(0.5), lit(10000)).as("approx_p50"),
-        percentile($"l_extendedprice", lit(0.5)).as("exact_p50"),
         percentile_approx($"l_extendedprice", lit(0.99), lit(10000)).as("approx_p99"),
-        percentile($"l_extendedprice", lit(0.99)).as("exact_p99"))
+        percentile($"l_extendedprice", typedLit(Seq(0.5, 0.99))).as("exact"))
+      .select($"l_returnflag", $"approx_p50", $"approx_p99",
+        $"exact"(0).as("exact_p50"), $"exact"(1).as("exact_p99"))
       .select($"l_returnflag", $"exact_p50", $"exact_p99",
         (abs($"approx_p50" - $"exact_p50") / $"exact_p50" < 0.05 &&
          abs($"approx_p99" - $"exact_p99") / $"exact_p99" < 0.05)
@@ -524,16 +525,15 @@ object Relational {
     ev.groupBy($"event_type")
       .agg(
         graft.functions.KllSketchAgg.kll_quantiles($"value", 256, ps).as("sk"),
-        percentile($"value", typedLit(ps)).as("exact"),
-        percentile($"value", typedLit(lows)).as("lo"),
-        percentile($"value", typedLit(highs)).as("hi"))
+        // exact values, then the low and the high rank bounds
+        percentile($"value", typedLit(ps ++ lows ++ highs)).as("exact"))
       .select($"event_type",
         round(element_at($"exact", 1), 6).as("exact_p50_r"),
         round(element_at($"exact", 2), 6).as("exact_p90_r"),
         round(element_at($"exact", 3), 6).as("exact_p99_r"),
         (0 until 3).map(i =>
-          element_at($"sk", i + 1) >= element_at($"lo", i + 1) &&
-            element_at($"sk", i + 1) <= element_at($"hi", i + 1))
+          element_at($"sk", i + 1) >= element_at($"exact", i + 4) &&
+            element_at($"sk", i + 1) <= element_at($"exact", i + 7))
           .reduceLeft(_ && _).as("within_bound"))
       .orderBy($"event_type")
   }
@@ -770,8 +770,9 @@ object Relational {
     val li = load(spark, dir, "lineitem")
     val med = li.groupBy($"l_returnflag").agg(
       round(percentile($"l_quantity", lit(0.5)), 6).as("median_qty_r"),
-      round(percentile($"l_extendedprice", lit(0.25)), 6).as("p25_price_r"),
-      round(percentile($"l_extendedprice", lit(0.75)), 6).as("p75_price_r"))
+      percentile($"l_extendedprice", typedLit(Seq(0.25, 0.75))).as("price_q"))
+      .select($"l_returnflag", $"median_qty_r",
+        round($"price_q"(0), 6).as("p25_price_r"), round($"price_q"(1), 6).as("p75_price_r"))
     val mode = li.groupBy($"l_returnflag", $"l_linenumber")
       .agg(count(lit(1)).as("cnt"))
       .withColumn("rn", row_number().over(

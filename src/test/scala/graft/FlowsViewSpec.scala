@@ -6,10 +6,13 @@ import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
   SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateMode, Complete, Final, Partial}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ObjectHashAggregateExec}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.graftbridge.SparkInternals
@@ -96,20 +99,27 @@ class FlowsViewSpec extends SparkSpecBase {
     }
   }
 
-  /** The exchanges of `df`'s executed plan as AQE planned it and as it
-    * ran: a stage found empty at run time drops the exchanges above it.
+  /** The nodes of `df`'s executed plan as AQE planned it and as it ran:
+    * a stage found empty at run time drops the exchanges above it.
     */
-  private def exchanges(df: DataFrame): Seq[SparkPlan] = {
+  private def planNodes(df: DataFrame): Seq[SparkPlan] = {
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => nodes(a.initialPlan) ++ nodes(a.executedPlan)
       case q: QueryStageExec => q +: nodes(q.plan)
       case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
     }
-    nodes(df.queryExecution.executedPlan).filter {
-      case _: Exchange | _: ReusedExchangeExec => true
-      case _ => false
-    }
+    nodes(df.queryExecution.executedPlan)
   }
+
+  private def exchanges(df: DataFrame): Seq[SparkPlan] = planNodes(df).filter {
+    case _: Exchange | _: ReusedExchangeExec => true
+    case _ => false
+  }
+
+  private def aggregates(df: DataFrame): Seq[BaseAggregateExec] =
+    planNodes(df).collect { case a: BaseAggregateExec => a }
+
+  private def modes(a: BaseAggregateExec): Set[AggregateMode] = a.aggregateExpressions.map(_.mode).toSet
 
   test("over a one-file snapshot every dashboard panel is one job of one stage and one task") {
     val groups = new ConcurrentHashMap[Int, String]() // stage id -> panel
@@ -153,6 +163,60 @@ class FlowsViewSpec extends SparkSpecBase {
       assert(exchanges(twoDf).nonEmpty,
         s"$q planned no exchange over two files:\n${twoDf.queryExecution.executedPlan}")
     }
+  }
+
+  test("over a one-file snapshot each panel aggregates once a key: no step feeds a step of its keys") {
+    panels.foreach { q =>
+      val df = FlowAnalytics.queries(q)(spark, sf0001)
+      val rows = df.collect().toSeq
+      val aggs = aggregates(df)
+      assert(aggs.exists(a => modes(a).contains(Complete)), s"$q kept no merged step:\n${df.queryExecution.executedPlan}")
+      // what stays under an aggregate is count(distinct)'s partial step,
+      // keyed by the distinct column too
+      aggs.foreach { a =>
+        a.child match {
+          case c: BaseAggregateExec =>
+            assert(modes(c) === Set(Partial) && modes(a).contains(Final) &&
+              c.groupingExpressions.size > a.groupingExpressions.size,
+              s"$q keeps an aggregate directly over its partial step:\n${df.queryExecution.executedPlan}")
+          case _ =>
+        }
+      }
+      assert(rows === uncached(df, sf0001), s"$q differs from the query over fresh flows")
+    }
+  }
+
+  test("over the two-file copy the steps an exchange separates stay split") {
+    panels.foreach { q =>
+      val df = FlowAnalytics.queries(q)(spark, sf0001TwoFile)
+      df.collect()
+      val aggs = aggregates(df)
+      assert(aggs.exists(a => modes(a).contains(Partial)), q)
+      assert(!aggs.exists(a => modes(a).contains(Complete)),
+        s"$q merged steps over two files:\n${df.queryExecution.executedPlan}")
+      aggs.filter(a => modes(a) == Set(Final)).foreach { a =>
+        assert(!a.child.isInstanceOf[BaseAggregateExec], s"$q: ${a.simpleString(200)}")
+      }
+    }
+  }
+
+  test("a merged ObjectHashAggregate past its sort fallback gives the rows of the split steps") {
+    import spark.implicits._
+    def query(parts: Int): DataFrame = spark.range(0, 3000, 1, parts)
+      .select(($"id" % 300).as("g"), ($"id" % 7).as("d"), ($"id" * 0.5).as("v"))
+      .groupBy($"g")
+      .agg(percentile($"v", typedLit(Seq(0.25, 0.5, 0.9))).as("p"),
+        array_sort(collect_set($"d")).as("ds"), countDistinct($"d").as("nd"), count(lit(1)).as("n"))
+      .orderBy($"g")
+    val merged = query(1)
+    val rows = merged.collect().toSeq
+    val objectAggs = aggregates(merged).collect { case o: ObjectHashAggregateExec => o }
+    assert(objectAggs.exists(a => modes(a).contains(Complete)), merged.queryExecution.executedPlan.toString)
+    // 300 groups in one task: over the fallback threshold of 128
+    assert(objectAggs.exists(_.metrics("numTasksFallBacked").value > 0))
+    val split = query(3)
+    assert(!aggregates(split).exists(a => modes(a).contains(Complete)))
+    assert(rows.size === 300 && rows === split.collect().toSeq)
   }
 
   test("two concurrent first calls hold one view; the loser's blocks are freed") {
