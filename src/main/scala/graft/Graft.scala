@@ -88,11 +88,10 @@ object Graft {
       case (b, (k, v)) => b.config(k, v)
     }
 
-  /** [[builder]] plus a RELIABLE checkpoint directory: the iterative
-    * operators (cluster closure, ngram postings) truncate lineage via
-    * `df.checkpoint()` onto durable storage when the context has a
-    * checkpoint dir — the 100 TB path, survives executor loss — and
-    * fall back to executor-memory `localCheckpoint()` otherwise.
+  /** [[builder]] plus a RELIABLE checkpoint directory: every lineage
+    * cut ([[Staging.materialize]]) then goes to durable storage — the
+    * 100 TB path, survives executor loss — instead of executor-memory
+    * `localCheckpoint()`.
     * Without this entry point the durable path was only reachable by
     * calling `sparkContext.setCheckpointDir` by hand after session
     * creation.

@@ -1,13 +1,15 @@
 package graft
 
 import scala.util.control.NonFatal
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** Shared round-staging cadence for the iterative operators
-  * (PageRank/PPR rounds, Lloyd's k-means rounds, PCA power steps).
+/** The one home of graft's staging policy: where a lineage cut runs
+  * ([[Staging.materialize]], [[Staging.materializeKeyed]]), the
+  * round-staging cadence of the iterative operators, and the
+  * session/lake cache of persisted artifacts ([[Staging.SessionCache]]).
   *
-  * The policy, measured in round 7 and encoded once here so five
+  * The cadence, measured in round 7 and encoded once here so five
   * hand-expanded copies can't drift: iterative state is checkpointed
   * every SECOND round — an intermediate round is consumed exactly once
   * by the next round, so a two-round lazy segment recomputes nothing
@@ -47,14 +49,34 @@ object Staging {
     *
     * Session-conf mutation is not concurrency-safe across queries
     * sharing the session; graft's query entry points run sequentially
-    * (Bench/Verify/driver contract).
+    * (Bench/Verify/driver contract). Callers reach it only through
+    * [[materializeKeyed]].
     */
-  def preservePartitioning[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
+  private def preservePartitioning[T](spark: SparkSession)(f: => T): T = {
     val key = "spark.sql.adaptive.enabled"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "false")
     try f finally spark.conf.set(key, prev)
   }
+
+  /** The lineage cut every staging site uses: a reliable checkpoint
+    * when the context has a checkpoint dir (durable storage, survives
+    * executor loss — the cluster path), else an executor-memory
+    * `localCheckpoint`. Either way the frame becomes a
+    * [[org.apache.spark.sql.execution.LogicalRDD]] leaf that every
+    * consumer reads as data instead of re-deriving its sub-DAG.
+    */
+  private[graft] def materialize(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
+
+  /** [[materialize]] for a frame already hash-partitioned on the key
+    * its consumers join or group on (round state, walk edge and node
+    * tables): the cut runs with AQE held off, so the leaf advertises
+    * that partitioning and later rounds reuse it exchange-free.
+    */
+  private[graft] def materializeKeyed(df: DataFrame): DataFrame =
+    preservePartitioning(df.sparkSession)(materialize(df))
 
   /** Conditional narrow-scan spread for CPU-bound map chains (PQ
     * encode/ADC folds, PNG codec, per-token hashing, char-gram
@@ -115,15 +137,33 @@ object Staging {
     }
   }
 
-  /** Staged-artifact parquet layout version: bump when any staged
-    * table's SCHEMA changes, so a new library version can never be
-    * poisoned by artifacts a previous version published.
+  /** Identity of the build that publishes an artifact: 16 hex chars
+    * over the contents of graft's code source (the jar, or the classes
+    * dir, holding `graft.Staging`), computed once per JVM. The lake
+    * path carries it, so an artifact published by any other build
+    * misses and is rebuilt: a builder whose logic changes without a
+    * schema change is never served its old output.
     */
-  private val LakeFormatVersion = 1
+  private[graft] lazy val BuildId: String = {
+    val src = new java.io.File(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    def add(f: java.io.File): Unit =
+      if (f.isDirectory) f.listFiles().sortBy(_.getName).foreach(add)
+      else {
+        md.update(src.toPath.relativize(f.toPath).toString.getBytes("UTF-8"))
+        md.update(java.nio.file.Files.readAllBytes(f.toPath))
+      }
+    add(src)
+    hex16(md)
+  }
+
+  private def hex16(md: java.security.MessageDigest): String =
+    md.digest().take(8).map(b => f"$b%02x").mkString
 
   /** Session conf key for the cross-session artifact lake root. When
     * set, [[SessionCache.getOrBuild]] keys every staged artifact by a
-    * CONTENT fingerprint of its corpus dir and persists it as parquet
+    * CONTENT fingerprint of its corpus dir and by the build that made
+    * it ([[BuildId]]), and persists it as parquet
     * under the root — so a new session (or a separate 1000-executor
     * job) reads the published index/model/edge table instead of
     * rebuilding it, and a regenerated corpus automatically misses the
@@ -187,7 +227,7 @@ object Staging {
     walk(root)
     val md = java.security.MessageDigest.getInstance("SHA-256")
     entries.sorted.foreach(e => md.update(e.getBytes("UTF-8")))
-    md.digest().take(8).map(b => f"$b%02x").mkString
+    hex16(md)
   }
 
   private def lakeRootOf(spark: SparkSession): Option[String] =
@@ -195,15 +235,7 @@ object Staging {
 
   private def artifactPath(lakeRoot: String, key: String, fp: String): Path =
     new Path(lakeRoot,
-      s"v$LakeFormatVersion/${key.replaceAll("[^A-Za-z0-9._-]", "_")}/fp=$fp")
-
-  /** Checkpoint-dir-aware lineage cut (same policy as every staging
-    * call site: reliable checkpoint on the cluster path, else
-    * executor-memory localCheckpoint).
-    */
-  private[graft] def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
+      s"build=$BuildId/${key.replaceAll("[^A-Za-z0-9._-]", "_")}/fp=$fp")
 
   /** Publish a built artifact: write to a temp sibling, then one
     * atomic rename into place — a concurrent publisher loses the
@@ -226,67 +258,62 @@ object Staging {
     }
   }
 
-  /** Size gate for the driver-local serve fast path: a published
-    * artifact whose data files total at most this many bytes (and
-    * that no consumer needs hash-partitioned) is collected once and
-    * served as a LocalRelation instead of a checkpointed distributed
-    * leaf. Trained models (centroid/codebook tables, KBs at any
-    * corpus size) are exactly the artifacts a production job ships
-    * broadcast anyway; serving them locally removes the checkpoint
-    * job AND every downstream BroadcastExchange build job (a
-    * LocalTableScan broadcasts without launching a job). Measured on
-    * the r14 entry board: first-consumer serves cost multi-second
-    * bench entries (ann_topk_ivf_mp 3.6 s warm vs 0.6 s steady) that
-    * were mostly these fixed jobs. Corpus-sized artifacts (signature
-    * tables, edge lists) exceed the gate and keep the distributed
-    * path — the gate reads the actual published bytes, so the
-    * decision scales with the data, not with a tuned constant.
+  /** How a staged artifact is served from the lake, declared where it
+    * is staged. The rule: a trained model is [[Serve.Local]], a table
+    * derived from the corpus is [[Serve.Distributed]], and a walk leaf
+    * that an iterative consumer joins on its key every round is
+    * [[Serve.Keyed]] on that key.
     */
-  val LocalServeMaxBytes: Long = 8L << 20
+  sealed trait Serve
+  object Serve {
+    /** Collected once and served as a LocalRelation: centroids,
+      * codebooks, PCA bases, classifier weights — what a production
+      * job ships broadcast anyway. A LocalTableScan broadcasts without
+      * a job, so a local serve saves the checkpoint job and every
+      * downstream BroadcastExchange build job.
+      */
+    case object Local extends Serve
+    /** Served as a materialized distributed leaf: signature and pair
+      * tables, label and score tables — rows a consumer scans and
+      * joins in parallel.
+      */
+    case object Distributed extends Serve
+    /** Served distributed and hash-partitioned on `cols`: a parquet
+      * scan loses the build's partitioning, and the PageRank/HITS/LPA
+      * rounds are exchange-free only against a leaf keyed on their
+      * join column, so one shuffle here buys zero per round.
+      */
+    final case class Keyed(cols: String*) extends Serve
+  }
 
-  /** Serve a published artifact, restored to the shape the build
-    * would have produced: re-keyed on `partitionCols` (a parquet scan
-    * loses the build's hash partitioning, and the iterative consumers
-    * — PageRank/HITS/LPA rounds — are exchange-free only against a
-    * hash-partitioned leaf; one shuffle here buys zero per round) and
-    * lineage-cut so every consumer reads the materialized leaf
-    * instead of re-scanning the lake. AQE is held off the staging
-    * action so the leaf advertises its hashpartitioning (see
-    * [[preservePartitioning]]). Small partition-free artifacts take
-    * the [[LocalServeMaxBytes]] fast path instead: `collect` brings
-    * the rows to the driver, and if it fails they are served
-    * distributed.
+  /** Serve a published artifact in its declared mode, lineage-cut so
+    * every consumer reads the materialized leaf instead of re-scanning
+    * the lake. A [[Serve.Local]] artifact is brought to the driver by
+    * `collect`; if that fails the artifact is served distributed.
     */
-  private[graft] def serve(spark: SparkSession, path: Path, partitionCols: Seq[String],
+  private[graft] def serve(spark: SparkSession, path: Path, mode: Serve,
       collect: DataFrame => java.util.List[Row] = _.collectAsList()): Option[DataFrame] = {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
       if (!fs.exists(new Path(path, "_SUCCESS"))) None
       else {
         val raw = spark.read.parquet(path.toString)
-        val dataBytes = fs.listStatus(path)
-          .filter(f => f.isFile && f.getPath.getName != "_SUCCESS" &&
-            !f.getPath.getName.endsWith(".crc"))
-          .map(_.getLen).sum
-        // the gate reads encoded bytes, and decoded rows can be many
-        // times that: a failed collect, driver OOM included, falls
-        // through to the distributed serve
+        // decoded rows can be many times the encoded bytes: a failed
+        // collect, driver OOM included, falls through to the
+        // distributed serve
         val local =
-          if (partitionCols.isEmpty && dataBytes <= LocalServeMaxBytes)
-            try Some(spark.createDataFrame(collect(raw), raw.schema))
-            catch {
-              case e @ (NonFatal(_) | _: OutOfMemoryError) =>
-                org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                  s"staging-lake local serve failed for $path (serving distributed): $e")
-                None
-            }
-          else None
-        local.orElse {
-          val keyed =
-            if (partitionCols.isEmpty) raw
-            else raw.repartition(partitionCols.map(raw.col): _*)
-          Some(preservePartitioning(spark)(materialize(keyed)))
-        }
+          if (mode != Serve.Local) None
+          else try Some(spark.createDataFrame(collect(raw), raw.schema))
+          catch {
+            case e @ (NonFatal(_) | _: OutOfMemoryError) =>
+              org.slf4j.LoggerFactory.getLogger(getClass).warn(
+                s"staging-lake local serve failed for $path (serving distributed): $e")
+              None
+          }
+        local.orElse(Some(mode match {
+          case Serve.Keyed(cols @ _*) => materializeKeyed(raw.repartition(cols.map(raw.col): _*))
+          case _ => materialize(raw)
+        }))
       }
     } catch {
       case e: Exception =>
@@ -296,39 +323,52 @@ object Staging {
     }
   }
 
-  /** Delete artifacts not modified in the last `olderThanMs` under
-    * the lake root. Age-based (not current-fingerprint-based) on
-    * purpose: one lake serves MANY corpus dirs, and any fingerprint
-    * other than "this dir's current one" may be another live corpus's.
+  /** Every artifact key dir under the lake root, across builds (and
+    * the `v1/` dir of the layout before build ids, so the TTL reaps it).
     */
-  def pruneLake(spark: SparkSession, olderThanMs: Long): Int =
-    lakeRootOf(spark).map { root =>
-      val rootPath = new Path(root, s"v$LakeFormatVersion")
+  private def lakeKeyDirs(spark: SparkSession): Seq[(FileSystem, FileStatus)] =
+    lakeRootOf(spark).toSeq.flatMap { root =>
+      val rootPath = new Path(root)
       val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(rootPath)) 0
-      else {
-        val cutoff = System.currentTimeMillis() - olderThanMs
-        var n = 0
-        fs.listStatus(rootPath).foreach { keyDir =>
-          fs.listStatus(keyDir.getPath).foreach { fpDir =>
-            if (fpDir.getModificationTime < cutoff) {
-              fs.delete(fpDir.getPath, true); n += 1
-            }
-          }
-        }
-        n
-      }
-    }.getOrElse(0)
+      if (!fs.exists(rootPath)) Nil
+      else for {
+        build <- fs.listStatus(rootPath).toSeq if build.isDirectory
+        keyDir <- fs.listStatus(build.getPath).toSeq if keyDir.isDirectory
+      } yield (fs, keyDir)
+    }
+
+  /** The published snapshots of one key: in-flight publishes (`.tmp-*`
+    * dirs) are not snapshots.
+    */
+  private def snapshots(fs: FileSystem, keyDir: FileStatus): Seq[FileStatus] =
+    fs.listStatus(keyDir.getPath).toSeq
+      .filter(d => d.isDirectory && !d.getPath.getName.startsWith(".tmp-"))
+
+  /** Delete artifacts not modified in the last `olderThanMs` under
+    * the lake root, under every build. Age-based (not
+    * current-fingerprint-based) on purpose: one lake serves MANY
+    * corpus dirs and builds, and any fingerprint other than "this
+    * dir's current one" may be another live corpus's.
+    */
+  def pruneLake(spark: SparkSession, olderThanMs: Long): Int = {
+    val cutoff = System.currentTimeMillis() - olderThanMs
+    lakeKeyDirs(spark).map { case (fs, keyDir) =>
+      val old = fs.listStatus(keyDir.getPath).filter(_.getModificationTime < cutoff)
+      old.foreach(d => fs.delete(d.getPath, true))
+      old.length
+    }.sum
+  }
 
   /** Snapshot retention, the companion policy to [[pruneLake]]'s TTL:
     * keep only the newest `keep` fingerprint snapshots of every
-    * artifact key (by publish mtime) and delete the rest; returns the
-    * number of snapshot dirs deleted. At a daily ingest cadence every
-    * corpus rewrite publishes a fresh fingerprint per artifact, so an
-    * unretained lake grows by one full artifact set per snapshot
-    * forever. In-flight publishes (`.tmp-*` dirs) are not snapshots
-    * and are never touched — their publisher renames or deletes them;
-    * a crashed publisher's leftover is reaped by [[pruneLake]]'s TTL.
+    * artifact key of every build (by publish mtime) and delete the
+    * rest; returns the number of snapshot dirs deleted. At a daily
+    * ingest cadence every corpus rewrite publishes a fresh fingerprint
+    * per artifact, so an unretained lake grows by one full artifact set
+    * per snapshot forever. In-flight publishes are never touched —
+    * their publisher renames or deletes them; a crashed publisher's
+    * leftover is reaped by [[pruneLake]]'s TTL, as are the artifacts
+    * of a build no longer run.
     *
     * Safe against in-flight serves BY CONSTRUCTION: [[serve]]
     * materializes the artifact into session-held blocks at read time,
@@ -337,57 +377,42 @@ object Staging {
     */
   def retainNewestFingerprints(spark: SparkSession, keep: Int): Int = {
     require(keep >= 1, s"retention must keep at least 1 snapshot, got $keep")
-    lakeRootOf(spark).map { root =>
-      val rootPath = new Path(root, s"v$LakeFormatVersion")
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(rootPath)) 0
-      else {
-        var n = 0
-        fs.listStatus(rootPath).filter(_.isDirectory).foreach { keyDir =>
-          fs.listStatus(keyDir.getPath)
-            .filter(d => d.isDirectory && !d.getPath.getName.startsWith(".tmp-"))
-            .sortBy(d => (-d.getModificationTime, d.getPath.getName))
-            .drop(keep)
-            .foreach { fpDir => fs.delete(fpDir.getPath, true); n += 1 }
-        }
-        n
-      }
-    }.getOrElse(0)
+    lakeKeyDirs(spark).map { case (fs, keyDir) =>
+      val stale = snapshots(fs, keyDir)
+        .sortBy(d => (-d.getModificationTime, d.getPath.getName)).drop(keep)
+      stale.foreach(d => fs.delete(d.getPath, true))
+      stale.length
+    }.sum
   }
 
   /** Accounting face of the lake: one row per published artifact
     * snapshot — key, corpus fingerprint, data-file count, bytes,
-    * publish mtime, and whether the snapshot is complete (`_SUCCESS`
+    * publish mtime, whether the snapshot is complete (`_SUCCESS`
     * present; an incomplete one is a lost-race leftover the TTL will
-    * reap). Driver-side metadata listing only, the same cost class as
-    * [[corpusFingerprint]] — no data scan. This is what a retention
-    * policy is tuned against: `groupBy(artifact_key)` gives per-key
-    * snapshot counts and byte growth per corpus snapshot.
+    * reap) and the build that published it. Driver-side metadata
+    * listing only, the same cost class as [[corpusFingerprint]] — no
+    * data scan. This is what a retention policy is tuned against:
+    * `groupBy(artifact_key)` gives per-key snapshot counts and byte
+    * growth per corpus snapshot.
     */
   def lakeReport(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val rows = lakeRootOf(spark).toSeq.flatMap { root =>
-      val rootPath = new Path(root, s"v$LakeFormatVersion")
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(rootPath)) Seq.empty
-      else fs.listStatus(rootPath).filter(_.isDirectory).toSeq.flatMap { keyDir =>
-        fs.listStatus(keyDir.getPath)
-          .filter(d => d.isDirectory && !d.getPath.getName.startsWith(".tmp-"))
-          .toSeq.map { fpDir =>
-            val files = fs.listStatus(fpDir.getPath).filter(_.isFile)
-            val dataFiles = files.filter(f =>
-              f.getPath.getName != "_SUCCESS" && !f.getPath.getName.endsWith(".crc"))
-            (keyDir.getPath.getName,
-              fpDir.getPath.getName.stripPrefix("fp="),
-              dataFiles.length.toLong,
-              dataFiles.map(_.getLen).sum,
-              fpDir.getModificationTime,
-              files.exists(_.getPath.getName == "_SUCCESS"))
-          }
+    val rows = lakeKeyDirs(spark).flatMap { case (fs, keyDir) =>
+      snapshots(fs, keyDir).map { fpDir =>
+        val files = fs.listStatus(fpDir.getPath).filter(_.isFile)
+        val dataFiles = files.filter(f =>
+          f.getPath.getName != "_SUCCESS" && !f.getPath.getName.endsWith(".crc"))
+        (keyDir.getPath.getName,
+          fpDir.getPath.getName.stripPrefix("fp="),
+          dataFiles.length.toLong,
+          dataFiles.map(_.getLen).sum,
+          fpDir.getModificationTime,
+          files.exists(_.getPath.getName == "_SUCCESS"),
+          keyDir.getPath.getParent.getName.stripPrefix("build="))
       }
     }
     rows.toDF("artifact_key", "fingerprint", "n_files", "bytes",
-        "modified_ms", "complete")
+        "modified_ms", "complete", "build")
       .orderBy($"artifact_key", $"fingerprint")
   }
 
@@ -431,7 +456,7 @@ object Staging {
     * snapshot — callers that rewrite a corpus dir mid-session must
     * [[invalidate]] or be served the stale artifact (with the lake
     * layer enabled, a NEW session is immune: artifacts are keyed by
-    * [[Staging.corpusFingerprint]]). A session-end listener evicts a
+    * [[Staging.corpusFingerprint]] and [[Staging.BuildId]]). A session-end listener evicts a
     * stopping session's entries so the map never pins stopped
     * `SparkSession`s or their checkpoint files for the JVM's lifetime.
     *
@@ -440,9 +465,8 @@ object Staging {
     * fingerprint (zero build jobs — the 100 TB shape, where the
     * signature index / trained codebooks / graph edge tables are
     * BUILT once per corpus snapshot and READ by every later job), and
-    * a build publishes its result for the next session. Iterative
-    * consumers pass `partitionCols` so a lake-served leaf is re-keyed
-    * once per session instead of per round.
+    * a build publishes its result for the next session. Each call
+    * site declares how its artifact is served ([[Staging.Serve]]).
     *
     * Durability: on the localCheckpoint path (no checkpoint dir set) a
     * staged entry's lineage is truncated and its blocks live only in
@@ -450,8 +474,8 @@ object Staging {
     * unrecoverable for the rest of the session (recovery = [[invalidate]]
     * + rebuild/re-serve). Production sessions holding session-lifetime
     * artifacts should set a reliable checkpoint dir
-    * (`graft.Graft.session(ckptDir, ...)`), which every materialize in
-    * this codebase switches to automatically — and can ENFORCE that
+    * (`graft.Graft.session(ckptDir, ...)`), which [[Staging.materialize]]
+    * switches to automatically — and can ENFORCE that
     * posture with [[Staging.RequireDurableConfKey]], which makes
     * [[getOrBuild]] fail loudly rather than stage memory-only entries.
     */
@@ -470,8 +494,7 @@ object Staging {
       * duplicate job instead of an unbounded lock hold or a flaky
       * crash.
       */
-    def getOrBuild(spark: SparkSession, dir: String, key: String,
-        partitionCols: Seq[String] = Nil)(
+    def getOrBuild(spark: SparkSession, dir: String, key: String, serve: Serve)(
         build: => DataFrame): DataFrame = {
       val k = (spark, dir, key)
       val cached = entries.get(k)
@@ -496,7 +519,7 @@ object Staging {
         // session (or cluster job) reads instead of rebuilding.
         val lake = lakeRootOf(spark).map(root =>
           artifactPath(root, key, corpusFingerprint(spark, dir)))
-        val entry = lake.flatMap(serve(spark, _, partitionCols)).getOrElse {
+        val entry = lake.flatMap(Staging.serve(spark, _, serve)).getOrElse {
           val built = build
           lake.foreach(publish(built, _))
           built

@@ -3,6 +3,7 @@ package graft.ann
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Staging.{materialize, Serve}
 import graft.Tables.load
 import graft.functions.VecFuncs._
 
@@ -300,7 +301,7 @@ object Knn {
       .withColumn("dim", explode(typedLit(MatryoshkaDims)))
       .withColumn("score",
         vcos(expr("slice(probe_emb, 1, dim)"), expr("slice(embedding, 1, dim)")))
-    val ranked = graft.Staging.materialize(rankTopK(scored, 5, Seq("dim")))
+    val ranked = materialize(rankTopK(scored, 5, Seq("dim")))
     val full = ranked.where($"dim" === Dim)
       .select($"probe_id", $"neighbor_id")
     val totals = ranked.groupBy($"dim").agg(count(lit(1)).as("n_pairs"))
@@ -486,7 +487,7 @@ object Knn {
     * both engines).
     *
     * Each round's centroid table (≤[[CentBudget]] rows) is STAGED via
-    * [[materialize]]: the lazy chain re-derived the whole training
+    * [[graft.Staging.materialize]]: the lazy chain re-derived the whole training
     * history — and with it a corpus scan per round per CONSUMER —
     * every time the centroids were used (runtime-measured: 13 scans
     * of the corpus in one ann_topk_pq execution, ReuseExchange
@@ -526,7 +527,7 @@ object Knn {
       kmeansIters: Int): DataFrame = {
     import spark.implicits._
     val vecs = load(spark, dir, "embeddings").select($"vec_id", $"embedding")
-    val cents = stagedModel(spark, dir, s"cents_$kmeansIters")(
+    val cents = stagedModel(spark, dir, s"cents_$kmeansIters", Serve.Local)(
       trainedCentroids(vecs, kmeansIters))
     // both the probe filter and the corpus side of the cell join
     // consume the assignment; its aggregation Exchange is deduped by
@@ -560,7 +561,7 @@ object Knn {
   def ivfTopKMulti(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val vecs = load(spark, dir, "embeddings").select($"vec_id", $"embedding")
-    val cents = stagedModel(spark, dir, s"cents_$KMeansIters")(
+    val cents = stagedModel(spark, dir, s"cents_$KMeansIters", Serve.Local)(
       trainedCentroids(vecs, KMeansIters))
     val assigned = assign(vecs, cents)
     val probeCells = vecs.where($"vec_id" < 10)
@@ -596,7 +597,7 @@ object Knn {
   def rangeSearch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val vecs = load(spark, dir, "embeddings").select($"vec_id", $"embedding")
-    val cents = stagedModel(spark, dir, s"cents_$KMeansIters")(
+    val cents = stagedModel(spark, dir, s"cents_$KMeansIters", Serve.Local)(
       trainedCentroids(vecs, KMeansIters))
     val assigned = assign(vecs, cents)
     val probeCells = vecs.where($"vec_id" < 10)
@@ -702,7 +703,7 @@ object Knn {
     import spark.implicits._
     val vecs = load(spark, dir, "embeddings")
       .select($"vec_id", $"embedding", $"label")
-    val cents = stagedModel(spark, dir, s"cents_$KMeansIters")(
+    val cents = stagedModel(spark, dir, s"cents_$KMeansIters", Serve.Local)(
       trainedCentroids(vecs.select($"vec_id", $"embedding"), KMeansIters))
     // label rides the map-side assignment pass — no join-back shuffle
     val assigned = assign(vecs, cents)
@@ -986,7 +987,7 @@ object Knn {
     import spark.implicits._
     val vecs = load(spark, dir, "embeddings").select($"vec_id", $"embedding")
     val sv = subvecs(vecs)
-    val cb = stagedModel(spark, dir, s"pqcb_$PqIters")(pqCodebooks(sv, PqIters))
+    val cb = stagedModel(spark, dir, s"pqcb_$PqIters", Serve.Local)(pqCodebooks(sv, PqIters))
     val codes = pqEncodeArr(spread(vecs), cb)
     val lut = lutToArr(sv.where($"vec_id" < 10)
       .join(broadcast(cb), "sub")
@@ -1017,15 +1018,6 @@ object Knn {
     */
   val IvfPqCoarseIters = 1
 
-  /** Truncate lineage for a many-consumer intermediate (reliable
-    * checkpoint when a dir is configured — the cluster path — else
-    * executor-memory localCheckpoint; same policy as the dedup
-    * pipelines).
-    */
-  private def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
   /** Trained-artifact staging — train once per (session, corpus dir),
     * serve every query. In production an ANN index is BUILT once
     * (centroids, codebooks, residual/code tables persisted to the
@@ -1040,9 +1032,9 @@ object Knn {
     */
   private val sessionStage = new graft.Staging.SessionCache()
 
-  private def stagedModel(spark: SparkSession, dir: String, key: String)(
+  private def stagedModel(spark: SparkSession, dir: String, key: String, serve: Serve)(
       build: => DataFrame): DataFrame =
-    sessionStage.getOrBuild(spark, dir, key)(build)
+    sessionStage.getOrBuild(spark, dir, key, serve)(build)
 
   /** Drop the staged index artifacts for `(spark, dir)`. */
   def invalidate(spark: SparkSession, dir: String): Unit =
@@ -1054,7 +1046,7 @@ object Knn {
     */
   private[graft] def servedCentroids(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    stagedModel(spark, dir, s"cents_$KMeansIters")(
+    stagedModel(spark, dir, s"cents_$KMeansIters", Serve.Local)(
       trainedCentroids(
         load(spark, dir, "embeddings").select($"vec_id", $"embedding"),
         KMeansIters))
@@ -1103,10 +1095,10 @@ object Knn {
     import spark.implicits._
     val vecs = load(spark, dir, "embeddings").select($"vec_id", $"embedding")
     // coarse routing cells (broadcast-trained, argmax-assigned)
-    val cents = stagedModel(spark, dir, s"cents_$IvfPqCoarseIters")(
+    val cents = stagedModel(spark, dir, s"cents_$IvfPqCoarseIters", Serve.Local)(
       trainedCentroids(vecs, IvfPqCoarseIters))
     val sv = subvecs(vecs)
-    val cb = stagedModel(spark, dir, s"pqcb_$PqIters")(pqCodebooks(sv, PqIters))
+    val cb = stagedModel(spark, dir, s"pqcb_$PqIters", Serve.Local)(pqCodebooks(sv, PqIters))
     // cell + codes in ONE map-only pass over the scan: assign keeps
     // the embedding and the encoder consumes it — the corpus reaches
     // its (cell, codes) index-row form without a single shuffle
@@ -1196,7 +1188,7 @@ object Knn {
     import spark.implicits._
     import graft.functions.VecFuncs.vsub
     val vecs = load(spark, dir, "embeddings").select($"vec_id", $"embedding")
-    val cents = stagedModel(spark, dir, s"cents_$IvfPqCoarseIters")(
+    val cents = stagedModel(spark, dir, s"cents_$IvfPqCoarseIters", Serve.Local)(
       trainedCentroids(vecs, IvfPqCoarseIters))
     val assigned = assign(vecs, cents)
     // materialize ONCE: Spark has no cross-branch CSE, and the
@@ -1205,12 +1197,12 @@ object Knn {
     // n×C coarse scoring pass. The table is n rows of one double[64]
     // (~2.5 MB at sf0.1; at 100 TB this is the staging table a real
     // pipeline writes between index-build stages).
-    val rvecs = stagedModel(spark, dir, s"rvecs_$IvfPqCoarseIters")(
+    val rvecs = stagedModel(spark, dir, s"rvecs_$IvfPqCoarseIters", Serve.Distributed)(
       materialize(assigned.join(broadcast(cents), "cid")
         .select($"vec_id", $"cid".as("cell"),
           vsub($"embedding", $"cent").as("embedding"))))
     val rsv = subvecs(rvecs.select($"vec_id", $"embedding"))
-    val cb = stagedModel(spark, dir, s"pqcb_res_$PqIters")(pqCodebooks(rsv, PqIters))
+    val cb = stagedModel(spark, dir, s"pqcb_res_$PqIters", Serve.Local)(pqCodebooks(rsv, PqIters))
     // map-only residual encode off the staged table; candidates score
     // map-side via the ordered L2-ADC fold (negated: lower distance =
     // better)
@@ -1296,17 +1288,17 @@ object Knn {
     import spark.implicits._
     import graft.functions.VecFuncs.vsub
     val vecs = load(spark, dir, "embeddings").select($"vec_id", $"embedding")
-    val cents = stagedModel(spark, dir, s"cents_$IvfPqCoarseIters")(
+    val cents = stagedModel(spark, dir, s"cents_$IvfPqCoarseIters", Serve.Local)(
       trainedCentroids(vecs, IvfPqCoarseIters))
     val assigned = assign(vecs, cents)
     // the SAME residual table D7f stages (identical derivation) —
     // shared key, built by whichever runs first
-    val rvecs = stagedModel(spark, dir, s"rvecs_$IvfPqCoarseIters")(
+    val rvecs = stagedModel(spark, dir, s"rvecs_$IvfPqCoarseIters", Serve.Distributed)(
       materialize(assigned.join(broadcast(cents), "cid")
         .select($"vec_id", $"cid".as("cell"),
           vsub($"embedding", $"cent").as("embedding"))))
     val svc = subvecs(rvecs, keep = Seq("cell"))
-    val cb = stagedModel(spark, dir, s"pqcb_pc_$PqIters")(pcCodebooks(svc, PqIters))
+    val cb = stagedModel(spark, dir, s"pqcb_pc_$PqIters", Serve.Local)(pcCodebooks(svc, PqIters))
     // map-only per-cell encode (cell-keyed nested codebooks broadcast
     // in); candidates score map-side via the ordered L2-ADC fold
     val coded = pcEncodeArr(spread(rvecs), cb)
@@ -1589,7 +1581,7 @@ object Knn {
   def ivfFpsTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val vecs = load(spark, dir, "embeddings").select($"vec_id", $"embedding")
-    val cents = stagedModel(spark, dir, s"cents_fps_${FpsBudget}_$FpsIters")(
+    val cents = stagedModel(spark, dir, s"cents_fps_${FpsBudget}_$FpsIters", Serve.Local)(
       refine(vecs, fpsSeeds(vecs, FpsBudget), FpsIters))
     val assigned = assign(vecs, cents)
     val probes = assigned.where($"vec_id" < 10)
@@ -1694,7 +1686,7 @@ object Knn {
         .select(($"vec_id" + 10000).as("vec_id"), $"embedding"))
     val cents = trainedCentroids(corpus, 1)
     // the clustered/scored table is SemDeDup's persisted artifact
-    val scored = stagedModel(spark, dir, "sem_scored")(materialize(
+    val scored = stagedModel(spark, dir, "sem_scored", Serve.Distributed)(materialize(
       assign(corpus, cents)
         .join(broadcast(cents), "cid")
         .select($"vec_id", $"embedding", $"cid",
@@ -1979,7 +1971,7 @@ object Knn {
   def knnJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val vecs = load(spark, dir, "embeddings").select($"vec_id", $"embedding")
-    val cents = stagedModel(spark, dir, s"cents_$KMeansIters")(
+    val cents = stagedModel(spark, dir, s"cents_$KMeansIters", Serve.Local)(
       trainedCentroids(vecs, KMeansIters))
     val assigned = assign(vecs, cents)
     val nbrs = assigned.select($"cid",
@@ -2033,8 +2025,8 @@ object Knn {
     import spark.implicits._
     // the converged labels are corpus-snapshot material like D15's
     // cc_labels: the closure runs once per corpus, reads thereafter
-    val labels = stagedModel(spark, dir, "knn_cc_labels") {
-      val knn = graft.Staging.materialize(
+    val labels = stagedModel(spark, dir, "knn_cc_labels", Serve.Distributed) {
+      val knn = materialize(
         knnJoin(spark, dir).select($"src_id", $"neighbor_id"))
       val mut = knn.as("a").join(knn.as("b"),
           col("b.src_id") === col("a.neighbor_id") &&
@@ -2042,7 +2034,7 @@ object Knn {
         .where(col("a.src_id") < col("a.neighbor_id"))
         .select(col("a.src_id").as("d1"), col("a.neighbor_id").as("d2"))
       val ids = load(spark, dir, "embeddings").select($"vec_id".as("doc_id"))
-      graft.Staging.materialize(
+      materialize(
         graft.dedup.Dedup.connectedComponentsTwoPhase(ids, mut))
     }
     labels
@@ -2123,10 +2115,10 @@ object Knn {
     */
   private[graft] def navGraphEdges(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    stagedModel(spark, dir, "knn_nav_edges") {
+    stagedModel(spark, dir, "knn_nav_edges", Serve.Distributed) {
       val knn = knnJoin(spark, dir)
         .select($"src_id".as("src"), $"neighbor_id".as("dst"))
-      graft.Staging.materialize(
+      materialize(
         knn.unionAll(knn.select($"dst".as("src"), $"src".as("dst"))).distinct())
     }
   }
@@ -2139,7 +2131,7 @@ object Knn {
   private[graft] def entryReps(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val vecs = load(spark, dir, "embeddings").select($"vec_id", $"embedding")
-    val cents = stagedModel(spark, dir, s"cents_$KMeansIters")(
+    val cents = stagedModel(spark, dir, s"cents_$KMeansIters", Serve.Local)(
       trainedCentroids(vecs, KMeansIters))
     assign(vecs, cents).join(broadcast(cents), Seq("cid"))
       .withColumn("cscore", vcos($"embedding", $"cent"))
@@ -2369,7 +2361,7 @@ object Knn {
   def clusterPurity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val emb = load(spark, dir, "embeddings")
-    val cents = stagedModel(spark, dir, s"cents_$KMeansIters")(
+    val cents = stagedModel(spark, dir, s"cents_$KMeansIters", Serve.Local)(
       trainedCentroids(emb.select($"vec_id", $"embedding"), KMeansIters))
     val assigned = assign(emb.select($"vec_id", $"embedding"), cents)
       .join(emb.select($"vec_id", $"label"), "vec_id")
@@ -2637,7 +2629,7 @@ object Knn {
   def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val vecs = load(spark, dir, "embeddings")
-    val cents = stagedModel(spark, dir, s"cents_$KMeansIters")(
+    val cents = stagedModel(spark, dir, s"cents_$KMeansIters", Serve.Local)(
       trainedCentroids(vecs.select($"vec_id", $"embedding"), KMeansIters))
     val centArr = cents.agg(collect_list(struct($"cid", $"cent")).as("cs"))
     val assigned = vecs.crossJoin(broadcast(centArr))

@@ -3,6 +3,7 @@ package graft.ann
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Staging.{materialize, Serve}
 import graft.Tables.load
 
 /** D27: distributed PCA by power iteration (`emb_pca`) — the
@@ -56,10 +57,6 @@ object Pca {
     */
   private def qsum(c: org.apache.spark.sql.Column) = graft.Tables.qsum(c)
   private def qsumSql(expr: String): String = graft.Tables.qsumSql(expr)
-
-  private def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
 
   /** (i, j, c): the centered covariance matrix SCALED BY N (i.e. the
     * scatter matrix), i/j in 1..Dim. Skipping the /n keeps every cov
@@ -164,12 +161,12 @@ object Pca {
 
   private def stagedCov(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    sessionStage.getOrBuild(spark, dir, "cov")(materialize(covariance(
+    sessionStage.getOrBuild(spark, dir, "cov", Serve.Local)(materialize(covariance(
       load(spark, dir, "embeddings").select($"vec_id", $"embedding"))))
   }
 
   private def stagedV1(spark: SparkSession, dir: String): DataFrame =
-    sessionStage.getOrBuild(spark, dir, "pc1")(
+    sessionStage.getOrBuild(spark, dir, "pc1", Serve.Local)(
       iterate(spark, stagedCov(spark, dir), Iters))
 
   /** Drop the staged PCA artifacts for `(spark, dir)`. */
@@ -262,7 +259,7 @@ object Pca {
     * the whitening transform.
     */
   private def stagedV2(spark: SparkSession, dir: String): DataFrame =
-    sessionStage.getOrBuild(spark, dir, "pc2") {
+    sessionStage.getOrBuild(spark, dir, "pc2", Serve.Local) {
       import spark.implicits._
       val cov = stagedCov(spark, dir)
       val v1 = stagedV1(spark, dir)

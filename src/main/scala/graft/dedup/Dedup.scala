@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Staging.{materialize, release, Serve}
 import graft.Tables.load
 
 /** Deduplication operators for training-data curation (SURVEY §2
@@ -136,11 +137,10 @@ object Dedup {
     * compile for the 64-wide aggregate — an exchange that existed
     * only because map work was phrased as aggregation.
     *
-    * The signature table is MATERIALIZED (reliable checkpoint on the
-    * cluster path, localCheckpoint locally): with no aggregation
-    * boundary left, the band self-join's two sides and the score
-    * join-backs would otherwise each re-derive the scan + kernel
-    * pipeline; as a LogicalRDD leaf all four consumers read it as
+    * The signature table is MATERIALIZED ([[graft.Staging.materialize]]):
+    * with no aggregation boundary left, the band self-join's two sides
+    * and the score join-backs would otherwise each re-derive the scan
+    * + kernel pipeline; as a LogicalRDD leaf all four consumers read it as
     * data — also the production shape, where the signature index is
     * a persisted table, not a per-query recomputation.
     */
@@ -225,14 +225,14 @@ object Dedup {
     * keep-best paths.
     */
   private[graft] def nearSignatures(spark: SparkSession, dir: String): DataFrame =
-    stagedOnce(spark, dir, "near_sigs")(minhashed(corpusNear(spark, dir)))
+    stagedOnce(spark, dir, "near_sigs", Serve.Distributed)(minhashed(corpusNear(spark, dir)))
 
   /** The edge input for [[clusters]]: candidate pairs only, no score
     * join-back, no sort. Staged once per session — [[minhash]],
     * [[clusters]], and [[keepBest]] all consume the same pair table.
     */
   private[graft] def minhashPairs(spark: SparkSession, dir: String): DataFrame =
-    stagedOnce(spark, dir, "near_pairs")(
+    stagedOnce(spark, dir, "near_pairs", Serve.Distributed)(
       materialize(pairsFromSignatures(nearSignatures(spark, dir))))
 
   /** Estimated Jaccard from two signatures: 64 unrolled codegen'd
@@ -510,20 +510,6 @@ object Dedup {
       .withColumn("bucket", expr("length(text) div 8"))
       .select(col("doc_id"), col("lang"), col("bucket"), col("grams"))
 
-  /** Materialize an intermediate used by several downstream branches.
-    * Spark re-derives a sub-DAG once per consumer (no cross-branch
-    * CSE), so a postings table read by 4–5 joins would be recomputed —
-    * including its interpreted gram-extraction HOF — 4–5×. Reliable
-    * checkpoint when the context has a checkpoint dir (the cluster
-    * path; a production pipeline writes the postings table to the
-    * lake), executor-memory localCheckpoint otherwise.
-    */
-  private def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
-  private def release(dfs: DataFrame*): Unit = graft.Staging.release(dfs: _*)
-
   /** Session-shared staging for intermediates that are PERSISTED
     * TABLES in production: the signature index, the candidate-pair
     * table, and the cluster-label table are written once per corpus
@@ -539,9 +525,9 @@ object Dedup {
     */
   private val sessionStage = new graft.Staging.SessionCache()
 
-  private def stagedOnce(spark: SparkSession, dir: String, key: String)(
+  private def stagedOnce(spark: SparkSession, dir: String, key: String, serve: Serve)(
       build: => DataFrame): DataFrame =
-    sessionStage.getOrBuild(spark, dir, key)(build)
+    sessionStage.getOrBuild(spark, dir, key, serve)(build)
 
   /** Drop every staged entry for `(spark, dir)` and free its blocks /
     * checkpoint files. The cache key is the PATH, not a content
@@ -673,7 +659,7 @@ object Dedup {
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // pair table staged once per corpus snapshot (cc_labels posture)
-    stagedOnce(spark, dir, "jaccard_pairs")(
+    stagedOnce(spark, dir, "jaccard_pairs", Serve.Distributed)(
       ngramJaccardOn(
         load(spark, dir, "documents").select("doc_id", "lang", "text"),
         JaccardTau))
@@ -738,7 +724,8 @@ object Dedup {
     // the verified pair table is corpus-snapshot material: built once
     // per corpus, served from the session+lake cache thereafter (the
     // cc_labels / max_spans posture)
-    stagedOnce(spark, dir, "containment_pairs")(ngramContainmentBuild(spark, dir))
+    stagedOnce(spark, dir, "containment_pairs", Serve.Distributed)(
+      ngramContainmentBuild(spark, dir))
       .orderBy($"d1", $"d2")
   }
 
@@ -1180,7 +1167,7 @@ object Dedup {
     */
   private[graft] def docSignatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    stagedOnce(spark, dir, "doc_sigs")(
+    stagedOnce(spark, dir, "doc_sigs", Serve.Distributed)(
       minhashed(load(spark, dir, "documents").select($"doc_id", $"text")))
   }
 
@@ -1191,7 +1178,7 @@ object Dedup {
     * not once per micro-batch.
     */
   private[graft] def bandIndex(spark: SparkSession, dir: String): DataFrame =
-    stagedOnce(spark, dir, "band_index")(
+    stagedOnce(spark, dir, "band_index", Serve.Distributed)(
       materialize(cappedBands(docSignatures(spark, dir))))
 
   def minhashIncremental(spark: SparkSession, dir: String): DataFrame = {
@@ -1341,14 +1328,11 @@ object Dedup {
     * would mislabel any cluster whose diameter exceeds it. [[MaxIters]]
     * is a runaway backstop only: hitting it throws.
     *
-    * Checkpointing: lineage is truncated every round (otherwise each
-    * iteration's plan re-embeds the full upstream DAG and planning
-    * blows the driver heap). If the SparkContext has a checkpoint dir
-    * configured this uses reliable `checkpoint()` (durable storage —
-    * the 100 TB path, survives executor loss); otherwise
-    * `localCheckpoint()` (executor memory, fine single-node).
-    * Superseded rounds' blocks are freed eagerly — leaving them cached
-    * starves every later query in the session.
+    * Checkpointing: lineage is truncated every round through
+    * [[graft.Staging.materialize]] (otherwise each iteration's plan
+    * re-embeds the full upstream DAG and planning blows the driver
+    * heap). Superseded rounds' blocks are freed eagerly — leaving them
+    * cached starves every later query in the session.
     *
     * Per-round driver work is ONE materializing job: the new labels are
     * checkpointed with the previous label carried alongside, so the
@@ -1503,8 +1487,8 @@ object Dedup {
     */
   private def ccLabels(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    sessionStage.getOrBuild(spark, dir, "cc_labels", Seq("doc_id")) {
-      graft.Staging.materialize(
+    sessionStage.getOrBuild(spark, dir, "cc_labels", Serve.Keyed("doc_id")) {
+      materialize(
         connectedComponentsTwoPhase(corpusNear(spark, dir).select($"doc_id"),
           minhashPairs(spark, dir)).repartition($"doc_id"))
     }
@@ -1824,7 +1808,7 @@ object Dedup {
   def winnowing(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // fingerprint-pair table staged once per corpus snapshot
-    stagedOnce(spark, dir, "win_pairs")(materialize(winnowingBuild(spark, dir)))
+    stagedOnce(spark, dir, "win_pairs", Serve.Distributed)(materialize(winnowingBuild(spark, dir)))
       .orderBy($"a", $"b")
   }
 
@@ -2019,7 +2003,7 @@ object Dedup {
     // suffix _hb = host-base id derivation; the lake fingerprints the
     // CORPUS, so an operator-semantics change must re-key or a
     // pre-change artifact would be served
-    val spans = stagedOnce(spark, dir, "max_spans_hb") {
+    val spans = stagedOnce(spark, dir, "max_spans_hb", Serve.Distributed) {
       materialize(maxSpansOn(corpus, MaxSpanK, MaxSpanDfCap, MaxSpanMinLen))
     }
     spans

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.flow.FlowAnalytics
+import graft.Staging.{materializeKeyed, release, Serve}
 
 /** B19: graph analytics over the flow topology — PageRank on the
   * src-IP → dst-IP graph (`flow_pagerank`), the standard "which hosts
@@ -25,7 +26,7 @@ import graft.flow.FlowAnalytics
   *    intermediate round is consumed exactly once by the next round,
   *    so a two-round lazy segment replays nothing, while staging
   *    still cuts lineage before the plan can compound (the full lazy
-  *    recurrence is refused — see [[stage]]).
+  *    recurrence is refused — see [[graft.Staging.stagePoint]]).
   *
   * Semantics: fixed [[Iters]] synchronous rounds of
   * r(v) = (1-d)/N + d·Σ_{u→v} r(u)/outdeg(u), uniform init 1/N,
@@ -57,29 +58,6 @@ object GraphOps {
   // quantized mass is ≤ d·10⁹, a HITS half-step's ≤ degree·10⁹
   private def qsum(c: Column) = graft.Tables.qsum(c)
 
-  private def materialize(df: DataFrame): DataFrame =
-    graft.Staging.preservePartitioning(df.sparkSession) {
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    }
-
-  private def release(dfs: DataFrame*): Unit = graft.Staging.release(dfs: _*)
-
-  /** Round-state staging for the iterative queries. Both checkpoint
-    * flavors cut lineage through [[org.apache.spark.sql.execution.LogicalRDD]],
-    * which ADVERTISES the staged plan's outputPartitioning — so a
-    * frame staged as hash(k) feeds every later join/aggregate on k
-    * with ZERO additional exchange. Under AQE the adaptive root hides
-    * that partitioning (`UnknownPartitioning`), so the checkpoint
-    * action runs through [[graft.Staging.preservePartitioning]]. The iterative queries stage
-    * their edge tables pre-partitioned on the round's join key once,
-    * so each round's only shuffle is the contribution re-keying (the
-    * GraphX/MLlib iterative pattern). Rounds stay EAGER: a lazy
-    * recurrence compounds the logical plan each round and blows up
-    * analysis/AQE bookkeeping long before the data does.
-    */
-  private def stage(df: DataFrame): DataFrame = materialize(df)
-
   /** The graph's BASE tables (edge sets, degree-joined edges, node
     * tables) staged per (session, dir): in production the graph is
     * BUILT once from the flow corpus and queried many times —
@@ -90,10 +68,9 @@ object GraphOps {
     */
   private val sessionStage = new graft.Staging.SessionCache()
 
-  private def stagedGraph(spark: SparkSession, dir: String, key: String,
-      partitionCols: Seq[String] = Nil)(
+  private def stagedGraph(spark: SparkSession, dir: String, key: String, serve: Serve)(
       build: => DataFrame): DataFrame =
-    sessionStage.getOrBuild(spark, dir, key, partitionCols)(build)
+    sessionStage.getOrBuild(spark, dir, key, serve)(build)
 
   /** Drop the staged graph tables for `(spark, dir)`. */
   def invalidate(spark: SparkSession, dir: String): Unit =
@@ -125,13 +102,13 @@ object GraphOps {
     val oldFlows = flows.crossJoin(broadcast(lastDay))
       .where(dayCol < $"d")
     def graphOf(src: DataFrame, key: String): (DataFrame, DataFrame, DataFrame) = {
-      val e0 = stagedGraph(spark, dir, s"${key}_e0", Seq("src"))(stage(
+      val e0 = stagedGraph(spark, dir, s"${key}_e0", Serve.Keyed("src"))(materializeKeyed(
         src.select($"sa".as("src"), $"da".as("dst"))
           .union(src.select($"da".as("src"), $"sa".as("dst")))
           .distinct().repartition($"src")))
-      val se = stagedGraph(spark, dir, s"${key}_src_edges", Seq("src"))(stage(
+      val se = stagedGraph(spark, dir, s"${key}_src_edges", Serve.Keyed("src"))(materializeKeyed(
         e0.join(e0.groupBy($"src").agg(count(lit(1)).as("outdeg")), "src")))
-      val nodes = stagedGraph(spark, dir, s"${key}_nodes", Seq("node"))(stage(
+      val nodes = stagedGraph(spark, dir, s"${key}_nodes", Serve.Keyed("node"))(materializeKeyed(
         e0.select($"src".as("node"))
           .union(e0.select($"dst".as("node"))).distinct()))
       (e0, se, nodes)
@@ -149,7 +126,7 @@ object GraphOps {
             (lit(1.0) - lit(Damping)) / $"n" +
               coalesce($"s", lit(0.0)), 9).as("pr"))
         ranks = if (graft.Staging.stagePoint(i, rounds, stageFinal = false))
-          stage(next) else next
+          materializeKeyed(next) else next
       }
       ranks
     }
@@ -158,10 +135,10 @@ object GraphOps {
     // cache + artifact lake — so "yesterday's ranks are a persisted
     // artifact" is literal: a later session (or cluster job) on the
     // same corpus snapshot READS the vector and runs only phase 2.
-    val warmBase = stagedGraph(spark, dir, "incr_warm_base", Seq("node")) {
+    val warmBase = stagedGraph(spark, dir, "incr_warm_base", Serve.Keyed("node")) {
       val (_, seOld, nodesOld) = graphOf(oldFlows, "incr_old")
       val nOld = nodesOld.agg(count(lit(1)).as("n"))
-      stage(walk(seOld, nodesOld, nOld,
+      materializeKeyed(walk(seOld, nodesOld, nOld,
         nodesOld.crossJoin(broadcast(nOld))
           .select($"node", (lit(1.0) / $"n").as("pr")),
         Iters))
@@ -170,14 +147,14 @@ object GraphOps {
     // folded TODAY vector is itself tomorrow's persisted artifact —
     // staged per corpus snapshot like the warm base (the cold bench
     // column carries the two-phase build cost)
-    val folded = stagedGraph(spark, dir, "incr_final", Seq("node")) {
+    val folded = stagedGraph(spark, dir, "incr_final", Serve.Keyed("node")) {
       val (_, seFull, nodesFull) = graphOf(flows, "und") // shared with B19's staging
       val nFull = nodesFull.agg(count(lit(1)).as("n"))
       val r0Full = nodesFull
         .join(warmBase.select($"node", $"pr".as("pr_old")), Seq("node"), "left")
         .crossJoin(broadcast(nFull))
         .select($"node", coalesce($"pr_old", lit(1.0) / $"n").as("pr"))
-      stage(walk(seFull, nodesFull, nFull, r0Full, IncrRounds))
+      materializeKeyed(walk(seFull, nodesFull, nFull, r0Full, IncrRounds))
     }
     folded.orderBy($"pr".desc, $"node").limit(TopN)
       .select($"node", $"pr".as("pagerank"))
@@ -241,7 +218,7 @@ object GraphOps {
     // staged session+lake like the truss / kNN labels / warm base, so
     // every later call reads it. The cold bench column keeps the walk
     // cost visible.
-    val ranks = stagedGraph(spark, dir, "und_pagerank", Seq("node")) {
+    val ranks = stagedGraph(spark, dir, "und_pagerank", Serve.Keyed("node")) {
       val flows = FlowAnalytics.asFlows(spark, dir)
       // model request+reply: each flow contributes both directions —
       // src and dst namespaces are disjoint (10.* vs 192.168.*), so a
@@ -254,16 +231,16 @@ object GraphOps {
       // the staged EDGE-sized table — the previous shape re-scanned
       // flows for each derived table. outdeg aggregates on the staged
       // partitioning key and joins back exchange-free.
-      val e0 = stagedGraph(spark, dir, "und_e0", Seq("src"))(stage(
+      val e0 = stagedGraph(spark, dir, "und_e0", Serve.Keyed("src"))(materializeKeyed(
         flows.select($"sa".as("src"), $"da".as("dst"))
           .union(flows.select($"da".as("src"), $"sa".as("dst")))
           .distinct().repartition($"src")))
       // (src, dst, outdeg): built once, staged pre-partitioned on src
       // so every round's rank join reads it in place
-      val srcEdges = stagedGraph(spark, dir, "und_src_edges", Seq("src"))(stage(
+      val srcEdges = stagedGraph(spark, dir, "und_src_edges", Serve.Keyed("src"))(materializeKeyed(
         e0.join(e0.groupBy($"src").agg(count(lit(1)).as("outdeg")), "src")))
       // distinct leaves nodes hash(node)-partitioned — the left-join key
-      val nodes = stagedGraph(spark, dir, "und_nodes", Seq("node"))(stage(
+      val nodes = stagedGraph(spark, dir, "und_nodes", Serve.Keyed("node"))(materializeKeyed(
         e0.select($"src".as("node"))
           .union(e0.select($"dst".as("node"))).distinct()))
       val nframe = nodes.agg(count(lit(1)).as("n"))
@@ -290,7 +267,7 @@ object GraphOps {
               coalesce($"s", lit(0.0)), 9).as("pr"))
         // the FINAL round is the staged artifact itself
         rk = if (graft.Staging.stagePoint(i, Iters, stageFinal = true))
-          stage(next) else next
+          materializeKeyed(next) else next
       }
       rk
     }
@@ -351,17 +328,17 @@ object GraphOps {
   def flowPagerankPers(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // converged PPR vector staged per corpus snapshot, like B19's
-    val ranks = stagedGraph(spark, dir, "und_ppr", Seq("node")) {
+    val ranks = stagedGraph(spark, dir, "und_ppr", Serve.Keyed("node")) {
       val flows = FlowAnalytics.asFlows(spark, dir)
       // same one-corpus-pass staging as [[flowPagerank]]: edges staged
       // hash(src) first, outdeg/srcEdges/nodes derive edge-sized (the
       // seed scan is the one extra flow pass — it filters a different
       // predicate than the edge projection)
-      val e0 = stagedGraph(spark, dir, "und_e0", Seq("src"))(stage(
+      val e0 = stagedGraph(spark, dir, "und_e0", Serve.Keyed("src"))(materializeKeyed(
         flows.select($"sa".as("src"), $"da".as("dst"))
           .union(flows.select($"da".as("src"), $"sa".as("dst")))
           .distinct().repartition($"src")))
-      val srcEdges = stagedGraph(spark, dir, "und_src_edges", Seq("src"))(stage(
+      val srcEdges = stagedGraph(spark, dir, "und_src_edges", Serve.Keyed("src"))(materializeKeyed(
         e0.join(e0.groupBy($"src").agg(count(lit(1)).as("outdeg")), "src")))
       // seeds: services with the most reset-flagged (error) flows
       val seeds = flows.where($"flg" === ".A.R..")
@@ -370,7 +347,7 @@ object GraphOps {
         .select($"node")
       // teleport mass rides the staged node table: (1-d)/|S| on seeds,
       // 0 elsewhere — no per-round seed join
-      val nodes = stagedGraph(spark, dir, "und_nodes_tele", Seq("node"))(stage(
+      val nodes = stagedGraph(spark, dir, "und_nodes_tele", Serve.Keyed("node"))(materializeKeyed(
         e0.select($"src".as("node"))
           .union(e0.select($"dst".as("node"))).distinct()
           .join(seeds.select($"node", lit(true).as("is_seed")), Seq("node"), "left")
@@ -388,7 +365,7 @@ object GraphOps {
           .select($"node",
             round($"tele" + coalesce($"s", lit(0.0)), 9).as("pr"))
         rk = if (graft.Staging.stagePoint(i, Iters, stageFinal = true))
-          stage(next) else next
+          materializeKeyed(next) else next
       }
       rk
     }
@@ -457,7 +434,7 @@ object GraphOps {
     import spark.implicits._
     // converged hub/authority vectors staged per corpus snapshot (one
     // (role, node, score) table), same posture as the rank vectors
-    val scores = stagedGraph(spark, dir, "dir_hits", Seq("node")) {
+    val scores = stagedGraph(spark, dir, "dir_hits", Serve.Keyed("node")) {
       val flows = FlowAnalytics.asFlows(spark, dir)
       val edges = flows.select($"sa".as("src"), $"da".as("dst")).distinct()
       // the edge table is read by half-steps joining on src (auth) and
@@ -465,8 +442,10 @@ object GraphOps {
       // neither direction ever re-shuffles it; the second copy derives
       // from the FIRST staged copy (edge-sized re-key), so the flow
       // corpus is scanned exactly once
-      val eSrc = stagedGraph(spark, dir, "dir_esrc", Seq("src"))(stage(edges.repartition($"src")))
-      val eDst = stagedGraph(spark, dir, "dir_edst", Seq("dst"))(stage(eSrc.repartition($"dst")))
+      val eSrc = stagedGraph(spark, dir, "dir_esrc", Serve.Keyed("src"))(
+        materializeKeyed(edges.repartition($"src")))
+      val eDst = stagedGraph(spark, dir, "dir_edst", Serve.Keyed("dst"))(
+        materializeKeyed(eSrc.repartition($"dst")))
       def normalize(raw: DataFrame, col: String): DataFrame = {
         val nrm = raw.agg(sqrt(rsum($"v" * $"v")).as("nrm"))
         raw.crossJoin(broadcast(nrm))
@@ -481,18 +460,18 @@ object GraphOps {
         // doubling; the groupBy leaves it hash-partitioned on exactly
         // the NEXT half-step's join key, so staging also makes every
         // cross-round join exchange-free
-        val rawA = stage(
+        val rawA = materializeKeyed(
           eSrc.join(hub, $"src" === $"node")
             .groupBy($"dst").agg(qsum($"h").as("v"))
             .select($"dst".as("node"), $"v"))
         auth = normalize(rawA, "a")
-        val rawH = stage(
+        val rawH = materializeKeyed(
           eDst.join(auth, $"dst" === $"node")
             .groupBy($"src").agg(qsum($"a").as("v"))
             .select($"src".as("node"), $"v"))
         hub = normalize(rawH, "h")
       }
-      stage(auth.select(lit("authority").as("role"), $"node", $"a".as("score"))
+      materializeKeyed(auth.select(lit("authority").as("role"), $"node", $"a".as("score"))
         .unionAll(hub.select(lit("hub").as("role"), $"node", $"h".as("score"))))
     }
     def topOf(role: String): DataFrame =
@@ -600,15 +579,15 @@ object GraphOps {
   private def lpaLabelFrames(spark: SparkSession, dir: String):
       (DataFrame, DataFrame) = {
     import spark.implicits._
-    val ueU = stagedGraph(spark, dir, "bip_ue_u", Seq("unode"))(stage(
+    val ueU = stagedGraph(spark, dir, "bip_ue_u", Serve.Keyed("unode"))(materializeKeyed(
       FlowAnalytics.asFlows(spark, dir)
         .select(concat(lit("u:"), $"user_id").as("unode"), $"da").distinct()
         .repartition($"unode")))
-    val labels = stagedGraph(spark, dir, "lpa_labels", Seq("node")) {
+    val labels = stagedGraph(spark, dir, "lpa_labels", Serve.Keyed("node")) {
       // the da-keyed vote copy derives from the staged unode-keyed
       // one — edge-sized re-key, one flow-corpus scan total
-      val ueD = stagedGraph(spark, dir, "bip_ue_d", Seq("da"))(
-        stage(ueU.repartition($"da")))
+      val ueD = stagedGraph(spark, dir, "bip_ue_d", Serve.Keyed("da"))(
+        materializeKeyed(ueU.repartition($"da")))
       var usr = ueU.select($"unode".as("node")).distinct()
         .select($"node", $"node".as("lbl"))
       var svc = ueD.select($"da".as("node")).distinct()
@@ -616,12 +595,12 @@ object GraphOps {
       for (i <- 1 to LpaIters) {
         val svcNext =
           vote(ueU.join(usr, $"unode" === $"node").select($"da".as("tgt"), $"lbl"))
-        svc = if (i == LpaIters) stage(svcNext) else svcNext
+        svc = if (i == LpaIters) materializeKeyed(svcNext) else svcNext
         val usrNext = vote(
           ueD.join(svc, $"da" === $"node").select($"unode".as("tgt"), $"lbl"))
-        usr = if (i < LpaIters) stage(usrNext) else usrNext
+        usr = if (i < LpaIters) materializeKeyed(usrNext) else usrNext
       }
-      stage(usr.unionAll(svc).repartition($"node"))
+      materializeKeyed(usr.unionAll(svc).repartition($"node"))
     }
     (ueU, labels)
   }
@@ -807,8 +786,8 @@ object GraphOps {
   }
 
   private[graft] def orientedTriangles(edges: DataFrame): (DataFrame, DataFrame) = {
-    val deg = materialize(degOf(edges))
-    val oriented = materialize(orientOf(edges, deg))
+    val deg = materializeKeyed(degOf(edges))
+    val oriented = materializeKeyed(orientOf(edges, deg))
     (deg, wedgeTriangles(oriented))
   }
 
@@ -825,10 +804,10 @@ object GraphOps {
   private[graft] def orientedTrianglesStaged(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val deg = stagedGraph(spark, dir, "coorder_deg", Seq("node"))(
-      materialize(degOf(coOrderEdgesStaged(spark, dir))))
-    val oriented = stagedGraph(spark, dir, "coorder_oriented", Seq("s"))(
-      materialize(
+    val deg = stagedGraph(spark, dir, "coorder_deg", Serve.Keyed("node"))(
+      materializeKeyed(degOf(coOrderEdgesStaged(spark, dir))))
+    val oriented = stagedGraph(spark, dir, "coorder_oriented", Serve.Keyed("s"))(
+      materializeKeyed(
         orientOf(coOrderEdgesStaged(spark, dir), deg).repartition($"s")))
     (deg, wedgeTriangles(oriented))
   }
@@ -891,7 +870,8 @@ object GraphOps {
     * three times.
     */
   private[graft] def coOrderEdgesStaged(spark: SparkSession, dir: String): DataFrame =
-    stagedGraph(spark, dir, "coorder_edges")(materialize(coOrderEdges(spark, dir)))
+    stagedGraph(spark, dir, "coorder_edges", Serve.Distributed)(
+      materializeKeyed(coOrderEdges(spark, dir)))
 
   /** The SYMMETRIC adjacency view of [[coOrderEdgesStaged]], staged
     * hash-partitioned on `u`: B25's wedge aggregation self-joins this
@@ -903,10 +883,10 @@ object GraphOps {
     * walk here already uses).
     */
   private[graft] def coOrderAdjStaged(spark: SparkSession, dir: String): DataFrame =
-    stagedGraph(spark, dir, "coorder_adj", Seq("u")) {
+    stagedGraph(spark, dir, "coorder_adj", Serve.Keyed("u")) {
       import spark.implicits._
       val edges = coOrderEdgesStaged(spark, dir)
-      materialize(
+      materializeKeyed(
         edges.unionAll(edges.select($"v".as("u"), $"u".as("v")))
           .repartition($"u"))
     }
@@ -938,7 +918,7 @@ object GraphOps {
     * absent → 0).
     */
   private[graft] def coOrderSupportStaged(spark: SparkSession, dir: String): DataFrame =
-    stagedGraph(spark, dir, "coorder_support", Seq("u")) {
+    stagedGraph(spark, dir, "coorder_support", Serve.Keyed("u")) {
       import spark.implicits._
       val edges = coOrderEdgesStaged(spark, dir)
       val (_, tri) = orientedTrianglesStaged(spark, dir)
@@ -949,7 +929,7 @@ object GraphOps {
           .as("e"))
         .select($"e.u".as("u"), $"e.v".as("v"))
         .groupBy($"u", $"v").agg(count(lit(1)).as("support"))
-      materialize(edges.join(sup, Seq("u", "v"), "left")
+      materializeKeyed(edges.join(sup, Seq("u", "v"), "left")
         .select($"u", $"v", coalesce($"support", lit(0L)).as("support")))
     }
 
@@ -976,7 +956,7 @@ object GraphOps {
 
   def ktruss(edges0: DataFrame): DataFrame = {
     import edges0.sparkSession.implicits._
-    var remaining = materialize(edges0.select($"u", $"v"))
+    var remaining = materializeKeyed(edges0.select($"u", $"v"))
     var out: Option[DataFrame] = None
     var k = 3
     var rounds = 0
@@ -996,10 +976,10 @@ object GraphOps {
             .as("e"))
           .select($"e.u".as("u"), $"e.v".as("v"))
           .groupBy($"u", $"v").agg(count(lit(1)).as("support"))
-        val scored = materialize(remaining.join(sup, Seq("u", "v"), "left")
+        val scored = materializeKeyed(remaining.join(sup, Seq("u", "v"), "left")
           .select($"u", $"v",
             coalesce($"support", lit(0L)).as("support")))
-        val keep = materialize(
+        val keep = materializeKeyed(
           scored.where($"support" >= k - 2).select($"u", $"v"))
         val dropped = scored.where($"support" < k - 2)
           .select($"u", $"v", lit(k - 1).as("trussness"))
@@ -1064,7 +1044,7 @@ object GraphOps {
       maxRounds: Int = Ktruss4MaxRounds): DataFrame = {
     import edges0.sparkSession.implicits._
     // round 1: the one full support rollup
-    val e0 = materialize(edges0.select($"u", $"v"))
+    val e0 = materializeKeyed(edges0.select($"u", $"v"))
     val (_, tri0) = orientedTriangles(
       org.apache.spark.sql.graftbridge.Bridge.freshStatsLeaf(e0))
     val sup0 = tri0.select(explode(array(
@@ -1074,7 +1054,7 @@ object GraphOps {
         .as("e"))
       .select($"e.u".as("u"), $"e.v".as("v"))
       .groupBy($"u", $"v").agg(count(lit(1)).as("support"))
-    val sf = materialize(e0.join(sup0, Seq("u", "v"), "left")
+    val sf = materializeKeyed(e0.join(sup0, Seq("u", "v"), "left")
       .select($"u", $"v", coalesce($"support", lit(0L)).as("support")))
     release(e0)
     ktruss4Peel(sf, maxRounds)
@@ -1088,7 +1068,7 @@ object GraphOps {
     */
   private[graft] def ktruss4FromSupport(support0: DataFrame,
       maxRounds: Int = Ktruss4MaxRounds): DataFrame =
-    ktruss4Peel(materialize(support0.select("u", "v", "support")), maxRounds)
+    ktruss4Peel(materializeKeyed(support0.select("u", "v", "support")), maxRounds)
 
   /** The peel rounds over `scored0`, the materialized round-1 support
     * table, which the loop owns and releases.
@@ -1137,7 +1117,7 @@ object GraphOps {
             struct($"t"(1).as("u"), $"t"(2).as("v")))).as("e"))
           .select($"e.u".as("u"), $"e.v".as("v"))
           .groupBy($"u", $"v").agg(count(lit(1)).as("destroyed"))
-        val next = materialize(
+        val next = materializeKeyed(
           scored.where($"support" >= Ktruss4K - 2)
             .join(broadcast(dec), Seq("u", "v"), "left")
             .select($"u", $"v",
@@ -1160,8 +1140,8 @@ object GraphOps {
     // starts from the staged per-edge support table — B61's published
     // round-0 recount — instead of re-rolling the oriented-triangle
     // support (the peel's single most expensive pass).
-    val truss = stagedGraph(spark, dir, "ktruss4_truss") {
-      materialize(ktruss4FromSupport(coOrderSupportStaged(spark, dir)))
+    val truss = stagedGraph(spark, dir, "ktruss4_truss", Serve.Distributed) {
+      materializeKeyed(ktruss4FromSupport(coOrderSupportStaged(spark, dir)))
     }
     truss.orderBy($"support".desc, $"u", $"v").limit(Ktruss4TopN)
   }
@@ -1374,7 +1354,7 @@ object GraphOps {
   def reciprocity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val flows = FlowAnalytics.asFlows(spark, dir)
-    val e = stagedGraph(spark, dir, "site_edges")(stage(
+    val e = stagedGraph(spark, dir, "site_edges", Serve.Distributed)(materializeKeyed(
       flows.select(pmod($"user_id", lit(64)).as("s"), pmod($"k", lit(64)).as("d"))
         .where($"s" =!= $"d").distinct()))
     val recip = e.as("a")

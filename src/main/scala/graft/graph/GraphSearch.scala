@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.flow.FlowAnalytics
+import graft.Staging.{materializeKeyed, release, Serve}
 
 /** B23–B25: graph traversal + structure queries that complete the
   * graph family — multi-source BFS (reachability/hop radius), k-core
@@ -18,37 +19,6 @@ import graft.flow.FlowAnalytics
   */
 object GraphSearch {
 
-  // Checkpoint with AQE off so the staged leaf keeps its hash
-  // partitioning (see Staging.preservePartitioning) — the peel /
-  // frontier loops re-join staged state on its own key every round.
-  private def materialize(df: DataFrame): DataFrame =
-    graft.Staging.preservePartitioning(df.sparkSession) {
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    }
-
-  private def backingRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.optimizedPlan.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-
-  /** Free a superseded peel/frontier round (same policy as the dedup
-    * pipelines: cached blocks and, on the reliable-checkpoint path,
-    * the durable files — Spark's cleaner only removes those behind a
-    * non-default flag).
-    */
-  private def release(dfs: DataFrame*): Unit =
-    dfs.foreach { df =>
-      backingRdd(df).foreach { rdd =>
-        rdd.unpersist(blocking = true)
-        rdd.getCheckpointFile.foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-            .delete(p, true)
-        }
-      }
-    }
-
   /** The undirected user↔service contact graph's base tables, staged
     * per (session, dir) + lake exactly like GraphOps' edge tables: in
     * production the graph is BUILT once per corpus snapshot and
@@ -60,11 +30,11 @@ object GraphSearch {
   private val sessionStage = new graft.Staging.SessionCache()
 
   private def contactEdges(spark: SparkSession, dir: String): DataFrame =
-    sessionStage.getOrBuild(spark, dir, "search_ue_edges", Seq("src")) {
+    sessionStage.getOrBuild(spark, dir, "search_ue_edges", Serve.Keyed("src")) {
       import spark.implicits._
       val ue = FlowAnalytics.asFlows(spark, dir)
         .select(concat(lit("u:"), $"user_id").as("src"), $"da".as("dst"))
-      materialize(ue.union(ue.select($"dst".as("src"), $"src".as("dst")))
+      materializeKeyed(ue.union(ue.select($"dst".as("src"), $"src".as("dst")))
         .distinct().repartition($"src"))
     }
 
@@ -72,9 +42,9 @@ object GraphSearch {
     * appears as src).
     */
   private def contactDeg(spark: SparkSession, dir: String): DataFrame =
-    sessionStage.getOrBuild(spark, dir, "search_ue_deg", Seq("node")) {
+    sessionStage.getOrBuild(spark, dir, "search_ue_deg", Serve.Keyed("node")) {
       import spark.implicits._
-      materialize(contactEdges(spark, dir)
+      materializeKeyed(contactEdges(spark, dir)
         .groupBy($"src".as("node")).agg(count(lit(1)).as("deg")))
     }
 
@@ -121,8 +91,8 @@ object GraphSearch {
     // the hop histogram is a converged per-snapshot measurement
     // (deterministic top-degree seeds) — staged session+lake like the
     // centrality tables; re-sorted on read
-    val hist = sessionStage.getOrBuild(spark, dir, "bfs_hops_hist") {
-      materialize(bfsHopsOf(spark, dir))
+    val hist = sessionStage.getOrBuild(spark, dir, "bfs_hops_hist", Serve.Distributed) {
+      materializeKeyed(bfsHopsOf(spark, dir))
     }
     hist.orderBy($"hops")
   }
@@ -133,7 +103,7 @@ object GraphSearch {
     val eSrc = contactEdges(spark, dir)
     val deg = contactDeg(spark, dir)
     val seeds = deg.orderBy($"deg".desc, $"node").limit(BfsSeeds)
-    var frontier = materialize(seeds.select($"node", lit(0).as("hop")))
+    var frontier = materializeKeyed(seeds.select($"node", lit(0).as("hop")))
     val layers = ArrayBuffer(frontier)
     var hop = 0
     var done = frontier.count() == 0L
@@ -144,7 +114,7 @@ object GraphSearch {
           s"bfsHops frontier still live after $BfsHopCap hops — raise the cap " +
             "(the oracle recursion bound must move with it)")
       val seen = layers.map(_.select($"node")).reduce(_ unionAll _)
-      val next = materialize(
+      val next = materializeKeyed(
         eSrc.join(frontier.select($"node".as("src")), "src")
           .select($"dst".as("node")).distinct()
           .join(seen, Seq("node"), "left_anti")
@@ -212,7 +182,7 @@ object GraphSearch {
   private def seededBfs(eSrc: DataFrame, seeds: DataFrame,
       what: String): DataFrame = {
     import eSrc.sparkSession.implicits._
-    var frontier = materialize(seeds.select($"seed", $"seed".as("node"), lit(0).as("hop")))
+    var frontier = materializeKeyed(seeds.select($"seed", $"seed".as("node"), lit(0).as("hop")))
     val layers = ArrayBuffer(frontier)
     var hop = 0
     var done = frontier.count() == 0L
@@ -223,7 +193,7 @@ object GraphSearch {
           s"$what frontier still live after $BfsHopCap hops — raise the cap " +
             "(the oracle recursion bound must move with it)")
       val seen = layers.map(_.select($"seed", $"node")).reduce(_ unionAll _)
-      val next = materialize(
+      val next = materializeKeyed(
         eSrc.join(frontier.select($"seed", $"node".as("src")), "src")
           .select($"seed", $"dst".as("node")).distinct()
           .join(seen, Seq("seed", "node"), "left_anti")
@@ -240,13 +210,13 @@ object GraphSearch {
     // seeds) — staged session+lake like the sampled-closeness /
     // betweenness / BFS-histogram tables; re-sorted on read because a
     // lake round-trip drops ordering
-    val scores = sessionStage.getOrBuild(spark, dir, "closeness_seeded") {
+    val scores = sessionStage.getOrBuild(spark, dir, "closeness_seeded", Serve.Distributed) {
       val eSrc = contactEdges(spark, dir)
       val seeds = contactDeg(spark, dir)
         .orderBy($"deg".desc, $"node").limit(BfsSeeds)
         .select($"node".as("seed"))
       val reached = seededBfs(eSrc, seeds, "closeness").select($"seed", $"hop")
-      materialize(reached.where($"hop" > 0)
+      materializeKeyed(reached.where($"hop" > 0)
         .groupBy($"seed", $"hop").agg(count(lit(1)).as("nd"))
         .groupBy($"seed")
         .agg(sum($"nd").as("n_reached"),
@@ -325,13 +295,13 @@ object GraphSearch {
     // converged per-snapshot measurement (md5-deterministic seeds) —
     // staged session+lake like the betweenness table; output re-sorts
     // because a lake round-trip drops ordering
-    val scores = sessionStage.getOrBuild(spark, dir, "closeness_scores") {
+    val scores = sessionStage.getOrBuild(spark, dir, "closeness_scores", Serve.Distributed) {
       val eSrc = contactEdges(spark, dir)
       val hub = contactDeg(spark, dir).orderBy($"deg".desc, $"node").limit(1)
         .select($"node".as("seed"))
       // the giant component is corpus-snapshot material like the edges
-      val comp = sessionStage.getOrBuild(spark, dir, "search_ue_comp", Seq("node")) {
-        materialize(
+      val comp = sessionStage.getOrBuild(spark, dir, "search_ue_comp", Serve.Keyed("node")) {
+        materializeKeyed(
           seededBfs(eSrc, hub, "closenessSampled-component").select($"node")
             .repartition($"node"))
       }
@@ -339,7 +309,7 @@ object GraphSearch {
       val seeds = comp.orderBy(md5($"node"), $"node").limit(CloseSampleSeeds)
         .select($"node".as("seed"))
       val kD = lit(CloseSampleSeeds.toDouble)
-      materialize(seededBfs(eSrc, seeds, "closenessSampled")
+      materializeKeyed(seededBfs(eSrc, seeds, "closenessSampled")
         .groupBy($"node")
         .agg(count(lit(1)).as("n_seen"), sum($"hop").as("sum_dist"))
         .where($"n_seen" === CloseSampleSeeds)
@@ -437,7 +407,7 @@ object GraphSearch {
   private def sigmaBfs(eSrc: DataFrame, seeds: DataFrame,
       maxHop: Int, what: String): ArrayBuffer[DataFrame] = {
     import eSrc.sparkSession.implicits._
-    var frontier = materialize(
+    var frontier = materializeKeyed(
       seeds.select($"seed", $"seed".as("node"), lit(1L).as("sigma")))
     val layers = ArrayBuffer(frontier)
     var hop = 0
@@ -449,7 +419,7 @@ object GraphSearch {
           s"$what frontier still live after $maxHop hops — raise the cap " +
             "(the oracle unroll must move with it)")
       val seen = layers.map(_.select($"seed", $"node")).reduce(_ unionAll _)
-      val next = materialize(
+      val next = materializeKeyed(
         eSrc.join(frontier.select($"seed", $"node".as("src"), $"sigma"), "src")
           .select($"seed", $"dst".as("node"), $"sigma")
           .join(seen, Seq("seed", "node"), "left_anti")
@@ -484,7 +454,7 @@ object GraphSearch {
     }
     // phase 2: δ per layer in q9 longs, deepest first (no successors)
     val deltas = new Array[DataFrame](top + 1)
-    deltas(top) = materialize(
+    deltas(top) = materializeKeyed(
       layers(top).select($"seed", $"node", lit(0L).as("dq")))
     for (h <- (top - 1) to 1 by -1) {
       val lw = layers(h + 1)
@@ -501,7 +471,7 @@ object GraphSearch {
             * (lit(1.0e9) + $"dq_w".cast("double")) + lit(0.5))
             .cast("long").as("t"))
         .groupBy($"seed", $"node").agg(sum($"t").as("dq"))
-      deltas(h) = materialize(
+      deltas(h) = materializeKeyed(
         layers(h).select($"seed", $"node")
           .join(dep, Seq("seed", "node"), "left")
           .select($"seed", $"node", coalesce($"dq", lit(0L)).as("dq")))
@@ -521,19 +491,19 @@ object GraphSearch {
     // measurement (seeds are md5-deterministic): staged session+lake
     // like the rank vectors; the output re-sorts because a lake
     // round-trip drops ordering
-    val scores = sessionStage.getOrBuild(spark, dir, "btw_scores") {
+    val scores = sessionStage.getOrBuild(spark, dir, "btw_scores", Serve.Distributed) {
       val eSrc = contactEdges(spark, dir)
       val hub = contactDeg(spark, dir).orderBy($"deg".desc, $"node").limit(1)
         .select($"node".as("seed"))
-      val comp = sessionStage.getOrBuild(spark, dir, "search_ue_comp", Seq("node")) {
-        materialize(
+      val comp = sessionStage.getOrBuild(spark, dir, "search_ue_comp", Serve.Keyed("node")) {
+        materializeKeyed(
           seededBfs(eSrc, hub, "betweenness-component").select($"node")
             .repartition($"node"))
       }
       val nFrame = comp.agg(count(lit(1)).as("n"))
       val seeds = comp.orderBy(md5($"node"), $"node").limit(BtwSeeds)
         .select($"node".as("seed"))
-      materialize(betweennessOf(eSrc, seeds, nFrame, BtwSeeds))
+      materializeKeyed(betweennessOf(eSrc, seeds, nFrame, BtwSeeds))
     }
     scores.orderBy($"bc_q".desc, $"node")
   }
@@ -640,7 +610,7 @@ object GraphSearch {
     */
   private[graft] def kcoreOf(edges0: DataFrame, k: Int = KcoreK): DataFrame = {
     import edges0.sparkSession.implicits._
-    var edges = materialize(edges0)
+    var edges = materializeKeyed(edges0)
     // carried across rounds: next ⊆ edges, so comparing next's count
     // to the PREVIOUS round's (already-paid) count is the same
     // fixed-point test without re-counting the current edge set —
@@ -659,7 +629,7 @@ object GraphSearch {
       val deg = edges.select($"u".as("node")).unionAll(edges.select($"v".as("node")))
         .groupBy($"node").agg(count(lit(1)).as("deg"))
       val keep = deg.where($"deg" >= k).select($"node")
-      val next = materialize(
+      val next = materializeKeyed(
         edges
           .join(keep.select($"node".as("u")), Seq("u"), "left_semi")
           .join(keep.select($"node".as("v")), Seq("v"), "left_semi")
@@ -820,8 +790,8 @@ object GraphSearch {
     // the min-plus distance histogram is a converged per-snapshot
     // measurement (deterministic top-degree seeds) — staged
     // session+lake like the BFS hop histogram; re-sorted on read
-    val hist = sessionStage.getOrBuild(spark, dir, "sssp_hist") {
-      materialize(ssspOf(spark, dir))
+    val hist = sessionStage.getOrBuild(spark, dir, "sssp_hist", Serve.Distributed) {
+      materializeKeyed(ssspOf(spark, dir))
     }
     hist.orderBy($"dist")
   }
@@ -831,14 +801,14 @@ object GraphSearch {
     import graft.functions.StrFuncs.md5_prefix
     // weights derive map-only from the staged contact edges (the
     // partitioning survives withColumn), staged as their own artifact
-    val wEdges = sessionStage.getOrBuild(spark, dir, "search_ue_wedges", Seq("src")) {
-      materialize(contactEdges(spark, dir)
+    val wEdges = sessionStage.getOrBuild(spark, dir, "search_ue_wedges", Serve.Keyed("src")) {
+      materializeKeyed(contactEdges(spark, dir)
         .withColumn("w",
           md5_prefix(concat($"src", lit(">"), $"dst"), 7) % 4 + 1))
     }
     val seeds = contactDeg(spark, dir)
       .orderBy($"deg".desc, $"node").limit(SsspSeeds)
-    var dist = materialize(seeds.select($"node", lit(0L).as("dist")))
+    var dist = materializeKeyed(seeds.select($"node", lit(0L).as("dist")))
     var frontier = dist
     var round = 0
     var done = false
@@ -851,13 +821,13 @@ object GraphSearch {
       val cand = wEdges
         .join(frontier.select($"node".as("src"), $"dist".as("fd")), "src")
         .groupBy($"dst".as("node")).agg(min($"fd" + $"w").as("nd"))
-      val improved = materialize(
+      val improved = materializeKeyed(
         cand.join(dist.select($"node", $"dist".as("od")), Seq("node"), "left")
           .where($"od".isNull || $"nd" < $"od")
           .select($"node", $"nd".as("dist")))
       if (improved.count() == 0L) { release(improved); done = true }
       else {
-        val next = materialize(
+        val next = materializeKeyed(
           dist.join(improved.select($"node"), Seq("node"), "left_anti")
             .unionByName(improved))
         if (frontier ne dist) release(frontier)

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Staging.{materialize, Serve}
 import graft.Tables.load
 
 /** Text-analysis operators for training-data curation (SURVEY §2
@@ -185,18 +186,18 @@ object TextAnalytics {
           .as("b"))
   }
 
-  private def clfWeights(spark: SparkSession, dir: String): DataFrame =
-    modelStage.getOrBuild(spark, dir, "qclf_weights") {
+  private[graft] def clfWeights(spark: SparkSession, dir: String): DataFrame =
+    modelStage.getOrBuild(spark, dir, "qclf_weights", Serve.Local) {
       import spark.implicits._
       val counts = clfFeatures(spark, dir).groupBy($"b").agg(
         count(when($"label", 1)).as("n_pos"),
         count(when(!$"label", 1)).as("n_neg"))
       val tots = counts.agg(sum($"n_pos").as("pos_tot"), sum($"n_neg").as("neg_tot"))
-      counts.crossJoin(broadcast(tots))
+      // ≤128 rows — the persisted model table
+      materialize(counts.crossJoin(broadcast(tots))
         .select($"b",
           (round(log(($"n_pos" + 1).cast("double") / ($"pos_tot" + ClfBuckets)), 9) -
-           round(log(($"n_neg" + 1).cast("double") / ($"neg_tot" + ClfBuckets)), 9)).as("w"))
-        .localCheckpoint() // ≤128 rows — the persisted model table
+           round(log(($"n_neg" + 1).cast("double") / ($"neg_tot" + ClfBuckets)), 9)).as("w")))
     }
 
   def qualityClf(spark: SparkSession, dir: String): DataFrame = {
@@ -1364,10 +1365,7 @@ object TextAnalytics {
     */
   private def bpeTrain(spark: SparkSession, dir: String): (Seq[DataFrame], DataFrame) = {
     import spark.implicits._
-    def mat(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    var words = mat(load(spark, dir, "documents")
+    var words = materialize(load(spark, dir, "documents")
       .select(explode(split($"text", " ")).as("w"))
       .where($"w" =!= "")
       .groupBy($"w").agg(count(lit(1)).as("cnt"))
@@ -1380,7 +1378,7 @@ object TextAnalytics {
           slice($"syms", lit(2), size($"syms") - 1))).as("pr"))
         .select($"pr".getField("0").as("a"), $"pr".getField("1").as("b"), $"cnt")
         .groupBy($"a", $"b").agg(sum($"cnt").as("freq"))
-      val best = mat(pairs.orderBy($"freq".desc, $"a", $"b").limit(1))
+      val best = materialize(pairs.orderBy($"freq".desc, $"a", $"b").limit(1))
       merges += best.select(lit(r).cast("long").as("round"), $"a", $"b",
         concat($"a", $"b").as("merged"), $"freq")
       val folded = words.crossJoin(broadcast(best.select($"a", $"b")))
@@ -1388,7 +1386,7 @@ object TextAnalytics {
         .select($"w", $"cnt", $"syms")
       // the last fold stays lazy: bpeMerges drops it unexecuted,
       // bpeTokenize pipelines it into the token aggregation
-      words = if (r < BpeRounds) mat(folded) else folded
+      words = if (r < BpeRounds) materialize(folded) else folded
     }
     (merges.result(), words)
   }

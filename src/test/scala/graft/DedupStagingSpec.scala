@@ -86,9 +86,9 @@ class DedupStagingSpec extends SparkSpecBase {
     // threads one shared instance per key, dependencies included
     val cache = new graft.Staging.SessionCache()
     val dir = tmpDir("graft_cache_race")
-    def inner = cache.getOrBuild(spark, dir, "inner")(
+    def inner = cache.getOrBuild(spark, dir, "inner", graft.Staging.Serve.Distributed)(
       spark.range(100).toDF("v").localCheckpoint())
-    def outer = cache.getOrBuild(spark, dir, "outer") {
+    def outer = cache.getOrBuild(spark, dir, "outer", graft.Staging.Serve.Distributed) {
       inner.select((col("v") * 2).as("v")).localCheckpoint()
     }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
@@ -100,7 +100,8 @@ class DedupStagingSpec extends SparkSpecBase {
       val results = futs.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
       // every caller converges on ONE staged instance
       assert(results.forall(_ eq results.head))
-      assert(cache.getOrBuild(spark, dir, "inner")(fail("must be cached")) eq inner)
+      assert(cache.getOrBuild(spark, dir, "inner", graft.Staging.Serve.Distributed)(
+        fail("must be cached")) eq inner)
       assert(results.head.agg(sum(col("v"))).head.getLong(0) === 9900)
     } finally pool.shutdownNow()
   }

@@ -322,7 +322,7 @@ class PlanAuditSpec extends SparkSpecBase {
     // Staged LogicalRDD leaves must carry hashpartitioning — an
     // UnknownPartitioning leaf costs one avoidable node-table Exchange
     // per round (the reason staging checkpoints run with AQE off; see
-    // Staging.preservePartitioning).
+    // Staging.materializeKeyed).
     for ((name, df) <- Seq(
         "flow_pagerank" -> graft.graph.GraphOps.flowPagerank(spark, sf0001TwoFile),
         "flow_hits" -> graft.graph.GraphOps.flowHits(spark, sf0001TwoFile))) {

@@ -51,6 +51,15 @@ class PlanSnapshotSpec extends SparkSpecBase {
       "stream_lpm6_enrich", "stream_ann_route", "stream_rate_limit")
   private val regen = sys.env.contains("GRAFT_REGEN_PLANS")
 
+  /** Where a drifted plan is written, next to its golden one. Emptied
+    * once at suite start, so it holds only this run's drifts.
+    */
+  private val driftDir = Paths.get("target", "plan-drift")
+  if (Files.exists(driftDir))
+    scala.util.Using.resource(Files.walk(driftDir))(
+      _.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.delete(p)))
+
   /** Strip run-varying tokens: expression ids, rdd ids, file paths,
     * in-memory index object hashes. Operator numbering and tree shape
     * stay — that IS the snapshot.
@@ -104,7 +113,7 @@ class PlanSnapshotSpec extends SparkSpecBase {
       Some(s"$name: missing snapshot — regenerate with GRAFT_REGEN_PLANS=1")
     } else if (Files.readString(f) != plan) {
       // leave the observed plan next to the golden one for diffing
-      val got = Paths.get("target", "plan-drift", s"$name.txt")
+      val got = driftDir.resolve(s"$name.txt")
       Files.createDirectories(got.getParent)
       Files.writeString(got, plan)
       Some(s"$name: plan drift (observed plan written to $got)")
