@@ -1,5 +1,6 @@
 package graft.flow
 
+import scala.concurrent.duration._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.sinks.PartitionedParquetSink
@@ -16,7 +17,21 @@ import graft.sinks.PartitionedParquetSink
   */
 object FlowPipeline {
 
-  /** Continuous watch: processes files as they land in `watchDir`. */
+  /** The service's processing-time trigger interval. A file waits for
+    * the next trigger, so this bounds file-to-queryable latency from
+    * below. Every trigger, idle or not, lists the whole watched dir.
+    */
+  val DefaultTrigger: FiniteDuration = 1.second
+
+  /** AvailableNow for a catch-up run (drain what has landed, then
+    * stop), the processing-time trigger otherwise.
+    */
+  private def trigger(availableNowCatchup: Boolean): Trigger =
+    if (availableNowCatchup) Trigger.AvailableNow() else Trigger.ProcessingTime(DefaultTrigger)
+
+  /** Continuous watch: processes files as they land in `watchDir`, one
+    * micro-batch per [[DefaultTrigger]] (1 s) while files arrive.
+    */
   def start(
       spark: SparkSession,
       watchDir: String,
@@ -33,9 +48,7 @@ object FlowPipeline {
       .partitionBy("date")
       .format("parquet")
       .option("path", outDir)
-    (if (availableNowCatchup) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime("5 seconds")))
-      .start()
+    writer.trigger(trigger(availableNowCatchup)).start()
   }
 
   /** One-shot batch catch-up over a directory of already-landed files
@@ -67,8 +80,6 @@ object FlowPipeline {
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         graft.sinks.JdbcBatchSink.write(batch, table, connect, batchSize)
       }
-    (if (availableNowCatchup) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime("5 seconds")))
-      .start()
+    writer.trigger(trigger(availableNowCatchup)).start()
   }
 }

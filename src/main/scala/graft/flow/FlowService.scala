@@ -19,6 +19,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * }}}
   * Each watcher becomes one checkpointed streaming query; `startAll`
   * returns them for lifecycle management (the systemd analog).
+  * Every watcher runs on [[FlowPipeline.DefaultTrigger]].
   */
 object FlowService {
 

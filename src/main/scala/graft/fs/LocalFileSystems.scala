@@ -1,9 +1,11 @@
 package graft.fs
 
+import java.io.{File, IOException}
 import java.net.URI
-import java.nio.file.Files
+import java.nio.file.{Files, NoSuchFileException}
+import java.nio.file.attribute.{BasicFileAttributes, PosixFileAttributes}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FileUtil, FsConstants,
   FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
@@ -15,8 +17,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   * parquet part, its `.crc`, each checkpoint temp file — and
   * `readlink` for every `getFileLinkStatus`, which `FileContext`
   * renames (the streaming checkpoint and file-sink logs) call several
-  * times each. Everything else — checksums, atomic renames, the file
-  * bytes, the mode bits left on disk — is the stock implementation.
+  * times each. A directory listing reads each child with one `stat`.
+  * Everything else — checksums, atomic renames, the file bytes, the
+  * mode bits left on disk — is the stock implementation.
   *
   * [[graft.Graft.builder]] wires [[GraftLocalFileSystem]] as `fs.file.impl`
   * (the `FileSystem` API: parquet sinks, backfill, lake publish) and
@@ -42,6 +45,59 @@ class GraftRawLocalFileSystem extends RawLocalFileSystem {
   override def getFileLinkStatus(f: Path): FileStatus =
     if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
     else getFileStatus(f)
+
+  /** The stock listing builds each child's status from four `File`
+    * `stat`s and an access-time read and parses its path five times:
+    * about 15 µs a child, which a file stream pays on every trigger
+    * for every file its watched dir keeps. This reads each child's
+    * attributes once. A child whose `stat` fails is skipped, as the
+    * stock listing skips one that `exists()` denies; a path that is not
+    * a directory gets the stock listing. */
+  override def listStatus(f: Path): Array[FileStatus] = {
+    val dir = pathToFile(f)
+    if (!dir.isDirectory) return super.listStatus(f)
+    val blockSize = getDefaultBlockSize(f)
+    FileUtil.list(dir).flatMap { name =>
+      val child = new File(dir, name)
+      try {
+        val a = Files.readAttributes(child.toPath, classOf[BasicFileAttributes])
+        Some(new LocalFileStatus(a.size, a.isDirectory, blockSize, a.lastModifiedTime.toMillis,
+          a.lastAccessTime.toMillis, new Path(child.getPath).makeQualified(getUri, getWorkingDirectory)))
+      } catch { case _: IOException => None }
+    }
+  }
+}
+
+/** A listed child's status. Like the stock one, it reads permission,
+  * owner and group on first use, through a symlink, and keeps the
+  * permission bits and the sticky bit; the stock one forks `ls` for
+  * them. */
+private final class LocalFileStatus(len: Long, isDir: Boolean, blockSize: Long,
+    modified: Long, accessed: Long, path: Path)
+    extends FileStatus(len, isDir, 1, blockSize, modified, accessed, null, null, null, path) {
+
+  private var loaded = false
+
+  private def load(): Unit = synchronized {
+    if (!loaded) {
+      val file = new File(getPath.toUri.getPath).toPath
+      try {
+        val a = Files.readAttributes(file, classOf[PosixFileAttributes])
+        val mode = Files.getAttribute(file, "unix:mode").asInstanceOf[Int]
+        setPermission(new FsPermission((mode & 0x3FF).toShort)) // 01777
+        setOwner(a.owner.getName)
+        setGroup(a.group.getName)
+      } catch {
+        case _: NoSuchFileException => // gone since listed: the defaults, as the stock one keeps
+        case e: IOException => throw new java.io.UncheckedIOException(e)
+      }
+      loaded = true
+    }
+  }
+
+  override def getPermission: FsPermission = { load(); super.getPermission }
+  override def getOwner: String = { load(); super.getOwner }
+  override def getGroup: String = { load(); super.getGroup }
 }
 
 /** `fs.file.impl`: the checksummed `FileSystem` over

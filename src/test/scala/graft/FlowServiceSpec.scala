@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.graftbridge.SparkInternals
+import org.apache.spark.sql.streaming.Trigger
 import graft.flow.{FlowPipeline, FlowSchema, FlowService}
 
 /** Config-driven service + streaming JDBC load (reference's full
@@ -34,6 +36,7 @@ class FlowServiceSpec extends SparkSpecBase {
         |[router-a]
         |dir = /spool/a
         |flowsrc = site-a
+        |recursive = true
         |""".stripMargin)
     assert(cfg.outDir === "/w/nflows")
     assert(cfg.watchers.map(w => (w.name, w.dir, w.flowsrc)) === Seq(
@@ -41,6 +44,34 @@ class FlowServiceSpec extends SparkSpecBase {
       ("router-b", "/spool/b", "router-b")))
     intercept[IllegalArgumentException](FlowService.fromIni("[main]\nout_dir=x\nckpt_dir=y"))
     intercept[IllegalArgumentException](FlowService.fromIni("[w]\ndir=/d"))
+  }
+
+  test("a watcher on the processing-time trigger ingests a file landed after start") {
+    val watch = tmpDir("pwatch"); val out = tmpDir("pout"); val ckpt = tmpDir("pckpt")
+    val cfg = FlowService.fromIni(
+      s"""[main]
+         |out_dir = $out
+         |ckpt_dir = $ckpt
+         |[p]
+         |dir = $watch
+         |""".stripMargin)
+    val Seq(q) = FlowService.startAll(spark, cfg)
+    try {
+      assert(SparkInternals.trigger(q) === Trigger.ProcessingTime(FlowPipeline.DefaultTrigger))
+      // the file source must never see a half-written file
+      val staged = tmpDir("pstage")
+      flowFile(staged, "nfcapd.1.csv", "2024-05-01 10:00:00", "192.168.0.9")
+      Files.move(Paths.get(staged, "nfcapd.1.csv"), Paths.get(watch, "nfcapd.1.csv"),
+        StandardCopyOption.ATOMIC_MOVE)
+      // a trigger that listed the dir before the move can end the first
+      // wait with no new data; every trigger after it sees the file
+      q.processAllAvailable()
+      q.processAllAvailable()
+      val got = spark.read.parquet(s"$out/p")
+      assert(got.count() === 1)
+      assert(got.select("sa", "flowsrc").head().toSeq === Seq("192.168.0.9", "p"))
+      assert(q.recentProgress.map(_.numInputRows).sum === 1)
+    } finally q.stop()
   }
 
   test("startAll runs one checkpointed pipeline per watcher") {

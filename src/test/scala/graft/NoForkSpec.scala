@@ -86,4 +86,38 @@ class NoForkSpec extends SparkSpecBase {
   test("resolving the events table forks no filesystem helper") {
     assertNoHelperForks(Tables.events(spark, sf0001))
   }
+
+  test("a dir listing gives the stock statuses, permissions read without a fork") {
+    import java.nio.file.attribute.PosixFilePermissions.fromString
+    import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+    val dir = Paths.get(tmpDir("nofork_list"))
+    val file = Files.write(dir.resolve("nfcapd.1 a.csv"), "x,y\n".getBytes)
+    Files.setPosixFilePermissions(file, fromString("rw-r-----"))
+    val sub = Files.createDirectory(dir.resolve("sub"))
+    Files.setAttribute(sub, "unix:mode", Int.box(0x3ED)) // 01755: sticky
+    Files.createSymbolicLink(dir.resolve("link"), file)
+    Files.createSymbolicLink(dir.resolve("dangling"), dir.resolve("gone"))
+    def fs(raw: RawLocalFileSystem) = {
+      raw.initialize(java.net.URI.create("file:///"), spark.sessionState.newHadoopConf()); raw
+    }
+    val (stock, local) = (fs(new RawLocalFileSystem), fs(new graft.fs.GraftRawLocalFileSystem))
+    def fields(s: FileStatus) = (s.getPath, s.getLen, s.isDirectory, s.getReplication,
+      s.getBlockSize, s.getModificationTime, s.getAccessTime, s.isSymlink)
+    def perms(s: FileStatus) = (s.getPath, s.getPermission, s.getOwner, s.getGroup)
+    def list(raw: RawLocalFileSystem, p: java.nio.file.Path) =
+      raw.listStatus(new Path(p.toUri)).sortBy(_.getPath.toString).toSeq
+    var listed = Seq.empty[FileStatus]
+    var listedPerms = Seq.empty[(Path, Any, String, String)]
+    assertNoHelperForks {
+      listed = list(local, dir)
+      listedPerms = listed.map(perms)
+    }
+    assert(listed.map(_.getPath.getName) === Seq("link", "nfcapd.1 a.csv", "sub"))
+    val expected = list(stock, dir)
+    assert(listed.map(fields) === expected.map(fields))
+    assert(listedPerms === expected.map(perms))
+    assert(listedPerms.map(_._2.toString) === Seq("rw-r-----", "rw-r-----", "rwxr-xr-t"))
+    assert(list(local, file).map(fields) === list(stock, file).map(fields))
+    intercept[java.io.FileNotFoundException](list(local, dir.resolve("gone")))
+  }
 }

@@ -16,6 +16,13 @@ object SparkInternals {
       case _ => false
     }, askStorageEndpoints = true)
 
+  /** The trigger a running streaming query was started with. */
+  def trigger(q: org.apache.spark.sql.streaming.StreamingQuery)
+      : org.apache.spark.sql.streaming.Trigger = q match {
+    case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
+      w.streamingQuery.trigger
+  }
+
   /** Wait until every event posted so far reached every listener. */
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
